@@ -9,12 +9,44 @@ import graft.state.BookmarkStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import java.util.UUID
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 
 /** D2 — the per-table control loop (jdbc_incremental.py:564-639):
   * resolve tables → for each: create-or-evolve the target table, run the
   * dataflow (S1→S2→P1→P2→[P3+A1→C4]→S3), stamp job info (C5), first-time
   * grant (G1); after ALL tables, commit bookmarks (D3,
   * jdbc_incremental.py:639).
+  *
+  * Tables run concurrently on a pool of `min(selected tables, driver
+  * cores)` threads; a one-thread pool is the sequential loop. The
+  * reference gets its parallelism only by md5-sharding tables across
+  * separate jobs (D1); inside one job each table's small Spark jobs and
+  * catalog calls are driver round trips that would otherwise leave the
+  * cores idle. Results come back in config order.
+  *
+  * Thread-safety audit of what the tables share:
+  *  - bookmarks: `InMemoryBookmarkStore` (and `FileBookmarkStore`) guard
+  *    every read, stage and commit with `synchronized`; tables stage
+  *    disjoint keys and the one commit runs after the pool has drained;
+  *  - catalog: `InMemoryCatalog` keeps its maps in `TrieMap`s and tables
+  *    touch disjoint keys; `SparkCatalogClient` goes through `spark.sql`
+  *    and `SessionCatalog`, whose external-catalog operations are
+  *    synchronized and whose `CREATE DATABASE IF NOT EXISTS` tolerates a
+  *    concurrent create;
+  *  - Spark: one `SparkSession` accepts jobs from many threads (the
+  *    scheduler interleaves them); `persist`/`unpersist` go through the
+  *    thread-safe `CacheManager`; every table works on its own DataFrames;
+  *  - sources: `readIncremental` builds a fresh DataFrame per call and
+  *    keeps no mutable state.
+  *
+  * Failure is fail-fast: every Spark job of a run carries one job tag. The
+  * first table that throws cancels the tag's jobs, no further table starts,
+  * the pool is joined (jobs a sibling submits after the first cancel are
+  * cancelled while joining), and `run()` rethrows that first exception
+  * unwrapped — with no bookmark committed, so the next run re-reads the
+  * same deltas.
   *
   * Deliberate divergence from the reference (results identical, documented
   * in SURVEY §3.3): the batch is persisted after the mapping stage, so the
@@ -34,30 +66,41 @@ class Driver(
 
   def run(): Seq[TableResult] = {
     val selected = resolveTables()
-    def one(cfg: TableConfig): TableResult = {
-      val t0 = System.currentTimeMillis()
-      val r = runTable(cfg)
-      stampJobInfo(cfg, t0)
-      r
-    }
-    val results =
-      if (config.maxConcurrentTables <= 1 || selected.size <= 1) selected.map(one)
-      else {
-        // D2 at scale: tables are independent pipelines; running them
-        // concurrently overlaps source I/O with shuffle/write (the
-        // reference achieves this with md5-sharded separate processes).
-        // Spark's scheduler interleaves the jobs; state (bookmarks,
-        // catalog) is thread-safe.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(config.maxConcurrentTables)
-        try {
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          Await.result(Future.sequence(selected.map(cfg => Future(one(cfg)))), Duration.Inf)
-        } finally pool.shutdown()
+    val sc = spark.sparkContext
+    val tag = s"graft-driver-${UUID.randomUUID()}"
+    val failure = new AtomicReference[Throwable]()
+    val workers = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(selected.size, Runtime.getRuntime.availableProcessors)),
+      (r: Runnable) => { val t = new Thread(r, tag); workers.add(t); t })
+    val pending =
+      try selected.map { cfg =>
+        pool.submit(new Callable[Option[TableResult]] {
+          def call(): Option[TableResult] =
+            if (failure.get != null) None // start no more tables after a failure
+            else {
+              sc.addJobTag(tag)
+              try {
+                val t0 = System.currentTimeMillis()
+                val r = runTable(cfg)
+                stampJobInfo(cfg, r, t0)
+                Some(r)
+              } catch {
+                case e: Throwable =>
+                  if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+                  None
+              } finally sc.removeJobTag(tag)
+            }
+        })
+      } finally {
+        pool.shutdown()
+        while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+          if (failure.get != null) sc.cancelJobsWithTag(tag)
+        workers.forEach(_.join()) // no pool thread outlives run()
       }
+    Option(failure.get).foreach(e => throw e)
     bookmarks.commitAll() // D3: single job-end commit (jdbc_incremental.py:639)
-    results
+    pending.map(_.get.get)
   }
 
   /** C6 + D1 — config resolution: every configured table must resolve to
@@ -84,9 +127,10 @@ class Driver(
     // One source read for probe-already-done + distinct + write + bookmark.
     val batch = mapped.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // P2/A2 + A3 fused: ONE aggregate job yields the all-null column set
-      // (DropNullFields prepass), the bookmark advance, and the row count
-      // (the reference traverses its source once per concern).
+      // P2/A2 + A3 + A1 fused: ONE aggregate job yields the all-null column
+      // set (DropNullFields prepass), the bookmark advance, the row count
+      // and the distinct partition tuples (the reference traverses its
+      // source once per concern).
       val stats = graft.operators.BatchStats.compute(batch, cfg)
 
       // P2 — drop all-null columns of THIS batch (SURVEY §7.4: per-batch,
@@ -101,7 +145,9 @@ class Driver(
       val dataSchema = StructType(
         cleaned.schema.fields.filterNot(f => cfg.partitionCols.contains(f.name)))
       val partSchema = StructType(cfg.partitionCols.map(c => cleaned.schema(c)))
-      if (!catalog.tableExists(config.targetDatabase, targetName)) {
+      // the schema the target holds after this step; the batch is aligned
+      // to it below without re-reading it from the catalog
+      val targetSchema = if (!catalog.tableExists(config.targetDatabase, targetName)) {
         catalog.createTable(TableDef(
           config.targetDatabase, targetName, dataSchema, partSchema, location,
           config.targetFormat,
@@ -111,20 +157,21 @@ class Driver(
             "CreatedByJob" -> config.jobName,
             "TableVersion" -> "0")))
         creatorArn.foreach(catalog.grantAllToCreator(config.targetDatabase, targetName, _))
+        dataSchema
       } else {
         val existing = catalog.getTable(config.targetDatabase, targetName)
         val merged = SchemaEvolution.merge(existing.schema, dataSchema, cfg.partitionCols)
         if (merged != existing.schema)
           catalog.updateTable(existing.copy(schema = merged))
+        merged
       }
 
       // Align the batch to the (evolved) target schema: the target may carry
       // columns this batch dropped as all-null — write them back as typed
       // nulls so files stay union-compatible (SURVEY §7.4).
-      val target = catalog.getTable(config.targetDatabase, targetName)
-      val aligned = alignToTarget(cleaned, target.schema, cfg.partitionCols)
+      val aligned = alignToTarget(cleaned, targetSchema, cfg.partitionCols)
 
-      // S3 — partitioned append, THEN P3+A1→C4 partition registration: a
+      // S3 — partitioned append, THEN C4 registration of the P3+A1 tuples: a
       // failed write must not leave the catalog pointing at data that was
       // never written. A crash BETWEEN write and register heals because
       // the bookmark for this batch is staged below and committed only at
@@ -135,7 +182,7 @@ class Driver(
       // (StreamingIngest) is the exactly-once path.
       PartitionedSink.write(aligned, location, config.targetFormat, cfg.partitionCols)
       PartitionedSink.registerPartitions(
-        aligned, catalog, config.targetDatabase, targetName, location, cfg.partitionCols)
+        stats.partitions, catalog, config.targetDatabase, targetName, location, cfg.partitionCols)
 
       // A3/D3 — stage the new bookmark (from the fused stats job), only
       // after the write succeeded; committed after all tables.
@@ -158,10 +205,13 @@ class Driver(
     batch.select(dataCols ++ partitionCols.map(col): _*)
   }
 
-  /** C5 — job-metadata stamping (jdbc_incremental.py:480-503,617-623). */
-  private def stampJobInfo(cfg: TableConfig, startMillis: Long): Unit = {
+  /** C5 — job-metadata stamping (jdbc_incremental.py:480-503,617-623).
+    * An ingested table exists (`runTable` created or evolved it); one
+    * skipped as empty may not exist yet, so only that case asks.
+    */
+  private def stampJobInfo(cfg: TableConfig, result: TableResult, startMillis: Long): Unit = {
     val targetName = config.targetTablePrefix + cfg.tableName
-    if (catalog.tableExists(config.targetDatabase, targetName)) {
+    if (!result.skippedEmpty || catalog.tableExists(config.targetDatabase, targetName)) {
       val now = System.currentTimeMillis()
       catalog.setTableProperties(config.targetDatabase, targetName, Map(
         "LastUpdatedByJob" -> config.jobName,

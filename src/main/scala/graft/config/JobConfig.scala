@@ -47,8 +47,7 @@ final case class JobConfig(
     jobIndex: Int = 0,
     numJobs: Int = 1,
     hashField: Option[String] = None,
-    hashPartitions: Option[Int] = None,
-    maxConcurrentTables: Int = 1
+    hashPartitions: Option[Int] = None
 ) {
   JobConfig.validateFormat(targetFormat)
 }

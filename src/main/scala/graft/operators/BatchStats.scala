@@ -8,13 +8,16 @@ import org.apache.spark.sql.types.NullType
 /** Everything the ingest loop needs to know about a batch, computed in a
   * SINGLE aggregate job over the (persisted) batch: per-column non-null
   * counts (DropNullFields prepass, A2), the bookmark advance tuple (A3),
-  * and the row count. The reference takes three separate passes;
-  * separate jobs here would each re-traverse the cached batch.
+  * the row count, and the distinct partition tuples (A1, one row per
+  * tuple in `cfg.partitionCols` order; empty for unpartitioned tables).
+  * The reference takes a separate pass per concern; separate jobs here
+  * would each re-traverse the cached batch.
   */
 final case class BatchStats(
     rows: Long,
     allNullColumns: Seq[String],
-    bookmark: Option[Map[String, String]])
+    bookmark: Option[Map[String, String]],
+    partitions: Seq[Row])
 
 object BatchStats {
 
@@ -31,7 +34,12 @@ object BatchStats {
       case SortOrder.Asc  => max(bkTuple)
       case SortOrder.Desc => min(bkTuple)
     }
-    val aggs = countCols ++ Seq(bkAgg.as("_bk"), count(lit(1)).as("_n"))
+    // a struct of NULL partition values is itself non-null, so collect_set
+    // keeps the tuple that lands in the default partition
+    val partAgg =
+      if (cfg.partitionCols.isEmpty) Nil
+      else Seq(collect_set(struct(cfg.partitionCols.map(col): _*)).as("_parts"))
+    val aggs = countCols ++ Seq(bkAgg.as("_bk"), count(lit(1)).as("_n")) ++ partAgg
     val row: Row = batch.agg(aggs.head, aggs.tail: _*).head()
     val allNull = (candidates.zipWithIndex.collect {
       case (f, i) if row.getLong(i) == 0L => f.name
@@ -51,6 +59,7 @@ object BatchStats {
           k -> String.valueOf(bk.get(i))
         }.toMap)
       }
-    BatchStats(rows, allNull, bookmark)
+    val partitions = if (partAgg.isEmpty) Nil else row.getSeq[Row](bkIdx + 2)
+    BatchStats(rows, allNull, bookmark, partitions)
   }
 }

@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.catalog.{CatalogClient, PartitionDef}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
-import org.apache.spark.sql.functions.col
 
 /** S3/S4 — partitioned append write + distinct-partition registration
   * (reference: `write_dynamic_frame.from_catalog` with `partitionKeys`,
@@ -55,26 +54,23 @@ object PartitionedSink {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).save(location)
   }
 
-  /** A1→C4: distinct partition tuples of the batch, registered in the
-    * catalog with stringified values and the reference's Hive-style
-    * location (`<loc>/a=1/b=x/`, jdbc_incremental.py:114-120,156).
-    * The distinct runs over the (persisted) batch — a partial+final hash
-    * aggregate over only the spec columns, then a driver-side loop over the
-    * (small) distinct set, matching the reference's collect
+  /** C4: registers the batch's distinct partition tuples (A1, computed by
+    * the fused `BatchStats` aggregate — no extra pass over the batch; one
+    * row per tuple in `partitionCols` order, none when unpartitioned) in
+    * the catalog with stringified values and the reference's Hive-style
+    * location (`<loc>/a=1/b=x/`, jdbc_incremental.py:114-120,156). The
+    * driver-side loop matches the reference's collect
     * (jdbc_incremental.py:210-220).
     */
   def registerPartitions(
-      batch: DataFrame,
+      tuples: Seq[Row],
       catalog: CatalogClient,
       db: String,
       table: String,
       location: String,
       partitionCols: Seq[String]
   ): Seq[PartitionDef] = {
-    if (partitionCols.isEmpty) return Seq.empty
-    val tuples: Array[Row] =
-      batch.select(partitionCols.map(col): _*).distinct().collect()
-    val defs = tuples.toSeq.map { row =>
+    val defs = tuples.map { row =>
       // NULL partition values must use Spark/Hive's default-partition dir
       // name — stringifying to "null" would register a location the writer
       // never creates.

@@ -147,6 +147,26 @@ class CatalogAndDriverSpec extends SparkSpec {
     assert(client.getTable("gdb", "orders").schema.fieldNames.last == "extra2")
   }
 
+  test("spark catalog client: a NULL partition value registers the Hive default partition") {
+    val work = tmpDir("sparkcatnull")
+    val client = new SparkCatalogClient(spark)
+    val full = spark.read.parquet(sf("orders")).limit(20)
+    full.withColumn("o_orderstatus",
+        when(col("o_orderkey") % 2 === 0, lit(null)).otherwise(col("o_orderstatus")))
+      .write.parquet(s"$work/src/orders.parquet")
+    val cfg = ordersConfig(work).copy(targetDatabase = "gdb_null")
+    client.ensureDatabase("gdb_null")
+    new Driver(spark, cfg, new ParquetSource(s"$work/src"), client,
+      new FileBookmarkStore(s"$work/bm.json")).run()
+    val parts = spark.sql("SHOW PARTITIONS gdb_null.orders").collect().map(_.getString(0))
+    assert(parts.contains("o_orderstatus=__HIVE_DEFAULT_PARTITION__"), parts.mkString(","))
+    assert(new java.io.File(s"$work/target/orders/o_orderstatus=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    // every row, the NULL-partition ones included, reads back through the catalog
+    assert(spark.table("gdb_null.orders").count() == 20)
+    assert(spark.table("gdb_null.orders").filter(col("o_orderstatus").isNull).count() ==
+      full.filter(col("o_orderkey") % 2 === 0).count())
+  }
+
   test("catalog client: partition values and locations with apostrophes are escaped") {
     // (Spark's session catalog itself rejects hyphens/dots in db and table
     // names, so identifier quoting is only defensive — the live injection
