@@ -11,44 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // The GLOBAL whole-stage-codegen class cache defaults to 100
-      // entries — smaller than ONE incremental-index pipeline (d54
-      // compiles 136 units, st25 270), so the warm pass's compilations
-      // were fully evicted before the timed pass and the heavy queries
-      // re-paid janino compilation EVERY run. Measured (SCALE_r12
-      // "driftprobe"): d54 steady 21.7s at 100 entries vs 14.9s at
-      // 8192; st25 33.9 → 16.6. This is also the round-over-round
-      // "drift": pipelines grew past 100 units as stages were added,
-      // silently converting one-time compile into every-run thrash. The
-      // same setting is a 100 TB recommendation for long-lived
-      // executors running many distinct pipelines.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // The r12 codegen-cache fix had a second hole, attributed this
-      // round (SCALE_r13 "stcodegen" + the cache-key diff probe): the
-      // codegen cache keys on (source, classloader), and Spark 4's
-      // session-artifact isolation hands every newSession/cloneSession
-      // a FRESH executor-side classloader — so the streaming demos
-      // (newSession per query + StreamExecution's internal clone) re-
-      // compiled ~160 ALREADY-CACHED units per run (cache +168/+163
-      // keys per rep with only 14/4 new bodies). No session artifacts
-      // are ever used here; disabling isolation restores one stable
-      // loader and turns those misses into hits. The residual misses
-      // were the codegen-stage id embedded in generated CLASS NAMES
-      // (run-order-dependent); useIdInClassName=false makes the text
-      // stable. Same 100 TB shape as the r12 fix: long-lived executors
-      // running many sessions pay a per-SESSION compile tax, not a
-      // per-data one.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen/parquet paths so the first timed query doesn't
     // absorb session initialization

@@ -4,7 +4,6 @@ import graft.catalog.SparkCatalogClient
 import graft.config.{ConfigError, JobConfig}
 import graft.sources.{IncrementalSource, JdbcSource, ParquetSource}
 import graft.state.FileBookmarkStore
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the engine-side equivalent of the reference job's
   * argument surface (`utils.get_job_args`, jdbc_incremental.py:238-306),
@@ -52,40 +51,7 @@ object Main {
       hashField = a.get("hashfield"),
       hashPartitions = a.get("hashpartitions").map(_.toInt))
 
-    val builder = SparkSession.builder()
-      .appName(config.jobName)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // normalizeTs/rawTsCol's NTZ→LTZ cast is value-identity only under
-      // UTC — same pin as every other session builder in the repo
-      .config("spark.sql.session.timeZone", "UTC")
-    // Spark's 100-entry default whole-stage-codegen class cache is
-    // smaller than one incremental-index pipeline, so long-lived
-    // drivers/executors running many tables re-pay janino compilation
-    // per run (measured: SCALE_r12 "driftprobe"; d54 21.7s → 14.9s
-    // steady). Applied only when no operator-provided value exists —
-    // checked against a defaults-loaded SparkConf, not bare sys.props,
-    // so a spark-defaults.conf value that reached the driver as a conf
-    // (not a system property) is respected rather than clobbered.
-    if (!new org.apache.spark.SparkConf(true)
-        .contains("spark.sql.codegen.cache.maxEntries"))
-      builder.config("spark.sql.codegen.cache.maxEntries", "8192")
-    // Second half of the same tax, attributed round 13 (SCALE_r13
-    // "stcodegen"): the codegen cache keys on (source, classloader),
-    // and session-artifact isolation gives every newSession/clone a
-    // fresh executor-side classloader — a per-SESSION recompile of
-    // every pipeline unit (~160 units/run for the streaming ingests)
-    // even when the source text is cached. This driver adds no
-    // session-scoped artifacts, so isolation buys nothing; disable it
-    // unless the operator configured it, and keep generated class
-    // names free of the run-order-dependent codegen-stage id so the
-    // source text itself stays cache-stable.
-    if (!new org.apache.spark.SparkConf(true)
-        .contains("spark.sql.artifact.isolation.enabled"))
-      builder.config("spark.sql.artifact.isolation.enabled", "false")
-    if (!new org.apache.spark.SparkConf(true)
-        .contains("spark.sql.codegen.useIdInClassName"))
-      builder.config("spark.sql.codegen.useIdInClassName", "false")
+    val builder = Sessions.builder().appName(config.jobName)
     // spark-submit provides spark.master; standalone runs default to local
     if (!sys.props.contains("spark.master"))
       builder.master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))

@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{SortOrder, TableConfig}
 import graft.functions.TextFunctions
-import graft.operators.{ApplyMapping, Bookmarks, Dedup, DropNullFields, Multimodal, Similarity, Skew}
+import graft.operators.{ApplyMapping, Bookmarks, Dedup, Multimodal, Similarity, Skew}
 import graft.sinks.PartitionedSink
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

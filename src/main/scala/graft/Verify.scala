@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: the 100-entry default codegen cache thrashes
-      // across 260+ queries; raising it cuts the gate's wall materially
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // one stable classloader + stable generated class names: see Bench.scala
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -20,7 +20,12 @@ final case class TableDef(
     parameters: Map[String, String] = Map.empty
 )
 
-final case class PartitionDef(values: Seq[String], location: String)
+/** One partition: `spec` is (partition column, stringified value) in the
+  * table's partition-column order; `values` is the value tuple alone.
+  */
+final case class PartitionDef(spec: Seq[(String, String)], location: String) {
+  def values: Seq[String] = spec.map(_._2)
+}
 
 /** Metadata-plane contract (SURVEY §2.5, C1–C6). Implementations: an
   * in-memory one for tests and a Spark-session-catalog one for real runs.

@@ -63,10 +63,7 @@ class SparkCatalogClient(spark: SparkSession) extends CatalogClient {
     spark.catalog.listTables(db).collect().map(_.name).toSeq
 
   def addPartition(db: String, table: String, p: PartitionDef): Unit = {
-    val partCols = spark.sessionState.catalog.getTableMetadata(ident(db, table))
-      .partitionColumnNames
-    val spec = partCols.zip(p.values)
-      .map { case (k, v) => s"`$k`='${v.replace("'", "''")}'" }.mkString(", ")
+    val spec = p.spec.map { case (k, v) => s"`$k`='${v.replace("'", "''")}'" }.mkString(", ")
     spark.sql(
       s"ALTER TABLE ${q(db, table)} ADD IF NOT EXISTS PARTITION ($spec)" +
         s" LOCATION '${p.location.replace("'", "''")}'")

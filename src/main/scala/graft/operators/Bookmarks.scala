@@ -1,12 +1,12 @@
 package graft.operators
 
 import graft.config.{SortOrder, TableConfig}
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, lit, max, min}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
 
-/** P4/A3 — the incremental predicate and the bookmark-advance aggregate
-  * (reference: `jobBookmarkKeys` + `jobBookmarkKeysSortOrder`,
-  * jdbc_incremental.py:175-184; new value committed at job end, :639).
+/** P4 — the incremental bookmark predicate (reference: `jobBookmarkKeys`
+  * + `jobBookmarkKeysSortOrder`, jdbc_incremental.py:175-184; new value
+  * committed at job end, :639).
   *
   * The filter is a plain Catalyst predicate, so it PUSHES DOWN: to the
   * parquet scan (`PushedFilters`) for file sources, and into the generated
@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions.{col, lit, max, min}
   * Composite keys use lexicographic comparison, consistent with an ordered
   * scan over (k1, k2, …): `(k1 > b1) OR (k1 = b1 AND k2 > b2) OR …` —
   * each disjunct is still pushdown-eligible. Under DESC the comparison
-  * flips and the advance is `min` instead of `max`
-  * (jdbc_incremental.py:175-179). Late rows sorting below the committed
-  * bookmark are silently never ingested — the reference's late-data
-  * semantics (SURVEY §2.4).
+  * flips, and the advance (A3, in [[BatchStats]]) is `min` instead of
+  * `max` (jdbc_incremental.py:175-179). Late rows sorting below the
+  * committed bookmark are silently never ingested — the reference's
+  * late-data semantics (SURVEY §2.4).
   */
 object Bookmarks {
 
@@ -51,46 +51,4 @@ object Bookmarks {
 
   def filterNew(df: DataFrame, cfg: TableConfig, bookmark: Map[String, String]): DataFrame =
     predicate(df, cfg, bookmark).map(df.filter).getOrElse(df)
-
-  /** New bookmark after a batch: the lexicographic max (ASC) / min (DESC)
-    * KEY TUPLE, computed in one aggregate job via struct ordering (Spark
-    * compares structs field-by-field, which matches the predicate above —
-    * per-key independent max would be wrong for composite keys). Returns
-    * None for an empty batch (bookmark unchanged).
-    */
-  /** Bookmark advance AND batch row count in ONE aggregate job — the
-    * Driver needs both after a write; fusing them saves a pass over the
-    * (cached) batch per table.
-    */
-  def advanceWithCount(batch: DataFrame, cfg: TableConfig): (Option[Map[String, String]], Long) = {
-    val tuple = org.apache.spark.sql.functions.struct(cfg.bookmarkKeys.map(col): _*)
-    val agg = cfg.sortOrder match {
-      case SortOrder.Asc  => max(tuple)
-      case SortOrder.Desc => min(tuple)
-    }
-    val row: Row = batch.agg(agg.as("bk"),
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n")).head()
-    val n = row.getLong(1)
-    if (row.isNullAt(0)) (None, n)
-    else {
-      val bk = row.getStruct(0)
-      (Some(cfg.bookmarkKeys.zipWithIndex.map { case (k, i) =>
-        k -> String.valueOf(bk.get(i))
-      }.toMap), n)
-    }
-  }
-
-  def advance(batch: DataFrame, cfg: TableConfig): Option[Map[String, String]] = {
-    val tuple = org.apache.spark.sql.functions.struct(cfg.bookmarkKeys.map(col): _*)
-    val agg = cfg.sortOrder match {
-      case SortOrder.Asc  => max(tuple)
-      case SortOrder.Desc => min(tuple)
-    }
-    val row: Row = batch.agg(agg.as("bk")).head()
-    if (row.isNullAt(0)) None
-    else {
-      val bk = row.getStruct(0)
-      Some(cfg.bookmarkKeys.zipWithIndex.map { case (k, i) => k -> String.valueOf(bk.get(i)) }.toMap)
-    }
-  }
 }

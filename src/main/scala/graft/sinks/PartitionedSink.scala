@@ -15,8 +15,6 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
   */
 object PartitionedSink {
 
-  val SupportedFormats: Set[String] = Set("parquet", "csv", "json", "orc")
-
   /** Format dispatch (S4). CSV matches the reference's descriptor: `,`
     * delimiter + header line (skip.header.line.count=1,
     * jdbc_incremental.py:149-152,411-412). Unknown formats raise
@@ -74,10 +72,11 @@ object PartitionedSink {
       // NULL partition values must use Spark/Hive's default-partition dir
       // name — stringifying to "null" would register a location the writer
       // never creates.
-      val values = partitionCols.indices.map(i =>
-        if (row.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else String.valueOf(row.get(i)))
-      val path = partitionCols.zip(values).map { case (k, v) => s"$k=$v" }.mkString("/")
-      PartitionDef(values, s"${location.stripSuffix("/")}/$path/")
+      val spec = partitionCols.zipWithIndex.map { case (k, i) =>
+        k -> (if (row.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else String.valueOf(row.get(i)))
+      }
+      val path = spec.map { case (k, v) => s"$k=$v" }.mkString("/")
+      PartitionDef(spec, s"${location.stripSuffix("/")}/$path/")
     }
     defs.foreach(catalog.addPartition(db, table, _))
     defs

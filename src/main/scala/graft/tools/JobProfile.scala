@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Per-JOB wall-time attribution for ONE registry query: runs the query
@@ -23,18 +22,7 @@ object JobProfile {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)

@@ -2,9 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Planning-vs-execution split for selected queries — the measurement
   * behind the SCALING.md plan-size audit (VERDICT r6 watch item: d2's
@@ -30,14 +29,7 @@ object PlanTimer {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val taskMs = new AtomicLong(0)
     val jobs = new AtomicInteger(0)

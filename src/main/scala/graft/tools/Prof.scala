@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Sessions, SparkEntry}
 
 /** Times selected SparkEntry queries through the noop sink (same
   * measurement as Bench) without running the whole suite — the inner
@@ -19,23 +18,8 @@ import org.apache.spark.sql.SparkSession
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // match Bench: the 100-entry default codegen cache is smaller than
-      // one incremental pipeline, so rep 1's compilations would be
-      // evicted before rep 2 (see Bench.scala / SCALE_r12 "driftprobe")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // one stable classloader + stable generated class names: see Bench.scala
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     // optional cross-sf warm-up: run each query once at WARM_DIR (tiny sf)

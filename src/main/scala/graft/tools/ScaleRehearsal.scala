@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** sf1 scale rehearsal: generate 10× replicas of the sf0.1 tables, run
   * queries against them, and record timings + plan shapes — converting
@@ -35,11 +35,22 @@ import graft.SparkEntry
   *    committed sf0.1 steady-state for the same query, so the artifact
   *    itself says sub/super-linear without cross-file arithmetic.
   *
-  * Usage: `runMain graft.tools.ScaleRehearsal [outJson] [scope]` —
-  * scope `full` (default) or `quick` (the r5 top-10). Replica dirs are
-  * generated under SPARK_GRAFT_SF1_BASE (default /tmp) as
-  * graft-sf1-{clique,real,skew}, each stamped with a scheme marker and
-  * regenerated when the scheme changes.
+  * Usage: `runMain graft.tools.ScaleRehearsal [outJson] [scope]`. Scopes:
+  *  - `full` (default): every registry query on the 10× clique corpus,
+  *    the realistic and skew sets on their corpora, and the 1×/10×
+  *    incremental-ingest probe; `quick`: the same with the r5 top-10 as
+  *    the main set and no fixture provisioning;
+  *  - `only:q1,q2,…`: the named queries on the 10× clique corpus;
+  *  - `probe:<query>`: fresh-JVM codegen/JIT terms per rep at
+  *    SPARK_GRAFT_SF_DIR; `modeprobe:<query>:<real|skew>`: the same on a
+  *    mode corpus under that mode's confs;
+  *  - `stpart`: per-micro-batch fixed cost against shuffle partitions;
+  *  - `top20`: the bench's top wall-clock queries on a 100× corpus;
+  *    `sf10`: the 100× spot set on the real-mode corpus.
+  *
+  * Replica dirs are generated under SPARK_GRAFT_SF1_BASE (default /tmp)
+  * as graft-sf1-{clique,real,skew} (and graft-sf10-* at 100×), each
+  * stamped with a scheme marker and regenerated when the scheme changes.
   */
 object ScaleRehearsal {
 
@@ -355,292 +366,12 @@ object ScaleRehearsal {
     } finally fs.delete(new Path(root), true) // rehearsal roots are multi-GB
   }
 
-  /** Log-growth probe (VERDICT r7 task 3 "done" criterion): many small
-    * ingests into one index root, with and without periodic
-    * [[graft.operators.IncrementalIndex.compactDedupIndex]]. Without
-    * compaction every ingest union-reads one more parquet version and
-    * re-aggregates one more stats delta — per-ingest cost grows with
-    * ingest COUNT even at constant index size. With compaction every
-    * `every` ingests, the version count is bounded and per-ingest cost
-    * must stay flat. Reports mean per-ingest seconds over the first and
-    * last `window` ingests of each arm, plus the final version counts.
-    */
-  private def manyIngests(spark: SparkSession, base: String, srcDir: String,
-      batches: Int, every: Int, window: Int = 8): String = {
-    import graft.operators.IncrementalIndex
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
-      .select("doc_id", "text").persist()
-    docs.count()
-    val out = manyIngestsGeneric(spark, base, "many_ingests", "graft-incr-many",
-      batches, every, window,
-      idCol = "doc_id", rows = docs,
-      ingest = (root, b) => {
-        val (_, p) = IncrementalIndex.ingestMinHash(spark, root, b, "doc_id", "text")
-        p.unpersist(blocking = false)
-      },
-      compact = root => IncrementalIndex.compactDedupIndex(spark, root))
-    docs.unpersist(blocking = false)
-    out
-  }
-
-  /** The d59 analogue of [[manyIngests]]: many small ingests into one
-    * prefix-filter index, with and without periodic
-    * [[graft.operators.IncrementalIndex.compactPrefixIndex]].
-    */
-  private def manyPrefixIngests(spark: SparkSession, base: String,
-      srcDir: String, batches: Int, every: Int, window: Int = 8): String = {
-    import graft.operators.IncrementalIndex
-    val sets = prefixSets(spark, srcDir).persist()
-    sets.count()
-    val out = manyIngestsGeneric(spark, base, "prefix_many", "graft-prefix-many",
-      batches, every, window,
-      idCol = "id", rows = sets,
-      ingest = (root, b) => {
-        val (_, p) = IncrementalIndex.ingestPrefixJaccard(spark, root, b)
-        p.unpersist(blocking = false)
-      },
-      compact = root => IncrementalIndex.compactPrefixIndex(spark, root),
-      versionRootOf = root => s"$root/tokens")
-    sets.unpersist(blocking = false)
-    out
-  }
-
-  /** Log-growth probe (VERDICT r7 task 3 "done" criterion): many small
-    * ingests into one index root, with and without periodic compaction.
-    * Without compaction every ingest union-reads one more parquet
-    * version and re-aggregates one more stats delta — per-ingest cost
-    * grows with ingest COUNT even at constant index size. With
-    * compaction every `every` ingests, the version count is bounded and
-    * per-ingest cost must stay flat. Reports mean per-ingest seconds
-    * over the first and last `window` ingests of each arm, plus the
-    * final version counts.
-    */
-  private def manyIngestsGeneric(spark: SparkSession, base: String,
-      jsonKey: String, rootPrefix: String, batches: Int, every: Int,
-      window: Int, idCol: String, rows: DataFrame,
-      ingest: (String, DataFrame) => Unit,
-      compact: String => Unit,
-      versionRootOf: String => String = identity): String = {
-    import org.apache.hadoop.fs.Path
-    val arms = Seq("nocompact" -> 0, "compact" -> every)
-    val armRows = arms.map { case (arm, k) =>
-      val root = s"$base/$rootPrefix-$arm"
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      try {
-        var compactSec = 0.0
-        val times = (0 until batches).map { i =>
-          val b = rows.filter(pmod(col(idCol), lit(batches)) === i)
-          val t0 = System.nanoTime()
-          ingest(root, b)
-          val ingestSec = (System.nanoTime() - t0) / 1e9
-          // maintenance cost accounted separately: the flat-ingest claim
-          // is about the PER-BATCH path; compaction is the amortized
-          // price paid to keep it flat, reported as its own total
-          if (k > 0 && (i + 1) % k == 0) {
-            val t1 = System.nanoTime()
-            compact(root)
-            compactSec += (System.nanoTime() - t1) / 1e9
-          }
-          ingestSec
-        }
-        val head = times.take(window).sum / window
-        val tail = times.takeRight(window).sum / window
-        val nv = graft.sinks.VersionedTable.versions(spark, versionRootOf(root)).size
-        println(f"SCALE many[$rootPrefix:$arm] first$window ${head}%.2fs/ingest " +
-          f"last$window ${tail}%.2fs/ingest compaction ${compactSec}%.1fs total versions=$nv")
-        s""""$arm":{"first":${"%.2f".format(head)},"last":${"%.2f".format(tail)},""" +
-          s""""compact_sec":${"%.1f".format(compactSec)},"versions":$nv}"""
-      } finally fs.delete(new Path(root), true)
-    }
-    s""""$jsonKey":{"batches":$batches,"compact_every":$every,${armRows.mkString(",")}}"""
-  }
-
-  /** Incremental TF-IDF probe (d55): bootstrap an index over `indexDir`'s
-    * documents (timed), score probes from the PERSISTED weight log
-    * (timed) against the one-shot d41 pipeline over the same corpus
-    * (timed — it re-tokenizes and re-weighs everything; the delta is the
-    * amortized weigh pass), then TIME ingesting one fixed sf0.01-sized
-    * batch. Ingest must be FLAT across index decades: unlike MinHash/SRP
-    * there is NO index-proportional term at all (frozen stats are
-    * vocabulary-sized; nothing indexed is re-read).
-    * Returns (bootstrapSec, scoreIndexedSec, scoreOneShotSec, ingestSec).
-    */
-  private def timedTfidf(spark: SparkSession, base: String,
-      indexDir: String, batchDir: String, tag: String): (Double, Double, Double, Double) = {
-    import graft.operators.IncrementalIndex
-    import org.apache.hadoop.fs.Path
-    val root = s"$base/graft-tfidf-$tag"
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root), true)
-    try {
-      val docs = spark.read.parquet(s"$indexDir/documents.parquet")
-        .select("doc_id", "text")
-      var t0 = System.nanoTime()
-      IncrementalIndex.bootstrapTfidf(spark, root, docs, "doc_id", "text")
-      val bootSec = (System.nanoTime() - t0) / 1e9
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      IncrementalIndex.sparseCosineIndexed(spark, root, col("id") < 50, 0.2)
-        .write.format("noop").mode("overwrite").save()
-      val scoreIdxSec = (System.nanoTime() - t0) / 1e9
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      SparkEntry.queries("d41_sparse_cosine")(spark, indexDir)
-        .write.format("noop").mode("overwrite").save()
-      val scoreOneSec = (System.nanoTime() - t0) / 1e9
-      val batch = spark.read.parquet(s"$batchDir/documents.parquet")
-        .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      IncrementalIndex.ingestTfidf(spark, root, batch, "doc_id", "text")
-      val ingestSec = (System.nanoTime() - t0) / 1e9
-      println(f"SCALE tfidf[$tag] bootstrap $bootSec%.2fs scoreIdx $scoreIdxSec%.2fs " +
-        f"scoreOneShot $scoreOneSec%.2fs ingest $ingestSec%.2fs")
-      (bootSec, scoreIdxSec, scoreOneSec, ingestSec)
-    } finally fs.delete(new Path(root), true)
-  }
-
-  /** (id, elem) shingle-set rows for the prefix-filter probes — the d59
-    * registry shape (5-gram md5 shingles), ids offset to avoid replica
-    * collisions.
-    */
-  private def prefixSets(spark: SparkSession, dir: String,
-      offset: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    def sh(c: org.apache.spark.sql.Column) = ColumnBridge.column(
-      graft.functions.ShingleHashesMd5(ColumnBridge.expression(c), 5))
-    spark.read.parquet(s"$dir/documents.parquet")
-      .select((col("doc_id") + offset).as("id"), explode(sh(col("text"))).as("elem"))
-      .distinct()
-  }
-
-  /** Incremental prefix-filter probe (d59): bootstrap over `indexDir`
-    * (freezing element df), TIME one fixed sf0.01-sized ingest against
-    * the index, and time the one-shot [[graft.operators.Dedup.prefixJaccardJoin]]
-    * rebuild over the union it replaces. Unlike TF-IDF the ingest has a
-    * real index term (the map-only banded scan of stored token rows
-    * feeding the candidate probe) — the claim to verify is that the
-    * term is the FLAT-ish O(index scan) one, not the rebuild's
-    * O(index²-candidates) one.
-    */
-  private def timedPrefix(spark: SparkSession, base: String,
-      indexDir: String, batchDir: String, tag: String): (Double, Double, Double) = {
-    import graft.operators.{Dedup, IncrementalIndex}
-    import org.apache.hadoop.fs.Path
-    val root = s"$base/graft-prefix-$tag"
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root), true)
-    try {
-      val idx = prefixSets(spark, indexDir)
-      var t0 = System.nanoTime()
-      val (_, p0) = IncrementalIndex.ingestPrefixJaccard(spark, root, idx)
-      val bootSec = (System.nanoTime() - t0) / 1e9
-      p0.unpersist(blocking = false)
-      val batch = prefixSets(spark, batchDir, 50000000L)
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      val (_, p1) = IncrementalIndex.ingestPrefixJaccard(spark, root, batch)
-      val ingestSec = (System.nanoTime() - t0) / 1e9
-      p1.unpersist(blocking = false)
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      val rebuilt = Dedup.prefixJaccardJoin(idx.unionAll(batch), 4, 5)
-      val rebuildSec = (System.nanoTime() - t0) / 1e9
-      rebuilt.unpersist(blocking = false)
-      println(f"SCALE prefix[$tag] bootstrap $bootSec%.2fs ingest $ingestSec%.2fs " +
-        f"vs one-shot rebuild $rebuildSec%.2fs")
-      (bootSec, ingestSec, rebuildSec)
-    } finally fs.delete(new Path(root), true)
-  }
-
-  /** Retraction/purge probe (d56) at rehearsal scale: bootstrap a
-    * MinHash index over `indexDir`, retract 5% of its ids (must be
-    * O(ids) — one tombstone version, nothing rewritten), TIME an ingest
-    * against the retracted index (tombstone anti-join rides the banded
-    * scan), then TIME the physical purge (O(index) checkpoint rewrite —
-    * the amortized takedown compaction) and check the survivor count.
-    */
-  private def timedRetract(spark: SparkSession, base: String,
-      indexDir: String, batchDir: String, tag: String): String = {
-    import graft.operators.IncrementalIndex
-    import org.apache.hadoop.fs.Path
-    val root = s"$base/graft-retract-$tag"
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root), true)
-    try {
-      val docs = spark.read.parquet(s"$indexDir/documents.parquet")
-        .select("doc_id", "text")
-      val n = docs.count()
-      val (_, p0) = IncrementalIndex.ingestMinHash(spark, root, docs, "doc_id", "text")
-      p0.unpersist(blocking = false)
-      val ids = docs.filter(pmod(col("doc_id"), lit(20)) === 0).select("doc_id")
-      val nr = ids.count()
-      SparkEntry.resetSessionCache(spark)
-      var t0 = System.nanoTime()
-      IncrementalIndex.retract(spark, root, ids, "doc_id")
-      val retractSec = (System.nanoTime() - t0) / 1e9
-      val batch = spark.read.parquet(s"$batchDir/documents.parquet")
-        .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-      val nb = batch.count()
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      val (_, p1) = IncrementalIndex.ingestMinHash(spark, root, batch, "doc_id", "text")
-      val ingestSec = (System.nanoTime() - t0) / 1e9
-      p1.unpersist(blocking = false)
-      SparkEntry.resetSessionCache(spark)
-      t0 = System.nanoTime()
-      IncrementalIndex.purgeDedupIndex(spark, root)
-      val purgeSec = (System.nanoTime() - t0) / 1e9
-      val remaining = IncrementalIndex.readMinHashIndex(spark, root).count()
-      val ok = remaining == n - nr + nb
-      println(f"SCALE retract[$tag] index=$n retract($nr) $retractSec%.2fs " +
-        f"ingest-after $ingestSec%.2fs purge $purgeSec%.2fs " +
-        f"survivors=$remaining ok=$ok")
-      s""""$tag":{"index_docs":$n,"retracted":$nr,""" +
-        s""""retract_s":${"%.2f".format(retractSec)},""" +
-        s""""ingest_after_s":${"%.2f".format(ingestSec)},""" +
-        s""""purge_s":${"%.2f".format(purgeSec)},""" +
-        s""""survivors_ok":$ok}"""
-    } finally fs.delete(new Path(root), true)
-  }
-
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF1_BASE", "/tmp")
     val outJson = if (args.nonEmpty) args(0) else "SCALE_r6.json"
     val scope = if (args.length > 1) args(1) else "full"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // mergewall measures genuine job concurrency: FIFO runs whole
-      // stages of job 1 before job 2's tasks see a slot (wall ≈ sum for
-      // equal-size jobs regardless of utilization), FAIR interleaves —
-      // the scheduler a multi-tenant cluster would run anyway
-      .config("spark.scheduler.mode",
-        if (scope == "mergewall") "FAIR" else "FIFO")
-      // the GLOBAL whole-stage-codegen class cache (static conf): Spark's
-      // 100-entry default is smaller than one incremental pipeline (d54
-      // 136 units, st25 270), turning one-time compile into every-run
-      // thrash — see Bench.scala / SCALE_r12 "driftprobe". Default to the
-      // harness-wide 8192; the drift probes override via env to measure
-      // the thrash itself
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // one stable classloader + stable generated class names: see
-      // Bench.scala (the r13 streaming-codegen attribution). Env
-      // overrides let the stcodegen scope measure the isolation tax
-      // itself.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CLASS_ID", "false"))
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val warmDir = "/root/testdata/sf0.001"
     val prof = profTimes()
@@ -744,86 +475,6 @@ object ScaleRehearsal {
       return
     }
 
-    if (scope == "stcodegen") {
-      // attribution for the streaming demos' ~160 genuinely-unique
-      // codegen units per run (SCALING r12): three components, each
-      // repeated 3× in ONE JVM so the per-rep codegen delta separates
-      // cacheable (rep2+ ≈ 0) from per-run-unique compilation.
-      //   shell  — a bare file stream + foreachBatch(count), fresh
-      //            dirs per rep: micro-batch machinery alone
-      //   ingest — st25's foreachBatch BODY in batch mode (prefix epoch
-      //            ingests on fresh roots): the index pipeline alone
-      //   full   — st25 via the registry: shell + ingest + restart
-      // If full ≈ shell + ingest, the uniqueness lives in whichever
-      // component's reps stay high; a super-additive gap means the
-      // INTERACTION (e.g. cloned-session plan identity) is the term.
-      import graft.operators.IncrementalIndex
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-      def codegenCount: Long = org.apache.spark.metrics.source
-        .CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
-      def measured(f: => Unit): String = {
-        SparkEntry.resetSessionCache(spark)
-        val c0 = codegenCount; val j0 = jit.getTotalCompilationTime
-        val t0 = System.nanoTime()
-        f
-        val wall = (System.nanoTime() - t0) / 1e9
-        f"""{"wall":$wall%.2f,"codegen":${codegenCount - c0},""" +
-          f""""jit_ms":${jit.getTotalCompilationTime - j0}}"""
-      }
-      def tmp(p: String): String =
-        java.nio.file.Files.createTempDirectory(p).toString
-      def sh(c: org.apache.spark.sql.Column) = ColumnBridge.column(
-        graft.functions.ShingleHashesMd5(ColumnBridge.expression(c), 5))
-      val sets = spark.read.parquet(s"$srcDir/documents.parquet")
-        .select(col("doc_id").as("id"), explode(sh(col("text"))).as("elem"))
-        .distinct().persist()
-      sets.count()
-      val b1 = sets.filter(pmod(col("id"), lit(3)) < 2)
-      val b2 = sets.filter(pmod(col("id"), lit(3)) === 2)
-      def shellRep(): Unit = {
-        val work = tmp("graft-stcg-shell"); val ckpt = tmp("graft-stcg-ckpt")
-        b1.limit(1000).coalesce(1).write.mode("append").parquet(s"$work/in")
-        b2.limit(1000).coalesce(1).write.mode("append").parquet(s"$work/in")
-        val sess = spark.newSession()
-        sess.conf.set("spark.sql.streaming.metadataCache.enabled", "false")
-        val q = sess.readStream.schema(sets.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$work/in")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) => batch.count(); () }
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      def ingestRep(): Unit = {
-        val root = tmp("graft-stcg-ix"); val pairsRoot = tmp("graft-stcg-px")
-        IncrementalIndex.ingestPrefixJaccardEpoch(spark, root, pairsRoot, b1, 0L)
-          .foreach(_.unpersist(blocking = false))
-        IncrementalIndex.ingestPrefixJaccardEpoch(spark, root, pairsRoot, b2, 1L)
-          .foreach(_.unpersist(blocking = false))
-      }
-      val fullFn = SparkEntry.queries("st25_stream_prefix_restart")
-      def fullRep(): Unit =
-        fullFn(spark, srcDir).write.format("noop").mode("overwrite").save()
-      val out = Seq(
-        "shell" -> (() => shellRep()),
-        "ingest" -> (() => ingestRep()),
-        "full" -> (() => fullRep())).map { case (tag, f) =>
-        val reps = (1 to 3).map { i =>
-          val r = measured(f())
-          println(s"SCALE stcodegen[$tag] rep$i $r")
-          s""""rep$i":$r"""
-        }
-        s""""$tag":{${reps.mkString(",")}}"""
-      }
-      sets.unpersist(blocking = false)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"stcodegen":{${out.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
     if (scope == "stpart") {
       // Per-micro-batch FIXED cost vs shuffle/state partition count — the
       // r13 scaling inversion (PERF_r13 low/high ratios: st19 0.19,
@@ -918,1615 +569,6 @@ object ScaleRehearsal {
       docs.unpersist(blocking = false)
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
         s"""{"stpart":{${out.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "merge") {
-      // shard-parallel bootstrap vs one-shot (d64's operator at rehearsal
-      // scale): two parity shards bootstrap independently — on a cluster
-      // they run CONCURRENTLY, so wall-clock is max(shard_a, shard_b) +
-      // merge — then mergeMinHashIndexes completes the cross pairs from
-      // the logs. Reported against the one-shot bootstrap of the union.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      def run(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = Seq("os", "a", "b").map(x => s"$base/graft-merge-$tag-$x")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        roots.foreach(r => fs.delete(new Path(r), true))
-        try {
-          def timed(f: => org.apache.spark.sql.DataFrame): Double = {
-            val t0 = System.nanoTime(); val df = f
-            val sec = (System.nanoTime() - t0) / 1e9
-            df.unpersist(blocking = false); sec
-          }
-          val osSec = timed(IncrementalIndex.ingestMinHash(
-            spark, roots(0), docs, "doc_id", "text")._2)
-          val aSec = timed(IncrementalIndex.ingestMinHash(
-            spark, roots(1), docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")._2)
-          val bSec = timed(IncrementalIndex.ingestMinHash(
-            spark, roots(2), docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")._2)
-          val t0 = System.nanoTime()
-          val (_, xp) = IncrementalIndex.mergeMinHashIndexes(spark, roots(1), roots(2))
-          val cross = xp.count()
-          val mSec = (System.nanoTime() - t0) / 1e9
-          xp.unpersist(blocking = false)
-          println(f"SCALE merge[$tag] oneshot $osSec%.2fs shards $aSec%.2f/$bSec%.2f " +
-            f"merge $mSec%.2fs cross_pairs $cross")
-          f""""oneshot_$tag":${"%.2f".format(osSec)},""" +
-            f""""shard_a_$tag":${"%.2f".format(aSec)},""" +
-            f""""shard_b_$tag":${"%.2f".format(bSec)},""" +
-            f""""merge_$tag":${"%.2f".format(mSec)},"cross_$tag":$cross"""
-        } finally roots.foreach(r => fs.delete(new Path(r), true))
-      }
-      // JIT/parquet-reader warm pass on the tiny sf0.01 corpus — without
-      // it the first timed arm absorbs ~25 s of cold-start and the
-      // 1x/10x ratios are meaningless
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm")
-      val r1 = run(srcDir, "1x")
-      SparkEntry.resetSessionCache(spark)
-      val r10 = run(cliqueDir0, "10x")
-      // third decade (6M docs, 192M banded rows — each shard bootstrap
-      // routes through the size-gated shuffle fallback like a genuine
-      // backfill); provisioned here like the incr scope so the
-      // three-decade run is self-contained
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      SparkEntry.resetSessionCache(spark)
-      val r100 = "," + run(sf10Dir, "100x")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"merge":{$r1,$r10$r100}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "nway") {
-      // N-way fan-in (d69): ONE candidate pass over three shards vs the
-      // fold of two binary merges — the fold re-scans the GROWING
-      // adopter each iteration, the cost term a 1000-shard fan-in
-      // cannot afford. Cross-pair counts must agree (spec-pinned; here
-      // re-asserted on the rehearsal corpus).
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      def run(dir: String, tag: String, k: Int = 3): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = (0 until k).map(i => s"$base/graft-nway-$tag-$i")
-        val froots = (0 until k).map(i => s"$base/graft-nwayf-$tag-$i")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        (roots ++ froots).foreach(r => fs.delete(new Path(r), true))
-        try {
-          (0 until k).foreach { i =>
-            val shard = docs.filter(pmod(col("doc_id"), lit(k)) === i)
-            IncrementalIndex.ingestMinHash(spark, roots(i), shard, "doc_id", "text")
-              ._2.unpersist(blocking = false)
-            IncrementalIndex.ingestMinHash(spark, froots(i), shard, "doc_id", "text")
-              ._2.unpersist(blocking = false)
-          }
-          val t0 = System.nanoTime()
-          val (_, xp) = IncrementalIndex.mergeManyMinHashIndexes(
-            spark, roots(0), roots.drop(1))
-          val nCross = xp.count()
-          val oneSec = (System.nanoTime() - t0) / 1e9
-          xp.unpersist(blocking = false)
-          val t1 = System.nanoTime()
-          var nFold = 0L
-          (1 until k).foreach { i =>
-            val (_, x) = IncrementalIndex.mergeMinHashIndexes(spark, froots(0), froots(i))
-            nFold += x.count()
-            x.unpersist(blocking = false)
-          }
-          val foldSec = (System.nanoTime() - t1) / 1e9
-          require(nCross == nFold, s"one-pass $nCross != fold $nFold cross pairs")
-          println(f"SCALE nway[$tag] k=$k one-pass $oneSec%.2fs fold $foldSec%.2fs cross $nCross")
-          f""""onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""fold_$tag":${"%.2f".format(foldSec)},"cross_$tag":$nCross"""
-        } finally (roots ++ froots).foreach(r => fs.delete(new Path(r), true))
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm")
-      val r1 = run(srcDir, "1x")
-      SparkEntry.resetSessionCache(spark)
-      val r10 = run(cliqueDir0, "10x")
-      // wide fan-in: the fold's Θ(k) growing-adopter tail only separates
-      // from the one-pass once k grows past a handful — k=8 at 10×
-      SparkEntry.resetSessionCache(spark)
-      val r10k8 = run(cliqueDir0, "10x_k8", k = 8)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"nway":{$r1,$r10,$r10k8}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "mergefam") {
-      // decade rows (1x/10x/100x) for the non-MinHash merge families —
-      // d64 had three measured decades, d66/e25/d67/d68 stopped at 10x
-      // and d67's "fixed pipeline structure, not corpus-bound" census
-      // note was an inference from sub-corpus variants, not a measured
-      // 100x row. Same shape as the `merge` scope: parity shards
-      // bootstrap independently (on a cluster: concurrently — wall =
-      // max(shards) + merge), the merge is timed separately so the
-      // artifact itself names the dominant term per decade.
-      import graft.operators.IncrementalIndex
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      def fresh(names: String*): Seq[String] = {
-        val rs = names.map(n => s"$base/graft-mf-$n")
-        rs.foreach(r => fs.delete(new Path(r), true))
-        rs
-      }
-      def emit(fam: String, tag: String, aSec: Double, bSec: Double,
-          mSec: Double, cross: Long): String = {
-        println(f"SCALE mergefam[$fam/$tag] shards $aSec%.2f/$bSec%.2f " +
-          f"merge $mSec%.2fs cross $cross")
-        f""""${fam}_a_$tag":${"%.2f".format(aSec)},""" +
-          f""""${fam}_b_$tag":${"%.2f".format(bSec)},""" +
-          f""""${fam}_merge_$tag":${"%.2f".format(mSec)},""" +
-          f""""${fam}_cross_$tag":$cross"""
-      }
-
-      def simhashRun(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val Seq(a, b) = fresh(s"sim-$tag-a", s"sim-$tag-b")
-        try {
-          var p: DataFrame = null
-          val aSec = timed { p = IncrementalIndex.ingestSimHash(
-            spark, a, docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")._2 }
-          p.unpersist(blocking = false)
-          val bSec = timed { p = IncrementalIndex.ingestSimHash(
-            spark, b, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")._2 }
-          p.unpersist(blocking = false)
-          var cross = 0L
-          val mSec = timed {
-            val (_, xp) = IncrementalIndex.mergeSimHashIndexes(spark, a, b)
-            cross = xp.count(); xp.unpersist(blocking = false)
-          }
-          emit("sim", tag, aSec, bSec, mSec, cross)
-        } finally Seq(a, b).foreach(r => fs.delete(new Path(r), true))
-      }
-
-      def srpRun(dir: String, tag: String): String = {
-        val base = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        // perturbed twins at an ODD id offset, so every twin pair
-        // straddles the parity shards (an even offset would co-locate
-        // twins and the merge's verify join would never engage —
-        // cross=0 measures only banding+adoption, not the merge)
-        val off = 1 + 2 * (spark.read.parquet(s"$dir/embeddings.parquet")
-          .agg(max(col("vec_id")).cast("long")).head().getLong(0) / 2 + 1)
-        val vecs = base.unionAll(base.select((col("vec_id") + off).as("vec_id"),
-          expr("transform(v, (x, i) -> IF(i = 0, x + 0.01D, x))").as("v")))
-        val p = IncrementalIndex.SrpParams(dim = 64,
-          bitsPerTable = graft.operators.Similarity.srpBitsFor(vecs.count()),
-          bucketCap = 256)
-        val Seq(a, b) = fresh(s"srp-$tag-a", s"srp-$tag-b")
-        try {
-          var pr: DataFrame = null
-          val aSec = timed { pr = IncrementalIndex.ingestEmbeddings(
-            spark, a, vecs.filter(col("vec_id") % 2 === 0), "vec_id", "v", p)._2 }
-          pr.unpersist(blocking = false)
-          val bSec = timed { pr = IncrementalIndex.ingestEmbeddings(
-            spark, b, vecs.filter(col("vec_id") % 2 === 1), "vec_id", "v", p)._2 }
-          pr.unpersist(blocking = false)
-          var cross = 0L
-          val mSec = timed {
-            val (_, xp) = IncrementalIndex.mergeSrpIndexes(spark, a, b, p)
-            cross = xp.count(); xp.unpersist(blocking = false)
-          }
-          emit("srp", tag, aSec, bSec, mSec, cross)
-        } finally Seq(a, b).foreach(r => fs.delete(new Path(r), true))
-      }
-
-      def prefixRun(dir: String, tag: String): String = {
-        def sh(c: org.apache.spark.sql.Column) = ColumnBridge.column(
-          graft.functions.ShingleHashesMd5(ColumnBridge.expression(c), 5))
-        val sets = spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").as("id"), explode(sh(col("text"))).as("elem"))
-          .distinct()
-        val Seq(a, b) = fresh(s"pfx-$tag-a", s"pfx-$tag-b")
-        try {
-          var pr: DataFrame = null
-          val aSec = timed { pr = IncrementalIndex.bootstrapPrefixJaccard(
-            spark, a, sets.filter(col("id") % 2 === 0))._2 }
-          pr.unpersist(blocking = false)
-          val bSec = timed { pr = IncrementalIndex.bootstrapPrefixJaccard(
-            spark, b, sets.filter(col("id") % 2 === 1))._2 }
-          pr.unpersist(blocking = false)
-          var cross = 0L
-          val mSec = timed {
-            val (_, xp) = IncrementalIndex.mergePrefixIndexes(spark, a, b)
-            cross = xp.count(); xp.unpersist(blocking = false)
-          }
-          emit("pfx", tag, aSec, bSec, mSec, cross)
-        } finally Seq(a, b).foreach(r => fs.delete(new Path(r), true))
-      }
-
-      def tfidfRun(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val Seq(a, b, m) = fresh(s"tf-$tag-a", s"tf-$tag-b", s"tf-$tag-m")
-        try {
-          val aSec = timed { IncrementalIndex.bootstrapTfidf(
-            spark, a, docs.filter(col("doc_id") % 2 === 0), "doc_id", "text") }
-          val bSec = timed { IncrementalIndex.bootstrapTfidf(
-            spark, b, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text") }
-          var rows = 0L
-          val mSec = timed {
-            IncrementalIndex.mergeTfidfIndexes(spark, m, Seq(a, b))
-            rows = IncrementalIndex.readTfidfWeights(spark, m).count()
-          }
-          emit("tfidf", tag, aSec, bSec, mSec, rows)
-        } finally Seq(a, b, m).foreach(r => fs.delete(new Path(r), true))
-      }
-
-      val fams = Seq(
-        ("sim", simhashRun _), ("srp", srpRun _),
-        ("pfx", prefixRun _), ("tfidf", tfidfRun _))
-      val warmDir0 = new java.io.File(srcDir).getParent + "/sf0.01"
-      val parts = fams.map { case (fam, run) =>
-        run(warmDir0, "warm")
-        val r1 = run(srcDir, "1x")
-        SparkEntry.resetSessionCache(spark)
-        val r10 = run(cliqueDir0, "10x")
-        SparkEntry.resetSessionCache(spark)
-        val r100 = run(sf10Dir, "100x")
-        s"$r1,$r10,$r100"
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"mergefam":{${parts.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "nway32") {
-      // the 1000-shard fan-in story rested on k<=8; this pushes the
-      // one-pass-vs-fold separation to k=32 on the 10x corpus and
-      // SEPARATES the two cost terms of the one-pass merge: the single
-      // candidate pass (Spark jobs over the banded union) vs the
-      // adoption term (pure file IO over donor logs — measured
-      // standalone by adopting the same donor dirs into a scratch
-      // root). The fold twin's shards are byte-level COPIES of the
-      // bootstrapped shards (the adoptFiles mechanism), so the
-      // comparison never pays a second signature pass.
-      import graft.operators.IncrementalIndex
-      import graft.sinks.VersionedTable
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def run(dir: String, tag: String, k: Int): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = (0 until k).map(i => s"$base/graft-n32-$tag-$i")
-        val froots = (0 until k).map(i => s"$base/graft-n32f-$tag-$i")
-        val scratch = s"$base/graft-n32-$tag-scratch"
-        (roots ++ froots :+ scratch).foreach(r => fs.delete(new Path(r), true))
-        try {
-          val bootT0 = System.nanoTime()
-          (0 until k).foreach { i =>
-            IncrementalIndex.ingestMinHash(spark, roots(i),
-                docs.filter(pmod(col("doc_id"), lit(k)) === i), "doc_id", "text")
-              ._2.unpersist(blocking = false)
-          }
-          val bootSec = (System.nanoTime() - bootT0) / 1e9
-          // fold twin = byte copies, not re-ingests
-          (0 until k).foreach { i =>
-            org.apache.hadoop.fs.FileUtil.copy(fs, new Path(roots(i)),
-              fs, new Path(froots(i)), false,
-              spark.sparkContext.hadoopConfiguration)
-          }
-          // the adoption term alone: the same donor version dirs the
-          // one-pass merge will adopt, moved into a scratch root — file
-          // IO only, no Spark job
-          val donorDirs = roots.drop(1).flatMap(r =>
-            VersionedTable.liveVersionDirs(spark, r))
-          var t0 = System.nanoTime()
-          VersionedTable.adoptFiles(spark, scratch, donorDirs)
-          val adoptSec = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          val (_, xp) = IncrementalIndex.mergeManyMinHashIndexes(
-            spark, roots(0), roots.drop(1))
-          val nCross = xp.count()
-          val oneSec = (System.nanoTime() - t0) / 1e9
-          xp.unpersist(blocking = false)
-          t0 = System.nanoTime()
-          var nFold = 0L
-          (1 until k).foreach { i =>
-            val (_, x) = IncrementalIndex.mergeMinHashIndexes(spark, froots(0), froots(i))
-            nFold += x.count()
-            x.unpersist(blocking = false)
-          }
-          val foldSec = (System.nanoTime() - t0) / 1e9
-          require(nCross == nFold, s"one-pass $nCross != fold $nFold cross pairs")
-          println(f"SCALE nway32[$tag] k=$k boot $bootSec%.2fs one-pass $oneSec%.2fs " +
-            f"(adoption-alone $adoptSec%.2fs) fold $foldSec%.2fs cross $nCross")
-          f""""boot_$tag":${"%.2f".format(bootSec)},""" +
-            f""""onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""adopt_$tag":${"%.2f".format(adoptSec)},""" +
-            f""""fold_$tag":${"%.2f".format(foldSec)},"cross_$tag":$nCross"""
-        } finally (roots ++ froots :+ scratch).foreach(r => fs.delete(new Path(r), true))
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm", 4)
-      val r10k16 = run(cliqueDir0, "10x_k16", 16)
-      SparkEntry.resetSessionCache(spark)
-      val r10k32 = run(cliqueDir0, "10x_k32", 32)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"nway32":{$r10k16,$r10k32}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "nway32pfx") {
-      // d75's family at fan-in width: the prefix (no-adoption) one-pass
-      // vs fold at k=16/32 on the 10x corpus. The fold's Θ(k) term was
-      // asserted from the MinHash "nway32" precedent; this measures it
-      // for the costliest family — and SEPARATES the one-pass's two
-      // cost terms: the donor RE-SORT under the adopter's frozen
-      // element order (prefixResortProbe, read-only, run BEFORE the
-      // merge — the family's replacement for the signature families'
-      // file-IO adoption term) vs the single tagged candidate pass
-      // (one-pass wall minus re-sort). Fold twins are byte copies of
-      // the bootstrapped shards; cross-pair counts must agree (pair
-      // families emit each cross pair exactly once either way).
-      import graft.operators.IncrementalIndex
-      import graft.operators.IncrementalIndex.PrefixJaccardParams
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val pfxP = PrefixJaccardParams()
-      def setsOf(dir: String) = {
-        def sh(c: org.apache.spark.sql.Column) = ColumnBridge.column(
-          graft.functions.ShingleHashesMd5(ColumnBridge.expression(c), 5))
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").as("id"), explode(sh(col("text"))).as("elem"))
-          .distinct()
-      }
-      def run(dir: String, tag: String, k: Int): String = {
-        val sets = setsOf(dir).persist()
-        sets.count()
-        val roots = (0 until k).map(i => s"$base/graft-n32p-$tag-$i")
-        val froots = (0 until k).map(i => s"$base/graft-n32pf-$tag-$i")
-        (roots ++ froots).foreach(r => fs.delete(new Path(r), true))
-        try {
-          val bootT0 = System.nanoTime()
-          (0 until k).foreach { i =>
-            IncrementalIndex.ingestPrefixJaccard(spark, roots(i),
-                sets.filter(pmod(col("id"), lit(k)) === i), pfxP)
-              ._2.unpersist(blocking = false)
-          }
-          val bootSec = (System.nanoTime() - bootT0) / 1e9
-          (0 until k).foreach { i =>
-            org.apache.hadoop.fs.FileUtil.copy(fs, new Path(roots(i)),
-              fs, new Path(froots(i)), false, conf)
-          }
-          // the re-sort term alone, read-only, before the merge mutates
-          // the adopter
-          var t0 = System.nanoTime()
-          IncrementalIndex.prefixResortProbe(spark, roots(0), roots.drop(1), pfxP)
-          val resortSec = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          val (_, xp) = IncrementalIndex.mergeManyPrefixIndexes(
-            spark, roots(0), roots.drop(1), pfxP)
-          val nCross = xp.count()
-          val oneSec = (System.nanoTime() - t0) / 1e9
-          xp.unpersist(blocking = false)
-          t0 = System.nanoTime()
-          var nFold = 0L
-          (1 until k).foreach { i =>
-            val (_, x) = IncrementalIndex.mergePrefixIndexes(
-              spark, froots(0), froots(i), pfxP)
-            nFold += x.count()
-            x.unpersist(blocking = false)
-          }
-          val foldSec = (System.nanoTime() - t0) / 1e9
-          require(nCross == nFold, s"one-pass $nCross != fold $nFold cross pairs")
-          println(f"SCALE nway32pfx[$tag] k=$k boot $bootSec%.2fs " +
-            f"one-pass $oneSec%.2fs (resort-alone $resortSec%.2fs) " +
-            f"fold $foldSec%.2fs cross $nCross")
-          f""""boot_$tag":${"%.2f".format(bootSec)},""" +
-            f""""onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""resort_$tag":${"%.2f".format(resortSec)},""" +
-            f""""fold_$tag":${"%.2f".format(foldSec)},"cross_$tag":$nCross"""
-        } finally {
-          (roots ++ froots).foreach(r => fs.delete(new Path(r), true))
-          sets.unpersist(blocking = false)
-        }
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm", 4)
-      val r10k16 = run(cliqueDir0, "10x_k16", 16)
-      SparkEntry.resetSessionCache(spark)
-      val r10k32 = run(cliqueDir0, "10x_k32", 32)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"nway32pfx":{$r10k16,$r10k32}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "nway32tf") {
-      // the TF-IDF fan-in at k=16/32 — the re-weight family's width
-      // row, closing the "measured at k=3 only" gap: one-pass pays ONE
-      // vocabulary-keyed stats sum + ONE re-weight pass at any k; a
-      // fold of binaries re-weights the GROWING union k−1 times and
-      // discards k−2 intermediate roots. Agreement is a value-level
-      // checksum over the merged (id, tk, w) weight rows (bit-exact by
-      // the d76 spec), not a bare corpus count.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def timed[T](f: => T): (Double, T) = {
-        val t0 = System.nanoTime(); val r = f
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      def weightSum(root: String): (Long, Long) = {
-        // checksum term is pmod'ed BEFORE the sum: a raw sum of xxhash64
-        // longs overflows ANSI arithmetic at 10x row volume (measured:
-        // ARITHMETIC_OVERFLOW in the first k=16 run). 30-bit residues
-        // summed stay overflow-safe past 10^9 rows and keep the
-        // order-independent value-agreement property.
-        val row = IncrementalIndex.readTfidfWeights(spark, root)
-          .agg(count(lit(1)),
-            coalesce(sum(pmod(xxhash64(col("id"), col("tk"), col("w")),
-              lit(1000000007L))), lit(0L)))
-          .head()
-        (row.getLong(0), row.getLong(1))
-      }
-      def run(dir: String, tag: String, kShards: Int): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = (0 until kShards).map(i => s"$base/graft-ntf32-$tag-$i")
-        val outOne = s"$base/graft-ntf32-$tag-one"
-        val foldOuts = (1 until kShards).map(i => s"$base/graft-ntf32-$tag-f$i")
-        (roots ++ foldOuts :+ outOne).foreach(r => fs.delete(new Path(r), true))
-        try {
-          roots.zipWithIndex.foreach { case (r, i) =>
-            IncrementalIndex.bootstrapTfidf(spark, r,
-              docs.filter(pmod(col("doc_id"), lit(kShards)) === i),
-              "doc_id", "text")
-          }
-          val (oneSec, _) = timed(
-            IncrementalIndex.mergeTfidfIndexes(spark, outOne, roots))
-          val (foldSec, _) = timed {
-            var prev = roots(0)
-            (1 until kShards).foreach { i =>
-              IncrementalIndex.mergeTfidfIndexes(
-                spark, foldOuts(i - 1), Seq(prev, roots(i)))
-              prev = foldOuts(i - 1)
-            }
-          }
-          val (cOne, hOne) = weightSum(outOne)
-          val (cFold, hFold) = weightSum(foldOuts.last)
-          require(cOne == cFold && hOne == hFold,
-            s"tfidf one-pass weights ($cOne, $hOne) != fold ($cFold, $hFold)")
-          println(f"SCALE nway32tf[$tag] k=$kShards one-pass $oneSec%.2fs " +
-            f"fold $foldSec%.2fs weights $cOne")
-          f""""onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""fold_$tag":${"%.2f".format(foldSec)},"weights_$tag":$cOne"""
-        } finally (roots ++ foldOuts :+ outOne).foreach(
-          r => fs.delete(new Path(r), true))
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm", 4)
-      val r16 = run(cliqueDir0, "10x_k16", 16)
-      SparkEntry.resetSessionCache(spark)
-      val r32 = run(cliqueDir0, "10x_k32", 32)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"nway32tf":{$r16,$r32}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "nwayfam") {
-      // one-pass vs fold for the NEW fan-in families (exact d72,
-      // simhash d73, srp d74, prefix d75) at 10x, k=3 — the d69
-      // separation argument re-measured per family. Fold twins are
-      // byte-copies of the bootstrapped shards (no second ingest pass).
-      import graft.operators.IncrementalIndex
-      import graft.operators.IncrementalIndex.{SrpParams, PrefixJaccardParams}
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val conf = spark.sparkContext.hadoopConfiguration
-      def timed(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      // generic runner: boot(root, shardIdx) ingests; one(root, donors)
-      // and bin(root, donor) return emitted pair/delta counts
-      def run(dir: String, tag: String, fam: String,
-          boot: (String, Int, String) => Unit,
-          one: (String, Seq[String]) => Long,
-          bin: (String, String) => Long,
-          checkEqual: Boolean = true): String = {
-        val roots = (0 to 2).map(i => s"$base/graft-nf-$fam-$tag-$i")
-        val froots = (0 to 2).map(i => s"$base/graft-nff-$fam-$tag-$i")
-        (roots ++ froots).foreach(r => fs.delete(new Path(r), true))
-        try {
-          (0 to 2).foreach(i => boot(roots(i), i, dir))
-          (0 to 2).foreach(i => org.apache.hadoop.fs.FileUtil.copy(
-            fs, new Path(roots(i)), fs, new Path(froots(i)), false, conf))
-          val (oneSec, nOne) = timed(one(roots(0), roots.drop(1)))
-          val (foldSec, nFold) = timed(
-            (1 to 2).map(i => bin(froots(0), froots(i))).sum)
-          // pair families emit each cross pair exactly once either way;
-          // the exact family's fold deltas OVERLAP across steps (a
-          // 3-shard group is corrected by both binary merges), so its
-          // semantic equality is the spec's applied-verdict check, not
-          // a row-count identity
-          if (checkEqual)
-            require(nOne == nFold, s"$fam one-pass $nOne != fold $nFold")
-          println(f"SCALE nwayfam[$fam/$tag] one-pass $oneSec%.2fs " +
-            f"fold $foldSec%.2fs rows $nOne")
-          f""""${fam}_onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""${fam}_fold_$tag":${"%.2f".format(foldSec)},""" +
-            f""""${fam}_rows_$tag":$nOne"""
-        } finally (roots ++ froots).foreach(r => fs.delete(new Path(r), true))
-      }
-      def docsOf(dir: String) = spark.read
-        .parquet(s"$dir/documents.parquet").select("doc_id", "text")
-      def count(df: DataFrame): Long = {
-        val n = df.count(); df.unpersist(blocking = false); n
-      }
-      val exact = (dir: String, tag: String) => run(dir, tag, "exact",
-        (r, i, d) => IncrementalIndex.ingestExact(spark, r,
-          docsOf(d).filter(pmod(col("doc_id"), lit(3)) === i), "doc_id", "text")
-          ._2.unpersist(blocking = false),
-        (r, ds) => count(IncrementalIndex.mergeManyExactIndexes(spark, r, ds)._2),
-        (r, d) => count(IncrementalIndex.mergeExactIndexes(spark, r, d)._2),
-        checkEqual = false)
-      val sim = (dir: String, tag: String) => run(dir, tag, "sim",
-        (r, i, d) => IncrementalIndex.ingestSimHash(spark, r,
-          docsOf(d).filter(pmod(col("doc_id"), lit(3)) === i), "doc_id", "text")
-          ._2.unpersist(blocking = false),
-        (r, ds) => count(IncrementalIndex.mergeManySimHashIndexes(spark, r, ds)._2),
-        (r, d) => count(IncrementalIndex.mergeSimHashIndexes(spark, r, d)._2))
-      def vecsOf(dir: String) = {
-        val base0 = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val off = 1 + 2 * (spark.read.parquet(s"$dir/embeddings.parquet")
-          .agg(max(col("vec_id")).cast("long")).head().getLong(0) / 2 + 1)
-        base0.unionAll(base0.select((col("vec_id") + off).as("vec_id"),
-          expr("transform(v, (x, i) -> IF(i = 0, x + 0.01D, x))").as("v")))
-      }
-      var srpP: SrpParams = null
-      val srp = (dir: String, tag: String) => {
-        srpP = SrpParams(dim = 64, bitsPerTable =
-          graft.operators.Similarity.srpBitsFor(vecsOf(dir).count()),
-          bucketCap = 256)
-        run(dir, tag, "srp",
-          (r, i, d) => IncrementalIndex.ingestEmbeddings(spark, r,
-            vecsOf(d).filter(pmod(col("vec_id"), lit(3)) === i), "vec_id", "v", srpP)
-            ._2.unpersist(blocking = false),
-          (r, ds) => count(IncrementalIndex.mergeManySrpIndexes(spark, r, ds, srpP)._2),
-          (r, d) => count(IncrementalIndex.mergeSrpIndexes(spark, r, d, srpP)._2))
-      }
-      def setsOf(dir: String) = {
-        def sh(c: org.apache.spark.sql.Column) = ColumnBridge.column(
-          graft.functions.ShingleHashesMd5(ColumnBridge.expression(c), 5))
-        docsOf(dir).select(col("doc_id").as("id"),
-          explode(sh(col("text"))).as("elem")).distinct()
-      }
-      val pfxP = PrefixJaccardParams()
-      val pfx = (dir: String, tag: String) => run(dir, tag, "pfx",
-        (r, i, d) => IncrementalIndex.ingestPrefixJaccard(spark, r,
-          setsOf(d).filter(pmod(col("id"), lit(3)) === i), pfxP)
-          ._2.unpersist(blocking = false),
-        (r, ds) => count(IncrementalIndex.mergeManyPrefixIndexes(spark, r, ds, pfxP)._2),
-        (r, d) => count(IncrementalIndex.mergePrefixIndexes(spark, r, d, pfxP)._2))
-      val warmDir0 = new java.io.File(srcDir).getParent + "/sf0.01"
-      val parts = Seq(exact, sim, srp, pfx).map { f =>
-        f(warmDir0, "warm")
-        SparkEntry.resetSessionCache(spark)
-        f(cliqueDir0, "10x")
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"nwayfam":{${parts.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "nwayfam2") {
-      // one-pass vs fold at 10x for the round-12 fan-in families: TF-IDF
-      // (d76 — one re-weight pass over summed stats at any k, vs a fold
-      // paying k−1 re-weight passes over growing unions and k−1
-      // discarded roots) and SemDeDup (e28 — k id-range donors as ONE
-      // append-ordered batch vs k sequential binary merges, each
-      // re-paying the assign + candidate pass against the growing
-      // adopter). SemDeDup runs the PRODUCTION √N-centroid geometry
-      // (e24's shape): the fan-in machinery is geometry-agnostic and
-      // the demo-8 shape is corpus-quadratic by construction — capped
-      // at the gates for exactly that reason.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def timed[T](f: => T): (Double, T) = {
-        val t0 = System.nanoTime(); val r = f
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      // --- TF-IDF: 3 mod-3 shards, one-pass merge vs fold
-      def tfidfRun(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = (0 to 2).map(i => s"$base/graft-ntf-$tag-$i")
-        val outs = Seq("one", "m1", "m2").map(x => s"$base/graft-ntf-$tag-$x")
-        (roots ++ outs).foreach(r => fs.delete(new Path(r), true))
-        try {
-          (0 to 2).foreach(i => IncrementalIndex.bootstrapTfidf(spark,
-            roots(i), docs.filter(pmod(col("doc_id"), lit(3)) === i),
-            "doc_id", "text"))
-          val (oneSec, _) = timed(
-            IncrementalIndex.mergeTfidfIndexes(spark, outs(0), roots))
-          val (foldSec, _) = timed {
-            IncrementalIndex.mergeTfidfIndexes(spark, outs(1),
-              Seq(roots(0), roots(1)))
-            IncrementalIndex.mergeTfidfIndexes(spark, outs(2),
-              Seq(outs(1), roots(2)))
-          }
-          val nOne = IncrementalIndex.readTfidfCorpusCount(spark, outs(0))
-          val nFold = IncrementalIndex.readTfidfCorpusCount(spark, outs(2))
-          require(nOne == nFold, s"tfidf one-pass N $nOne != fold N $nFold")
-          println(f"SCALE nwayfam2[tfidf/$tag] one-pass $oneSec%.2fs " +
-            f"fold $foldSec%.2fs corpus $nOne")
-          f""""tfidf_onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""tfidf_fold_$tag":${"%.2f".format(foldSec)},"tfidf_n_$tag":$nOne"""
-        } finally (roots ++ outs).foreach(r => fs.delete(new Path(r), true))
-      }
-      // --- SemDeDup: adopter + 3 range donors under production geometry
-      def semRun(dir: String, tag: String): String = {
-        val base0 = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id").cast("long").as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val mm = base0.agg(min("vec_id"), max("vec_id")).head()
-        val lo = mm.getLong(0); val n = mm.getLong(1) - lo + 1
-        val off = 1 + 2 * (mm.getLong(1) / 2 + 1) // odd twin offset (e25's lesson)
-        val corpus = base0.unionAll(base0
-          .select((col("vec_id") + off).as("vec_id"),
-            expr("transform(v, (x, i) -> IF(i = 0, x + 0.01D, x))").as("v")))
-          .persist()
-        val k = math.ceil(math.sqrt((n * 2).toDouble)).toLong
-        val cents = base0.filter(col("vec_id") < lo + k)
-          .select(col("vec_id").as("cid"), col("v").as("cvec"))
-        // four contiguous ranges: adopter = low half of originals,
-        // donors = high half / low mutants / high mutants
-        val cut = lo + n / 2
-        val aPred = col("vec_id") < cut
-        val preds = Seq(
-          col("vec_id") >= cut && col("vec_id") < off,
-          col("vec_id") >= off && col("vec_id") < off + cut - lo,
-          col("vec_id") >= off + cut - lo)
-        val aOne = s"$base/graft-nsem-$tag-one"
-        val aFold = s"$base/graft-nsem-$tag-fold"
-        val dRoots = preds.indices.map(i => s"$base/graft-nsem-$tag-d$i")
-        (Seq(aOne, aFold) ++ dRoots).foreach(r => fs.delete(new Path(r), true))
-        try {
-          Seq(aOne, aFold).foreach { r =>
-            IncrementalIndex.bootstrapSemDedup(spark, r,
-              corpus.filter(aPred), "vec_id", "v", cents,
-              threshold = 0.99, cap = 2048)
-              .verdicts.unpersist(blocking = false)
-          }
-          preds.zipWithIndex.foreach { case (p, i) =>
-            IncrementalIndex.bootstrapSemDedup(spark, dRoots(i),
-              corpus.filter(p), "vec_id", "v", cents,
-              threshold = 0.99, cap = 2048)
-              .verdicts.unpersist(blocking = false)
-          }
-          // agreement = count AND an order-independent value checksum of
-          // (id, cid, kept): a chunk-replay ordering divergence that
-          // flipped kept flags while keeping counts equal would slip a
-          // bare-count comparison
-          def summarize(r: org.apache.spark.sql.DataFrame): (Long, Long) = {
-            val row = r.agg(count(lit(1)),
-              coalesce(sum(xxhash64(col("id"), col("cid"), col("kept"))), lit(0L)))
-              .head()
-            val out = (row.getLong(0), row.getLong(1))
-            r.unpersist(blocking = false); out
-          }
-          val (oneSec, (vOne, hOne)) = timed {
-            summarize(IncrementalIndex.mergeManySemDedupIndexes(
-              spark, aOne, dRoots, threshold = 0.99, cap = 2048).verdicts)
-          }
-          val (foldSec, (vFold, hFold)) = timed {
-            dRoots.map { d =>
-              summarize(IncrementalIndex.mergeSemDedupIndexes(
-                spark, aFold, d, threshold = 0.99, cap = 2048).verdicts)
-            }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-          }
-          require(vOne == vFold && hOne == hFold,
-            s"semdedup one-pass verdicts ($vOne, $hOne) != fold ($vFold, $hFold)")
-          println(f"SCALE nwayfam2[sem/$tag] one-pass $oneSec%.2fs " +
-            f"fold $foldSec%.2fs verdicts $vOne (k=$k cells)")
-          f""""sem_onepass_$tag":${"%.2f".format(oneSec)},""" +
-            f""""sem_fold_$tag":${"%.2f".format(foldSec)},"sem_verdicts_$tag":$vOne"""
-        } finally {
-          (Seq(aOne, aFold) ++ dRoots).foreach(r => fs.delete(new Path(r), true))
-          corpus.unpersist(blocking = false)
-        }
-      }
-      val warmDir0 = new java.io.File(srcDir).getParent + "/sf0.01"
-      tfidfRun(warmDir0, "warm"); semRun(warmDir0, "warm")
-      SparkEntry.resetSessionCache(spark)
-      val parts = Seq(tfidfRun(cliqueDir0, "10x"), semRun(cliqueDir0, "10x"))
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"nwayfam2":{${parts.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "serve") {
-      // e26's sharded ANN serve at admission-pass volume: the BENCH row
-      // is demo-sized (8 queries, util 0.02); here a production-shaped
-      // dedup-admission batch (10k perturbed query vectors) runs over 4
-      // id-range shards at sf1 (20k corpus vectors) and the 100x corpus
-      // (200k), against a single-index serve of the union. The re-rank
-      // input is ASSERTED to be k*shards rows per query — the
-      // never-corpus-sized claim, now counted, not argued — and a
-      // non-exhaustive probe row (nprobe=4) measures the recall the
-      // speedup buys at each geometry.
-      import graft.operators.Ivf
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val k = 5
-      def run(dir: String, tag: String, nShards: Int, nQueries: Int): String = {
-        val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select("vec_id", "embedding").persist()
-        val n = vecs.count()
-        val queries = vecs.limit(nQueries)
-          .select((col("vec_id") + 10000000L).as("vec_id"),
-            expr("transform(embedding, (x, i) -> " +
-              "IF(i = 0, CAST(x + 0.01 AS FLOAT), x))").as("embedding"))
-          .persist()
-        val nq = queries.count()
-        // id-range shards, each with its own frozen geometry (replica
-        // ids are offset, so range-partition the OBSERVED id span)
-        val mm = vecs.agg(min(col("vec_id")).cast("long"),
-          max(col("vec_id")).cast("long")).head()
-        val lo = mm.getLong(0); val hi = mm.getLong(1) + 1
-        val bounds = (0 to nShards).map(i =>
-          lo + (hi - lo) * i.toDouble / nShards)
-        val shardDfs = (0 until nShards).map(i => vecs.filter(
-          col("vec_id") >= bounds(i) && col("vec_id") < bounds(i + 1)).persist())
-        val shards = shardDfs.map { part =>
-          val cells = Ivf.cellsFor(part.count())
-          (part, Ivf.train(part, "embedding", k = cells,
-            sampleSize = math.max(4096, 8 * cells)), cells)
-        }
-        val uniCells = Ivf.cellsFor(n)
-        val uniCents = Ivf.train(vecs, "embedding", k = uniCells,
-          sampleSize = math.max(4096, 8 * uniCells))
-        def timedCount(df: DataFrame): (Double, Long) = {
-          val t0 = System.nanoTime(); val c = df.count()
-          ((System.nanoTime() - t0) / 1e9, c)
-        }
-        // the re-rank input: per-shard top-k lists, k*shards per query
-        val per = shards.map { case (corpus, cents, np) =>
-          Ivf.topK(corpus, queries, "vec_id", "embedding", k, cents, np)
-            .drop("rank")
-        }.reduce(_.unionAll(_))
-        val (_, rerankRows) = timedCount(per)
-        require(rerankRows == nq * k * nShards,
-          s"re-rank input $rerankRows != ${nq * k * nShards} (= " +
-            s"$nq queries x $k x $nShards shards)")
-        val (shardedSec, _) = timedCount(Ivf.shardedTopK(
-          shards, queries, "vec_id", "embedding", k))
-        val (singleSec, _) = timedCount(Ivf.topK(
-          vecs, queries, "vec_id", "embedding", k, uniCents, uniCells))
-        // non-exhaustive probes: the scale path a 100 TB serve takes.
-        // One recall point can't drive a recall/cost trade-off — the
-        // CURVE (nprobe 2/4/8/16, each vs the exhaustive answer on the
-        // same shards) is what an operator dials against at 100 TB.
-        val exact = Ivf.shardedTopK(
-          shards, queries, "vec_id", "embedding", k).persist()
-        val nExact = exact.count()
-        val curve = Seq(2, 4, 8, 16).map { np =>
-          // np >= every shard's cell count is the EXHAUSTIVE plan again:
-          // identical canonicalized plan to the persisted `exact`, so
-          // Spark's CacheManager serves it from cache and the wall
-          // measures a cache read, not a probe — flag it (the honest
-          // exhaustive wall is the `sharded` row)
-          val exhaustive = shards.forall { case (_, _, cells) => np >= cells }
-          val fastShards = shards.map { case (c, ce, cells) =>
-            (c, ce, math.min(np, cells)) }
-          val fast = Ivf.shardedTopK(
-            fastShards, queries, "vec_id", "embedding", k).persist()
-          val (fastSec, _) = timedCount(fast)
-          val hits = fast.select("query_id", "neighbor_id")
-            .intersect(exact.select("query_id", "neighbor_id")).count()
-          val recall = hits.toDouble / nExact
-          fast.unpersist(blocking = false)
-          println(f"SCALE serve[$tag] nprobe$np $fastSec%.2fs recall $recall%.4f" +
-            (if (exhaustive) " (== exhaustive plan, cache-served)" else ""))
-          f""""nprobe${np}_$tag":${"%.2f".format(fastSec)},""" +
-            f""""recall${np}_$tag":${"%.4f".format(recall)}""" +
-            (if (exhaustive) f""","nprobe${np}_exhaustive_$tag":true""" else "")
-        }
-        exact.unpersist(blocking = false)
-        println(f"SCALE serve[$tag] corpus $n queries $nq shards $nShards " +
-          f"sharded $shardedSec%.2fs single $singleSec%.2fs " +
-          f"rerank_rows $rerankRows")
-        (shardDfs :+ vecs :+ queries).foreach(_.unpersist(blocking = false))
-        f""""corpus_$tag":$n,"queries_$tag":$nq,""" +
-          f""""sharded_$tag":${"%.2f".format(shardedSec)},""" +
-          f""""single_$tag":${"%.2f".format(singleSec)},""" +
-          curve.mkString(",") + "," +
-          f""""rerank_rows_$tag":$rerankRows"""
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm", 2, 100)
-      val r1 = run(cliqueDir0, "sf1", 4, 10000)
-      SparkEntry.resetSessionCache(spark)
-      val r100 = run(sf10Dir, "100x", 8, 10000)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"serve":{$r1,$r100}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "router") {
-      // e29's centroid shard-router at the serve scope's geometries: the
-      // dial here is m (shards probed per query), isolated from the
-      // nprobe dial by keeping per-shard probes EXHAUSTIVE — recall loss
-      // is then shard-selection loss alone. m = shards is asserted
-      // equal to the exhaustive serve (the e29 gate, re-pinned at 10x
-      // and 100x production geometry); smaller m prices the O(shards) →
-      // O(m) probe-term cut the router exists for.
-      import graft.operators.Ivf
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val k = 5
-      def run(dir: String, tag: String, nShards: Int, nQueries: Int): String = {
-        val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select("vec_id", "embedding").persist()
-        val n = vecs.count()
-        val queries = vecs.limit(nQueries)
-          .select((col("vec_id") + 10000000L).as("vec_id"),
-            expr("transform(embedding, (x, i) -> " +
-              "IF(i = 0, CAST(x + 0.01 AS FLOAT), x))").as("embedding"))
-          .persist()
-        val nq = queries.count()
-        val mm = vecs.agg(min(col("vec_id")).cast("long"),
-          max(col("vec_id")).cast("long")).head()
-        val lo = mm.getLong(0); val hi = mm.getLong(1) + 1
-        val bounds = (0 to nShards).map(i =>
-          lo + (hi - lo) * i.toDouble / nShards)
-        val shardDfs = (0 until nShards).map(i => vecs.filter(
-          col("vec_id") >= bounds(i) && col("vec_id") < bounds(i + 1)).persist())
-        val shards = shardDfs.map { part =>
-          val cells = Ivf.cellsFor(part.count())
-          (part, Ivf.train(part, "embedding", k = cells,
-            sampleSize = math.max(4096, 8 * cells)), cells)
-        }
-        def timedCount(df: DataFrame): (Double, Long) = {
-          val t0 = System.nanoTime(); val c = df.count()
-          ((System.nanoTime() - t0) / 1e9, c)
-        }
-        val exact = Ivf.shardedTopK(
-          shards, queries, "vec_id", "embedding", k).persist()
-        val (exhSec, nExact) = timedCount(exact)
-        val ms = Seq(1, 2, 4, nShards).distinct.filter(_ <= nShards)
-        val rows = ms.map { m =>
-          val routed = Ivf.routedShardedTopK(
-            shards, queries, "vec_id", "embedding", k, mShards = m)
-          val (routedSec, _) = timedCount(routed)
-          val hits = routed.select("query_id", "neighbor_id")
-            .intersect(exact.select("query_id", "neighbor_id")).count()
-          val recall = hits.toDouble / nExact
-          if (m == nShards) require(hits == nExact,
-            s"routed serve at m=shards must equal the exhaustive serve " +
-              s"($hits of $nExact)")
-          routed.unpersist(blocking = false)
-          println(f"SCALE router[$tag] m=$m $routedSec%.2fs recall $recall%.4f")
-          f""""m${m}_$tag":${"%.2f".format(routedSec)},""" +
-            f""""recall_m${m}_$tag":${"%.4f".format(recall)}"""
-        }
-        exact.unpersist(blocking = false)
-        println(f"SCALE router[$tag] corpus $n queries $nq shards $nShards " +
-          f"exhaustive $exhSec%.2fs")
-        (shardDfs :+ vecs :+ queries).foreach(_.unpersist(blocking = false))
-        f""""corpus_$tag":$n,"shards_$tag":$nShards,""" +
-          f""""exhaustive_$tag":${"%.2f".format(exhSec)},""" + rows.mkString(",")
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm", 2, 100)
-      val r1 = run(cliqueDir0, "sf1", 4, 10000)
-      SparkEntry.resetSessionCache(spark)
-      val r100 = run(sf10Dir, "100x", 8, 10000)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"router":{$r1,$r100}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "mergewall") {
-      // the merge story's premise is that shards bootstrap CONCURRENTLY
-      // (on a cluster: disjoint executor slices). Local mode CANNOT
-      // demonstrate that overlap — one bootstrap already saturates the
-      // 32-core pool, so co-scheduling conserves CPU work and wall ≈
-      // sum is the EXPECTED healthy outcome. What this scope does pin:
-      // a lock or driver-side serialization point in the concurrent
-      // ingest path would push par ABOVE seq (serialized work plus
-      // coordination overhead); par ≤ seq clears it. FAIR scheduler so
-      // the jobs genuinely interleave (FIFO runs whole stages of job 1
-      // first and measures the scheduler, not the pipeline).
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val ec = ExecutionContext.fromExecutor(pool)
-      def run(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = Seq("sa", "sb", "pa", "pb").map(x => s"$base/graft-mw-$tag-$x")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        roots.foreach(r => fs.delete(new Path(r), true))
-        try {
-          val even = docs.filter(col("doc_id") % 2 === 0)
-          val odd = docs.filter(col("doc_id") % 2 === 1)
-          // CONCURRENT arm FIRST: any page-cache/codegen warmth it
-          // leaves behind then favors the sequential BASELINE, so the
-          // reported par/seq ratio is an upper bound (the first cut of
-          // this scope ran seq first and measured par below the
-          // max(shard) physical floor — run-order warming, not overlap)
-          var t0 = System.nanoTime()
-          val fs2 = Seq((roots(2), even), (roots(3), odd)).map { case (r, d) =>
-            Future {
-              IncrementalIndex.ingestMinHash(spark, r, d, "doc_id", "text")
-                ._2.unpersist(blocking = false)
-            }(ec)
-          }
-          // await BOTH before surfacing a failure: rethrowing while the
-          // sibling still writes would let the finally delete its dirs
-          // mid-job and bury the root cause under FileNotFound noise
-          val outcomes = fs2.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-          val parSec = (System.nanoTime() - t0) / 1e9
-          outcomes.foreach(_.get)
-          t0 = System.nanoTime()
-          IncrementalIndex.ingestMinHash(spark, roots(0), even, "doc_id", "text")
-            ._2.unpersist(blocking = false)
-          IncrementalIndex.ingestMinHash(spark, roots(1), odd, "doc_id", "text")
-            ._2.unpersist(blocking = false)
-          val seqSec = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val (_, xp) = IncrementalIndex.mergeMinHashIndexes(spark, roots(2), roots(3))
-          val nX = xp.count()
-          val mSec = (System.nanoTime() - t1) / 1e9
-          xp.unpersist(blocking = false)
-          println(f"SCALE mergewall[$tag] sequential $seqSec%.2fs " +
-            f"concurrent $parSec%.2fs merge $mSec%.2fs cross $nX")
-          f""""seq_$tag":${"%.2f".format(seqSec)},""" +
-            f""""par_$tag":${"%.2f".format(parSec)},""" +
-            f""""merge_$tag":${"%.2f".format(mSec)}"""
-        } finally roots.foreach(r => fs.delete(new Path(r), true))
-      }
-      try {
-        run(new java.io.File(srcDir).getParent + "/sf0.01", "warm")
-        val r1 = run(srcDir, "1x")
-        SparkEntry.resetSessionCache(spark)
-        val r10 = run(cliqueDir0, "10x")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-          s"""{"mergewall":{$r1,$r10}}""" + "\n")
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "mergeepoch") {
-      // exactly-once merge priced: the guarded (epoch) merge vs the
-      // unguarded one on identical shard pairs, plus a full REPLAY (the
-      // at-least-once redelivery a scheduler can hand us) — which must
-      // be guard-check cheap, not merge-shaped.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      def run(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = Seq("ua", "ub", "ga", "gb", "gp").map(x => s"$base/graft-me-$tag-$x")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        roots.foreach(r => fs.delete(new Path(r), true))
-        try {
-          val even = docs.filter(col("doc_id") % 2 === 0)
-          val odd = docs.filter(col("doc_id") % 2 === 1)
-          for (r <- Seq(0, 2)) {
-            IncrementalIndex.ingestMinHash(spark, roots(r), even, "doc_id", "text")
-              ._2.unpersist(blocking = false)
-            IncrementalIndex.ingestMinHash(spark, roots(r + 1), odd, "doc_id", "text")
-              ._2.unpersist(blocking = false)
-          }
-          var t0 = System.nanoTime()
-          val (_, xu) = IncrementalIndex.mergeMinHashIndexes(spark, roots(0), roots(1))
-          val nU = xu.count()
-          val unguardedSec = (System.nanoTime() - t0) / 1e9
-          xu.unpersist(blocking = false)
-          t0 = System.nanoTime()
-          val Some((_, xg)) = IncrementalIndex.mergeMinHashIndexesEpoch(
-            spark, roots(2), roots(4), roots(3), epochId = 1L)
-          val nG = xg.count()
-          val guardedSec = (System.nanoTime() - t0) / 1e9
-          xg.unpersist(blocking = false)
-          require(nU == nG, s"guarded $nG != unguarded $nU cross pairs")
-          t0 = System.nanoTime()
-          require(IncrementalIndex.mergeMinHashIndexesEpoch(
-            spark, roots(2), roots(4), roots(3), epochId = 1L).isEmpty)
-          val replaySec = (System.nanoTime() - t0) / 1e9
-          println(f"SCALE mergeepoch[$tag] unguarded $unguardedSec%.2fs " +
-            f"guarded $guardedSec%.2fs replay $replaySec%.3fs cross $nG")
-          f""""unguarded_$tag":${"%.2f".format(unguardedSec)},""" +
-            f""""guarded_$tag":${"%.2f".format(guardedSec)},""" +
-            f""""replay_$tag":${"%.3f".format(replaySec)}"""
-        } finally roots.foreach(r => fs.delete(new Path(r), true))
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm")
-      val r1 = run(srcDir, "1x")
-      SparkEntry.resetSessionCache(spark)
-      val r10 = run(cliqueDir0, "10x")
-      // third decade when the 100x corpus is already provisioned (the
-      // merge scope generates it); skipped otherwise — the guard cost
-      // argument is O(versions) listings, not data-shaped
-      val sf10Dir = s"$base/graft-sf10-real"
-      val r100 =
-        if (new java.io.File(s"$sf10Dir/documents.parquet").exists()) {
-          SparkEntry.resetSessionCache(spark)
-          "," + run(sf10Dir, "100x")
-        } else ""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"mergeepoch":{$r1,$r10$r100}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "tfidfmerge") {
-      // TF-IDF shard merge (d68): two half-corpus shard bootstraps (on
-      // a cluster: concurrent, wall-clock = max(shards)) + the
-      // logs-only re-weight merge, vs the one-shot union bootstrap. The
-      // merge never touches text — its cost is the re-weight join over
-      // the weight logs — so the interesting ratio is merge vs the
-      // one-shot's full tokenize+weigh pass as the corpus grows.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      def run(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val roots = Seq("os", "a", "b", "m").map(x => s"$base/graft-tmerge-$tag-$x")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        roots.foreach(r => fs.delete(new Path(r), true))
-        try {
-          def timed(f: => Unit): Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          val osSec = timed(IncrementalIndex.bootstrapTfidf(
-            spark, roots(0), docs, "doc_id", "text"))
-          val aSec = timed(IncrementalIndex.bootstrapTfidf(
-            spark, roots(1), docs.filter(col("doc_id") % 2 === 0), "doc_id", "text"))
-          val bSec = timed(IncrementalIndex.bootstrapTfidf(
-            spark, roots(2), docs.filter(col("doc_id") % 2 === 1), "doc_id", "text"))
-          val mSec = timed(IncrementalIndex.mergeTfidfIndexes(
-            spark, roots(3), Seq(roots(1), roots(2))))
-          val rows = IncrementalIndex.readTfidfWeights(spark, roots(3)).count()
-          println(f"SCALE tfidfmerge[$tag] oneshot $osSec%.2fs shards " +
-            f"$aSec%.2f/$bSec%.2f merge $mSec%.2fs weight_rows $rows")
-          f""""oneshot_$tag":${"%.2f".format(osSec)},""" +
-            f""""shard_a_$tag":${"%.2f".format(aSec)},""" +
-            f""""shard_b_$tag":${"%.2f".format(bSec)},""" +
-            f""""merge_$tag":${"%.2f".format(mSec)},"rows_$tag":$rows"""
-        } finally roots.foreach(r => fs.delete(new Path(r), true))
-      }
-      run(new java.io.File(srcDir).getParent + "/sf0.01", "warm")
-      val r1 = run(srcDir, "1x")
-      SparkEntry.resetSessionCache(spark)
-      val r10 = run(cliqueDir0, "10x")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"tfidfmerge":{$r1,$r10}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "epochcost") {
-      // price the exactly-once guard: identical bootstrap, identical
-      // batch, unguarded vs epoch-guarded ingest (markers + hwm IO +
-      // the duplicate-marker scan + the pre-epoch stats pin). The two
-      // bootstraps warm the shared kernels before either timed arm.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val batchDir = new java.io.File(srcDir).getParent + "/sf0.01"
-      def run(dir: String, tag: String): String = {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val batch = spark.read.parquet(s"$batchDir/documents.parquet")
-          .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-        val ru = s"$base/graft-epochcost-$tag-u"
-        val rg = s"$base/graft-epochcost-$tag-g"
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Seq(ru, rg).foreach(r => fs.delete(new Path(r), true))
-        try {
-          IncrementalIndex.ingestMinHash(spark, ru, docs, "doc_id", "text")
-            ._2.unpersist(blocking = false)
-          IncrementalIndex.ingestMinHash(spark, rg, docs, "doc_id", "text")
-            ._2.unpersist(blocking = false)
-          var t0 = System.nanoTime()
-          IncrementalIndex.ingestMinHash(spark, ru, batch, "doc_id", "text")
-            ._2.unpersist(blocking = false)
-          val unguarded = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          IncrementalIndex.ingestMinHashEpoch(
-              spark, rg, s"$rg/pairs", batch, "doc_id", "text", 1L)
-            .foreach(_.unpersist(blocking = false))
-          val guarded = (System.nanoTime() - t0) / 1e9
-          println(f"SCALE epochcost[$tag] unguarded $unguarded%.2fs guarded $guarded%.2fs")
-          f""""unguarded_$tag":${"%.2f".format(unguarded)},""" +
-            f""""guarded_$tag":${"%.2f".format(guarded)}"""
-        } finally Seq(ru, rg).foreach(r => fs.delete(new Path(r), true))
-      }
-      val r1 = run(srcDir, "1x")
-      SparkEntry.resetSessionCache(spark)
-      val r10 = run(cliqueDir0, "10x")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"epochcost":{$r1,$r10}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "incr") {
-      // re-measure ONLY the incremental-index probes (merge into the main
-      // artifact by hand). Three index decades (1×/10×/100× — the 100×
-      // bootstrap is a genuinely corpus-sized batch through the
-      // size-gated shuffle fallback), then the many-small-ingests
-      // compaction contrast.
-      val batchDir = new java.io.File(srcDir).getParent + "/sf0.01"
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val (b1, i1, r1) = timedIngest(spark, base, srcDir, batchDir, "1x")
-      val (b10, i10, r10) = timedIngest(spark, base, cliqueDir0, batchDir, "10x")
-      val (b100, i100, r100) = timedIngest(spark, base, sf10Dir, batchDir, "100x")
-      val many = manyIngests(spark, base, srcDir, batches = 100, every = 10)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"incr":{"ingest_1x":${"%.2f".format(i1)},""" +
-          s""""ingest_10x":${"%.2f".format(i10)},""" +
-          s""""ingest_100x":${"%.2f".format(i100)},""" +
-          s""""ingest_ratio_10x":${"%.2f".format(i10 / math.max(i1, 1e-9))},""" +
-          s""""ingest_ratio_100x":${"%.2f".format(i100 / math.max(i1, 1e-9))},""" +
-          s""""bootstrap_1x":${"%.2f".format(b1)},""" +
-          s""""bootstrap_10x":${"%.2f".format(b10)},""" +
-          s""""bootstrap_100x":${"%.2f".format(b100)},""" +
-          s""""rebuild_1x":${"%.2f".format(r1)},""" +
-          s""""rebuild_10x":${"%.2f".format(r10)},""" +
-          s""""rebuild_100x":${"%.2f".format(r100)}},""" +
-          many + "}\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope.startsWith("skewrep:")) {
-      // variance probe: run ONE query repeatedly on the skew corpus with
-      // AQE skew-split armed (VERDICT r7 task 5 — q88's 6.7–14.8 s
-      // pass-to-pass range needs attribution: plan skew or host noise)
-      val parts = scope.stripPrefix("skewrep:").split(":")
-      val name = parts(0)
-      val reps = if (parts.length > 1) parts(1).toInt else 6
-      val skewDir0 = s"$base/graft-sf1-skew"
-      ensureDir(spark, srcDir, skewDir0, "skew")
-      Seq(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8MB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2MB",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-        .foreach { case (k, v) => spark.conf.set(k, v) }
-      val fn = SparkEntry.queries(name)
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[scale] warm $name failed: ${e.getMessage}") }
-      val times = (1 to reps).map { _ =>
-        SparkEntry.resetSessionCache(spark)
-        val t0 = System.nanoTime()
-        fn(spark, skewDir0).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"SCALE skewrep $name $sec%.2fs")
-        sec
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"skewrep":{"query":"$name","reps":$reps,""" +
-          s""""times":[${times.map("%.2f".format(_)).mkString(",")}],""" +
-          s""""min":${"%.2f".format(times.min)},"max":${"%.2f".format(times.max)},""" +
-          s""""spread":${"%.2f".format(times.max / times.min)}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "semk") {
-      // e22's 0.10 utilization at sf1 is the DEMO geometry (8 frozen
-      // bootstrap cells = an 8-task parallelism floor on 32 cores), not
-      // the engine: production provisions k ∝ √N cells (SemDeDup's own
-      // rule). Run the same incremental pipeline at both geometries and
-      // report the executor-busy fraction.
-      import java.util.concurrent.atomic.AtomicLong
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val dir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, dir0, "clique")
-      val taskMs = new AtomicLong(0)
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
-      })
-      val emb = spark.read.parquet(s"$dir0/embeddings.parquet")
-      val bse = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      val mut = bse.select((col("vec_id") + 100000000L).as("vec_id"),
-        transform(col("v"), (x, i) => when(i === 0, x + 0.01).otherwise(x)).as("v"))
-      val corpus = bse.union(mut).persist()
-      val n = corpus.count()
-      val splitId = n / 4 // lower originals first (append-ordered)
-      val b1 = corpus.filter(col("vec_id") < splitId)
-      val b2 = corpus.filter(col("vec_id") >= splitId)
-      val rows = Seq("demo" -> 8, "sqrtN" -> math.sqrt(n.toDouble).toInt)
-        .map { case (tag, k) =>
-          val root = s"$base/graft-semk-$tag"
-          val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new Path(root), true)
-          try {
-            val cents = bse.filter(col("vec_id") < k)
-              .select(col("vec_id").as("cid"), col("v").as("cvec"))
-            SparkEntry.resetSessionCache(spark)
-            taskMs.set(0)
-            val t0 = System.nanoTime()
-            val r1 = IncrementalIndex.bootstrapSemDedup(
-              spark, root, b1, "vec_id", "v", cents, threshold = 0.99, cap = 2048)
-            r1.verdicts.unpersist(blocking = false)
-            val r2 = IncrementalIndex.ingestSemDedup(
-              spark, root, b2, "vec_id", "v", threshold = 0.99, cap = 2048)
-            r2.verdicts.unpersist(blocking = false)
-            val totalS = (System.nanoTime() - t0) / 1e9
-            Thread.sleep(500) // drain the listener bus
-            val cpuS = taskMs.get() / 1e3
-            val util = cpuS / (totalS * cpus.toInt)
-            println(f"SCALE semk[$tag] k=$k%d total $totalS%.2fs cpu $cpuS%.1fs util $util%.2f")
-            f""""$tag":{"k":$k%d,"total":$totalS%.2f,"cpu":$cpuS%.1f,"util":$util%.2f}"""
-          } finally fs.delete(new Path(root), true)
-        }
-      corpus.unpersist(blocking = false)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"semk":{"n":$n,${rows.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "layout") {
-      // VERDICT r8 task 2: can the d55 row-group-clustering trick attack
-      // the O(index) per-ingest banded-scan term? The candidate probe is
-      // "index rows whose (band, bucket) appears in the batch's bucket
-      // set" — for zone maps to prune, a sorted layout must leave row
-      // groups whose (band, bucket) min/max ranges MISS every probe
-      // bucket. Buckets are 64-bit hashes, so the batch's ~row×bands
-      // probe set is uniform over the key space, and a row group
-      // covering fraction f of a band's bucket range is missed with
-      // probability (1-f)^|B| ≈ 0. This scope makes that analytic
-      // argument a measured number: build the 100× index, write the
-      // MOST FAVORABLE layout (banded sidecar, globally range-clustered
-      // by (band, bucket)), read the real parquet footers, and report
-      // the fraction of row groups a real sf0.01 bookmark batch's probe
-      // set touches — plus the scan-side wall-clock of probing the
-      // sidecar vs re-deriving bands from the signature log (the status
-      // quo, which the code chose because the exploded sidecar is ~32×
-      // the rows).
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val batchDir = new java.io.File(srcDir).getParent + "/sf0.01"
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val root = s"$base/graft-layout-index"
-      val sidecar = s"$base/graft-layout-sidecar"
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true); fs.delete(new Path(sidecar), true)
-      try {
-        val docs = spark.read.parquet(s"$sf10Dir/documents.parquet")
-          .select("doc_id", "text")
-        val (_, p0) = IncrementalIndex.ingestMinHash(spark, root, docs, "doc_id", "text")
-        p0.unpersist(blocking = false)
-        val batch = spark.read.parquet(s"$batchDir/documents.parquet")
-          .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-        // the probe set a real bookmark batch carries: (band, bucket)
-        // pairs of its banded signature rows
-        val batchBuckets = IncrementalIndex.bandedOf(
-            IncrementalIndex.minHashSignatures(batch, "doc_id", "text")
-              .select("id", "sz", "sig"), 128, 32)
-          .select("band", "bucket").distinct().persist()
-        val nProbe = batchBuckets.count()
-        // status quo: bands re-derived from the signature log at read
-        val stockBanded = IncrementalIndex.bandedOf(
-          IncrementalIndex.readMinHashIndex(spark, root)
-            .select(col("id"), col("sz"), col("sig")), 128, 32)
-        var t0 = System.nanoTime()
-        val stockHits = stockBanded
-          .join(broadcast(batchBuckets), Seq("band", "bucket")).count()
-        val stockSec = (System.nanoTime() - t0) / 1e9
-        // most favorable layout for zone maps: globally range-clustered
-        t0 = System.nanoTime()
-        stockBanded.repartitionByRange(64, col("band"), col("bucket"))
-          .sortWithinPartitions("band", "bucket")
-          .write.parquet(sidecar)
-        val buildSec = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val sideHits = spark.read.parquet(sidecar)
-          .join(broadcast(batchBuckets), Seq("band", "bucket")).count()
-        val sideSec = (System.nanoTime() - t0) / 1e9
-        // zone-map census over the REAL footers: a row group is prunable
-        // iff no probe (band, bucket) can fall inside its min/max box
-        val probes = batchBuckets.collect()
-          .map(r => (r.getInt(0), r.getLong(1))).sorted
-        val probesByBand = probes.groupBy(_._1).map { case (b, xs) =>
-          b -> xs.map(_._2).sorted }
-        def anyIn(sorted: Array[Long], lo: Long, hi: Long): Boolean = {
-          val i = java.util.Arrays.binarySearch(sorted, lo)
-          val at = if (i >= 0) i else -i - 1
-          at < sorted.length && sorted(at) <= hi
-        }
-        val conf = spark.sparkContext.hadoopConfiguration
-        var total = 0L; var hit = 0L
-        fs.listStatus(new Path(sidecar)).filter(_.getPath.getName.endsWith(".parquet"))
-          .foreach { st =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-            try rd.getFooter.getBlocks.forEach { blk =>
-              total += 1
-              var bandMin = Int.MaxValue; var bandMax = Int.MinValue
-              var bMin = Long.MaxValue; var bMax = Long.MinValue
-              blk.getColumns.forEach { c =>
-                c.getPath.toDotString match {
-                  case "band" =>
-                    bandMin = c.getStatistics.genericGetMin.asInstanceOf[Number].intValue()
-                    bandMax = c.getStatistics.genericGetMax.asInstanceOf[Number].intValue()
-                  case "bucket" =>
-                    bMin = c.getStatistics.genericGetMin.asInstanceOf[Number].longValue()
-                    bMax = c.getStatistics.genericGetMax.asInstanceOf[Number].longValue()
-                  case _ =>
-                }
-              }
-              val touched = (bandMin to bandMax).exists(bd =>
-                probesByBand.get(bd).exists(anyIn(_, bMin, bMax)))
-              if (touched) hit += 1
-            } finally rd.close()
-          }
-        val frac = hit.toDouble / math.max(total, 1L)
-        println(f"SCALE layout probes=$nProbe stockScan=$stockSec%.2fs " +
-          f"sidecarScan=$sideSec%.2fs build=$buildSec%.2fs " +
-          f"rowgroups=$total hit=$hit frac=$frac%.4f " +
-          f"hits(stock=$stockHits,side=$sideHits)")
-        batchBuckets.unpersist(blocking = false)
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-          s"""{"layout":{"probe_buckets":$nProbe,""" +
-            s""""stock_scan_sec":${"%.2f".format(stockSec)},""" +
-            s""""sidecar_scan_sec":${"%.2f".format(sideSec)},""" +
-            s""""sidecar_build_sec":${"%.2f".format(buildSec)},""" +
-            s""""rowgroups":$total,"rowgroups_hit":$hit,""" +
-            s""""hit_frac":${"%.4f".format(frac)}}}""" + "\n")
-        println(s"[scale] wrote $outJson")
-      } finally {
-        fs.delete(new Path(root), true)
-        fs.delete(new Path(sidecar), true)
-      }
-      spark.stop()
-      return
-    }
-
-    if (scope == "semreboot") {
-      // VERDICT r8 task 5: price the re-bootstrap takedown path for the
-      // order-dependent SemDeDup family (retraction there is a rebuild
-      // over survivors BY DESIGN — verdicts can't replay). Time a full
-      // production-geometry (k = √N) bootstrap at three corpus decades
-      // so the takedown SLA is a number.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val rows = Seq("1x" -> srcDir, "10x" -> cliqueDir0, "100x" -> sf10Dir)
-        .map { case (tag, dir) =>
-          val root = s"$base/graft-semreboot-$tag"
-          val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new Path(root), true)
-          try {
-            val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-              .select(col("vec_id"),
-                transform(col("embedding"), x => x.cast("double")).as("v"))
-            val n = emb.count()
-            val k = math.ceil(math.sqrt(n.toDouble)).toInt
-            val cents = emb.orderBy("vec_id").limit(k)
-              .select(col("vec_id").as("cid"), col("v").as("cvec"))
-            SparkEntry.resetSessionCache(spark)
-            val t0 = System.nanoTime()
-            val r = IncrementalIndex.bootstrapSemDedup(
-              spark, root, emb, "vec_id", "v", cents, threshold = 0.99, cap = 2048)
-            r.verdicts.unpersist(blocking = false)
-            val sec = (System.nanoTime() - t0) / 1e9
-            println(f"SCALE semreboot[$tag] n=$n k=$k rebootstrap $sec%.2fs")
-            s""""$tag":{"n":$n,"k":$k,"sec":${"%.2f".format(sec)}}"""
-          } finally fs.delete(new Path(root), true)
-        }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"semreboot":{${rows.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "autocompact") {
-      // VERDICT r8 task 8: the version-count trigger
-      // (MinHashParams.autoCompactEvery) replayed over the many-ingests
-      // shape — per-ingest cost must stay flat and the version count
-      // bounded WITHOUT any manual compactLog call.
-      import graft.operators.IncrementalIndex
-      import org.apache.hadoop.fs.Path
-      val root = s"$base/graft-autocompact"
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      try {
-        val docs = spark.read.parquet(s"$srcDir/documents.parquet")
-          .select("doc_id", "text").persist()
-        docs.count()
-        val p = graft.operators.IncrementalIndex.MinHashParams(autoCompactEvery = 10)
-        val batches = 100
-        val window = 8
-        val times = (0 until batches).map { i =>
-          val b = docs.filter(pmod(col("doc_id"), lit(batches)) === i)
-          val t0 = System.nanoTime()
-          val (_, pr) = IncrementalIndex.ingestMinHash(spark, root, b, "doc_id", "text", p)
-          pr.unpersist(blocking = false)
-          (System.nanoTime() - t0) / 1e9
-        }
-        docs.unpersist(blocking = false)
-        val head = times.take(window).sum / window
-        val tail = times.takeRight(window).sum / window
-        val nv = graft.sinks.VersionedTable.versions(spark, root).size
-        println(f"SCALE autocompact first$window $head%.2fs/ingest " +
-          f"last$window $tail%.2fs/ingest versions=$nv (policy every=10, no manual call)")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-          s"""{"autocompact":{"batches":$batches,"every":10,""" +
-            s""""first":${"%.2f".format(head)},"last":${"%.2f".format(tail)},""" +
-            s""""versions":$nv}}""" + "\n")
-        println(s"[scale] wrote $outJson")
-      } finally fs.delete(new Path(root), true)
-      spark.stop()
-      return
-    }
-
-    if (scope == "tfidf") {
-      // incremental TF-IDF probes (d55) across three index decades; the
-      // 100× corpus is the sf10 real-mode replica set
-      val batchDir = new java.io.File(srcDir).getParent + "/sf0.01"
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val rows = Seq(("1x", srcDir), ("10x", cliqueDir0), ("100x", sf10Dir))
-        .map { case (tag, dir) =>
-          val (b, si, so, i) = timedTfidf(spark, base, dir, batchDir, tag)
-          s""""$tag":{"bootstrap":${"%.2f".format(b)},""" +
-            s""""score_indexed":${"%.2f".format(si)},""" +
-            s""""score_oneshot":${"%.2f".format(so)},""" +
-            s""""ingest":${"%.2f".format(i)}}"""
-        }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"tfidf":{${rows.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "prefix") {
-      // incremental prefix-filter (d59) across two index decades: fixed
-      // sf0.01 ingest vs one-shot rebuild over the union
-      val batchDir = new java.io.File(srcDir).getParent + "/sf0.01"
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      // discard one tiny pass first: codegen/JIT warm-up otherwise lands
-      // entirely on the first timed number (measured 16→53 s swings)
-      timedPrefix(spark, base, warmDir, warmDir, "warm")
-      val rows = Seq(("1x", srcDir), ("10x", cliqueDir0), ("100x", sf10Dir))
-        .map { case (tag, dir) =>
-        val (b, i, r) = timedPrefix(spark, base, dir, batchDir, tag)
-        s""""$tag":{"bootstrap":${"%.2f".format(b)},""" +
-          s""""ingest":${"%.2f".format(i)},"rebuild":${"%.2f".format(r)}}"""
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"prefix":{${rows.mkString(",")}}}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "prefixmany") {
-      // d59 log-growth probe: 100 small ingests into one prefix index,
-      // compaction contrast (the d54 many_ingests claim for d59)
-      timedPrefix(spark, base, warmDir, warmDir, "warm")
-      val row = manyPrefixIngests(spark, base, srcDir, batches = 100, every = 10)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{$row}""" + "\n")
-      println(s"[scale] wrote $outJson")
-      spark.stop()
-      return
-    }
-
-    if (scope == "retract") {
-      // retraction/purge (d56) cost at two index decades: tombstone
-      // append must be O(ids), purge O(index), post-retract ingest flat
-      val batchDir = new java.io.File(srcDir).getParent + "/sf0.01"
-      val cliqueDir0 = s"$base/graft-sf1-clique"
-      ensureDir(spark, srcDir, cliqueDir0, "clique")
-      val sf10Dir = s"$base/graft-sf10-real"
-      ensureDir(spark, srcDir, sf10Dir, "real", replicas = 100,
-        only = Some(Set("documents", "embeddings")))
-      val rows = Seq(("1x", srcDir), ("10x", cliqueDir0), ("100x", sf10Dir))
-        .map { case (tag, dir) => timedRetract(spark, base, dir, batchDir, tag) }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-        s"""{"retract":{${rows.mkString(",")}}}""" + "\n")
       println(s"[scale] wrote $outJson")
       spark.stop()
       return

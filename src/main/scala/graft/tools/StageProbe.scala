@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: stage-by-stage decomposition of the one-shot
@@ -14,18 +13,7 @@ import org.apache.spark.sql.functions._
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.graftbridge.ColumnBridge
 

@@ -182,7 +182,7 @@ class CatalogAndDriverSpec extends SparkSpec {
       "graft_quote", "t1", schema, parts, s"$work/t1", "parquet", Map.empty))
     assert(client.tableExists("graft_quote", "t1"))
     client.addPartition("graft_quote", "t1",
-      graft.catalog.PartitionDef(Seq("O'Brien"), s"$work/t1/name=O'Brien"))
+      graft.catalog.PartitionDef(Seq("name" -> "O'Brien"), s"$work/t1/name=O'Brien"))
     val shown = spark.sql("SHOW PARTITIONS `graft_quote`.`t1`")
       .collect().map(_.getString(0))
     // SHOW PARTITIONS renders the value URL-escaped (%27) — what matters

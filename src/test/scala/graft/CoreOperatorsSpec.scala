@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.{ConfigError, JobConfig, SortOrder, TableConfig}
-import graft.operators.{ApplyMapping, Bookmarks, DropNullFields}
+import graft.operators.{ApplyMapping, BatchStats, Bookmarks}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -35,7 +35,10 @@ class CoreOperatorsSpec extends SparkSpec {
     assert(out.schema == df.schema)
   }
 
-  // --- DropNullFields (P2/A2) ----------------------------------------------
+  // --- DropNullFields (P2/A2): the all-null set of BatchStats -------------
+
+  private val customerCfg = TableConfig("customer", Seq("c_custkey"), SortOrder.Asc)
+  private val regionCfg = TableConfig("region", Seq("r_regionkey"), SortOrder.Asc)
 
   test("DropNullFields drops all-null columns, keeps partially-null ones") {
     import org.apache.spark.sql.functions._
@@ -43,17 +46,17 @@ class CoreOperatorsSpec extends SparkSpec {
     val df = spark.read.parquet(sf("customer"))
       .withColumn("all_null", lit(null).cast(StringType))
       .withColumn("some_null", when(col("c_custkey") % 2 === 0, lit("x")))
-    val out = DropNullFields(df)
-    assert(!out.columns.contains("all_null"))
-    assert(out.columns.contains("some_null"))
-    assert(out.columns.contains("c_name"))
+    val allNull = BatchStats.compute(df, customerCfg).allNullColumns
+    assert(allNull.contains("all_null"))
+    assert(!allNull.contains("some_null"))
+    assert(!allNull.contains("c_name"))
   }
 
   test("DropNullFields drops NullType-schema columns without a scan") {
     import org.apache.spark.sql.functions._
     val df = spark.read.parquet(sf("region")).withColumn("nt", lit(null))
     assert(df.schema("nt").dataType == NullType)
-    assert(!DropNullFields(df).columns.contains("nt"))
+    assert(BatchStats.compute(df, regionCfg).allNullColumns.contains("nt"))
   }
 
   // --- Bookmarks (P4/A3) ---------------------------------------------------
@@ -79,16 +82,16 @@ class CoreOperatorsSpec extends SparkSpec {
     import spark.implicits._
     val hi = df.agg(org.apache.spark.sql.functions.max($"o_orderkey")).head().getLong(0)
     val lo = df.agg(org.apache.spark.sql.functions.min($"o_orderkey")).head().getLong(0)
-    assert(Bookmarks.advance(df, ordersCfg).get("o_orderkey") == hi.toString)
+    assert(BatchStats.compute(df, ordersCfg).bookmark.get("o_orderkey") == hi.toString)
     val desc = ordersCfg.copy(sortOrder = SortOrder.Desc)
-    assert(Bookmarks.advance(df, desc).get("o_orderkey") == lo.toString)
+    assert(BatchStats.compute(df, desc).bookmark.get("o_orderkey") == lo.toString)
   }
 
   test("composite bookmark is lexicographic (predicate and advance agree)") {
     import spark.implicits._
     val df = Seq((5L, 9), (6L, 1), (6L, 5)).toDF("k1", "k2")
     val cfg = TableConfig("t", Seq("k1", "k2"), SortOrder.Asc)
-    val bk = Bookmarks.advance(df, cfg).get
+    val bk = BatchStats.compute(df, cfg).bookmark.get
     assert(bk == Map("k1" -> "6", "k2" -> "5")) // lexicographic max, not per-key max
     val next = Seq((6L, 5), (6L, 6), (7L, 0)).toDF("k1", "k2")
     val out = Bookmarks.filterNew(next, cfg, bk).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -97,7 +100,7 @@ class CoreOperatorsSpec extends SparkSpec {
 
   test("bookmark advance on empty batch is None") {
     val df = spark.read.parquet(sf("orders")).filter("o_orderkey < 0")
-    assert(Bookmarks.advance(df, ordersCfg).isEmpty)
+    assert(BatchStats.compute(df, ordersCfg).bookmark.isEmpty)
   }
 
   test("DESC bookmark filter reads keys below the bookmark") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.catalog.SchemaEvolution
 import graft.config.{SortOrder, TableConfig}
-import graft.operators.Bookmarks
+import graft.operators.{BatchStats, Bookmarks}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -57,7 +57,7 @@ class PropertySpec extends SparkSpec {
         Gen.chooseNum(-500L, 500L)) { (keys, bookmark) =>
       val df = keys.toDF("k")
       val fresh = Bookmarks.filterNew(df, cfg, Map("k" -> bookmark.toString))
-      Bookmarks.advance(fresh, cfg) match {
+      BatchStats.compute(fresh, cfg).bookmark match {
         case Some(bk) => bk("k").toLong > bookmark
         case None     => keys.forall(_ <= bookmark)
       }
@@ -69,7 +69,7 @@ class PropertySpec extends SparkSpec {
     val cfg = TableConfig("t", Seq("k"), SortOrder.Asc)
     check(Prop.forAll(Gen.nonEmptyListOf(Gen.chooseNum(-1000L, 1000L))) { keys =>
       val df = keys.toDF("k")
-      val bk = Bookmarks.advance(df, cfg).get
+      val bk = BatchStats.compute(df, cfg).bookmark.get
       Bookmarks.filterNew(df, cfg, bk).isEmpty
     }, tests = 20)
   }
@@ -79,7 +79,7 @@ class PropertySpec extends SparkSpec {
     val cfg = TableConfig("t", Seq("k"), SortOrder.Desc)
     check(Prop.forAll(Gen.nonEmptyListOf(Gen.chooseNum(-1000L, 1000L))) { keys =>
       val df = keys.toDF("k")
-      val bk = Bookmarks.advance(df, cfg).get
+      val bk = BatchStats.compute(df, cfg).bookmark.get
       bk("k").toLong == keys.min && Bookmarks.filterNew(df, cfg, bk).isEmpty
     }, tests = 20)
   }
@@ -90,7 +90,7 @@ class PropertySpec extends SparkSpec {
     val tupleGen = Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(0L, 20L), Gen.chooseNum(0, 20)))
     check(Prop.forAll(tupleGen, tupleGen) { (batch1, batch2) =>
       val df1 = batch1.toDF("k1", "k2")
-      val bk = Bookmarks.advance(df1, cfg).get
+      val bk = BatchStats.compute(df1, cfg).bookmark.get
       val hi = batch1.max // lexicographic max of (Long, Int)
       val expected = batch2.filter(t => implicitly[Ordering[(Long, Int)]].gt(t, hi)).toSet
       val got = Bookmarks.filterNew(batch2.toDF("k1", "k2"), cfg, bk)

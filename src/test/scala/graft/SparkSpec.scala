@@ -15,22 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: the 100-entry default codegen cache is smaller
-      // than one index pipeline — the heavy suites re-paid compilation
-      // per test without this
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // one stable classloader + stable generated class names: see Bench.scala
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val s = Sessions.local(4, Some("graft-test"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
