@@ -88,12 +88,31 @@ object IncrementalIndex {
       broadcastRowLimit: Long = DefaultBroadcastRowLimit,
       autoCompactEvery: Int = 0)
 
-  /** Candidate pairs for an incremental ingest, from banded frames
+  /** Candidate pairs for an ingest or a shard merge, from banded frames
     * (doc, rk, band, bucket) — `bandedI` the persisted index, `bandedB`
-    * the new batch — and the PRE-AGGREGATED over-cap bucket list `over`
+    * the batch (a new ingest batch, or the union of the donor indexes a
+    * merge adopts) — and the PRE-AGGREGATED over-cap bucket list `over`
     * ((band, bucket) rows; see [[bucketStats]]: occupancy is maintained
     * index METADATA, summed from per-batch deltas, never recounted from
-    * the index itself). THE scale properties of this formulation:
+    * the index itself).
+    *
+    * Which pairs come out is set by ONE value, `donors` — the number of
+    * donor shards the batch holds:
+    *
+    *  - 0 (an ingest): index×batch and batch×batch pairs;
+    *  - 1 (a merge with one donor — every binary merge): index×donor
+    *    pairs only. The donor's internal pairs are already in its own
+    *    pair log, so the batch self-join — a second index-sized join,
+    *    the dominant merge term at scale — never enters the plan;
+    *  - 2 or more (an N-way merge): the batch rows carry an `sh` shard
+    *    tag (donors 1..k; the index side is implicitly tag 0), and
+    *    batch×batch pairs are emitted only ACROSS tags — filtering inside
+    *    the join beats generating the intra-shard pairs, running them
+    *    through the distinct and probing shard membership afterwards.
+    *
+    * Shard ids are disjoint, so at every donor count each emitted pair
+    * is one the shard logs do not already hold. THE scale properties of
+    * this formulation:
     *
     *  - in the intended regime (a bookmark batch far smaller than the
     *    index, `batchRows` ≤ `broadcastRowLimit`) the index NEVER enters
@@ -114,9 +133,10 @@ object IncrementalIndex {
     *  - sub-cap batch×batch pairs come from a batch-sized self-join;
     *  - over-cap buckets (mega-clusters, rare by construction): ONLY
     *    their rows shuffle, into the same rank-chunk O(n·cap) scheme the
-    *    one-shot paths use, batch-touching pairs kept. The whole branch
-    *    is skipped — no second index pass — when `over` is empty, which
-    *    a driver-side probe of the (bucket-count-bounded) list decides.
+    *    one-shot paths use, batch-touching (merge: cross-shard) pairs
+    *    kept. The whole branch is skipped — no second index pass — when
+    *    `over` is empty, which a driver-side probe of the
+    *    (bucket-count-bounded) list decides.
     *
     * Emitted pairs are normalized to a < b. The candidate SET can differ
     * from the one-shot capped run's (chunk geometry sees only
@@ -125,29 +145,13 @@ object IncrementalIndex {
     * d54/e21 oracle equality gates; under ENGAGED caps the preserved
     * invariant is connectivity (IncrementalIndexSpec pins it).
     */
-  /** `crossOnly` (the binary shard merges): emit ONLY index×batch
-    * pairs, skipping the batch self-join outright. When the batch is a
-    * whole donor index, its internal pairs are already in the donor's
-    * own pair log — generating them to drop them later costs a second
-    * index-sized self-join, the dominant term of a merge at scale.
-    *
-    * `batchSharded` (the N-way merge): the batch side carries an `sh`
-    * shard tag (donors 1..k; the index side is implicitly tag 0), and
-    * batch×batch pairs are emitted only ACROSS different tags — the
-    * intra-shard pairs already sit in each shard's own pair log, and
-    * filtering inside the join beats generating them, running them
-    * through the distinct, and probing shard membership afterwards.
-    */
-  private def incrementalBucketCandidates(
+  private[graft] def incrementalBucketCandidates(
       bandedI: DataFrame, bandedB: DataFrame, bucketCap: Int,
       over: Option[DataFrame], batchRows: Long,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit,
-      crossOnly: Boolean = false,
-      batchSharded: Boolean = false): DataFrame = {
+      donors: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(bucketCap > 0, s"bucketCap must be positive, got $bucketCap")
-    require(!(crossOnly && batchSharded),
-      "crossOnly (binary merge) and batchSharded (N-way merge) are exclusive")
     // `over` arrives as an already-materialized LOCAL relation (see
     // [[overCapAndBatchRows]]) or None. In the None case — the common one —
     // the over-cap split joins never enter the plan at all: both sides
@@ -176,21 +180,23 @@ object IncrementalIndex {
           col("i.doc") =!= col("b.doc"))
       .select(least(col("i.doc"), col("b.doc")).as("a"),
         greatest(col("i.doc"), col("b.doc")).as("b"))
-    def bbPairs = {
-      val crossShard =
-        if (batchSharded) col("l.sh") =!= col("r.sh") else lit(true)
+    def bbPairs(keep: org.apache.spark.sql.Column) =
       normalB.as("l").join(hintB(normalB.as("r")),
           col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-            col("l.doc") < col("r.doc") && crossShard)
+            col("l.doc") < col("r.doc") && keep)
         .select(col("l.doc").as("a"), col("r.doc").as("b"))
+    val subCap = donors match {
+      case 0 => biPairs.unionAll(bbPairs(lit(true)))
+      case 1 => biPairs
+      case _ => biPairs.unionAll(bbPairs(col("l.sh") =!= col("r.sh")))
     }
-    val subCap = if (crossOnly) biPairs else biPairs.unionAll(bbPairs)
     if (!anyOver) return subCap.distinct()
     // over-cap buckets: rank-chunk over index∪batch members (same scheme
-    // as the one-shot caps), only batch-touching pairs emitted
-    val bigB1 = if (batchSharded) bigB else bigB.withColumn("sh", lit(1))
+    // as the one-shot caps), only batch-touching pairs emitted; below two
+    // donors the whole batch side is one shard, tag 1
+    val shB = if (donors >= 2) col("sh") else lit(1)
     val big = bigI.withColumn("sh", lit(0))
-      .unionAll(bigB1.select(bigI.columns.map(col) :+ col("sh"): _*))
+      .unionAll(bigB.select(bigI.columns.map(col) :+ shB.as("sh"): _*))
       .withColumn("chunk", floor(
         (row_number().over(Window.partitionBy("band", "bucket")
           .orderBy("rk", "doc")) - 1) / lit(bucketCap.toLong)))
@@ -201,8 +207,8 @@ object IncrementalIndex {
     val bigPairs = keyed("l").join(keyed("r"), Seq("band", "bucket", "k"))
       .filter(col("k") === greatest(col("l_c"), col("r_c")) &&
         col("l_doc") < col("r_doc"))
-      .filter(if (crossOnly || batchSharded) col("l_sh") =!= col("r_sh")
-        else col("l_sh") =!= lit(0) || col("r_sh") =!= lit(0))
+      .filter(if (donors == 0) col("l_sh") =!= lit(0) || col("r_sh") =!= lit(0)
+        else col("l_sh") =!= col("r_sh"))
       .select(col("l_doc").as("a"), col("r_doc").as("b"))
     subCap.unionAll(bigPairs).distinct()
   }
@@ -533,19 +539,19 @@ object IncrementalIndex {
     * with the donor playing the batch role, and banding collisions are
     * identical either way because signatures are pure per-row functions
     * of text under the SHARED params (both shards MUST be built with
-    * the same `p`; ids must be disjoint). Exchange discipline is the
-    * ingest path's with one merge-specific cut: candidate generation
-    * runs `crossOnly` — the donor self-join (a second index-sized join,
-    * the dominant merge term at scale) never executes, every candidate
-    * is index×donor by construction (disjoint ids), and verification
-    * broadcasts only candidate-bounded frames over map-side scans. The
-    * d64 gate pins the equality; the merged index ingests onward
-    * exactly like a one-shot-built one (IncrementalIndexSpec).
+    * the same `p`; ids must be disjoint). This is
+    * [[mergeManyMinHashIndexes]] with one donor: at one donor the
+    * candidate pass never joins the donor with itself (a second
+    * index-sized join, the dominant merge term at scale), every
+    * candidate is index×donor by construction (disjoint ids), and
+    * verification broadcasts only candidate-bounded frames over map-side
+    * scans. The d64 gate pins the equality; the merged index ingests
+    * onward exactly like a one-shot-built one (IncrementalIndexSpec).
     */
   def mergeMinHashIndexes(spark: SparkSession, root: String,
       donorRoot: String,
       p: MinHashParams = MinHashParams()): (Long, DataFrame) =
-    mergeMinHashImpl(spark, root, donorRoot, p, None).get
+    mergeManyMinHashIndexes(spark, root, Seq(donorRoot), p)
 
   /** Exactly-once shard merge — [[mergeMinHashIndexes]] under the epoch
     * protocol, for orchestrators that may re-deliver a merge step (a
@@ -567,79 +573,13 @@ object IncrementalIndex {
     * `epochId` must be monotone per adopter lineage (shared with any
     * ingest epochs on `root`) and STABLE across replays — unlike batch
     * ingests there is no bookmark boundary to derive it from, so the
-    * orchestrator owns it (e.g. the DAG step's sequence number).
+    * orchestrator owns it (e.g. the DAG step's sequence number). This
+    * is [[mergeManyMinHashIndexesEpoch]] with one donor.
     */
   def mergeMinHashIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoot: String, epochId: Long,
       p: MinHashParams = MinHashParams()): Option[(Long, DataFrame)] =
-    mergeMinHashImpl(spark, root, donorRoot, p, Some((epochId, pairsRoot)))
-
-  private def mergeMinHashImpl(spark: SparkSession, root: String,
-      donorRoot: String, p: MinHashParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // never cache the full-width logs: `hs` (the per-doc shingle-hash
-    // set) dominates the row, and every consumer below needs either the
-    // narrow (id, sz, sig) banding slice or a candidate-pruned (id, hs)
-    // slice — column-pruned parquet scans beat materializing the wide
-    // arrays into executor memory at index scale
-    val donor = readMinHashIndex(spark, donorRoot)
-    val index = readMinHashIndex(spark, root)
-    val bandedD = bandedOf(
-      donor.select("id", "sz", "sig"), p.numHashes, p.bands).persist()
-    try {
-      val donorStats = bucketStats(bandedD)
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        donorStats, p.bucketCap, epoch.map(_._1))
-      // crossOnly: donor-internal candidates never generate — the donor
-      // self-join (a second index-sized join, the dominant merge term at
-      // scale) is skipped outright, and because shard ids are disjoint
-      // every emitted candidate is index×donor by construction, so no
-      // membership probe is needed either
-      val cands = incrementalBucketCandidates(
-        bandedOf(index.select("id", "sz", "sig"), p.numHashes, p.bands),
-        bandedD, p.bucketCap, over, donorRows, p.broadcastRowLimit,
-        crossOnly = true).persist()
-      try {
-        val shingled = index.select(col("id"), col("hs"))
-          .unionAll(donor.select(col("id"), col("hs")))
-        // persisted + materialized inside, while the caches are hot
-        val verified = Dedup.verifyJaccard(cands, shingled, "id", "hs",
-          p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        // LOG ADOPTION: the donor's version files are immutable parquet
-        // — commit byte-level copies into root's logs (no decode, no
-        // re-encode, no Spark job; the whole data move is file IO).
-        // Raw donor files include any retracted rows, so the donor's
-        // tombstones adopt FIRST (an unmatched tombstone is a harmless
-        // no-op — the conservative crash order), then its stats deltas
-        // (a stats-only crash merely overcounts occupancy), then the
-        // signature files — the visibility point for future candidates.
-        val donorTombs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "tombstones"))
-        val donorStatsDirs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "bucketstats"))
-        val donorSigDirs = VersionedTable.liveVersionDirs(spark, donorRoot)
-        val v = epoch match {
-          case None =>
-            if (donorTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, donorStatsDirs)
-            VersionedTable.adoptFiles(spark, root, donorSigDirs)
-          case Some((e, pairsRoot)) =>
-            if (donorTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-            adoptEpochLeg(spark, statsRoot, donorStatsDirs, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, donorSigDirs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeManyMinHashIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId, p)
 
   /** N-WAY MinHash shard merge — how a 1000-shard bootstrap actually
     * completes. Folding [[mergeMinHashIndexes]] pairwise costs N−1
@@ -651,15 +591,14 @@ object IncrementalIndex {
     * iterations — and keeps a pair iff its sides live in DIFFERENT
     * shards (adopter counts as a shard): shard-internal pairs are in
     * the shards' own logs, so emitting them again would double the
-    * union. Shard membership is resolved the merge's usual way —
-    * candidate-bounded broadcast probes, one map-side scan per shard,
-    * no index-sized shuffle. Cap engagement uses the adopter's
-    * maintained stats plus the union-donor delta: exactly what a
-    * one-shot build over the union would see, so the connectivity
-    * invariant under engaged caps carries over unchanged. Adoption
-    * order across donors preserves the binary merge's conservative
-    * crash ordering GLOBALLY: every donor's tombstones first (an
-    * unmatched tombstone is a no-op), then every stats delta
+    * union. Shard membership is resolved inside the candidate join by
+    * per-donor shard tags — no index-sized shuffle, no membership probe.
+    * Cap engagement uses the adopter's maintained stats plus the
+    * union-donor delta: exactly what a one-shot build over the union
+    * would see, so the connectivity invariant under engaged caps
+    * carries over unchanged. Adoption keeps the conservative crash
+    * ordering GLOBALLY ([[adoptDonors]]): every donor's tombstones first
+    * (an unmatched tombstone is a no-op), then every stats delta
     * (overcount-only), then the signature files — no signature is
     * visible before the tombstones and stats that govern it. Returns
     * (last committed version, verified cross-shard pairs); accumulated
@@ -670,124 +609,141 @@ object IncrementalIndex {
   def mergeManyMinHashIndexes(spark: SparkSession, root: String,
       donorRoots: Seq[String],
       p: MinHashParams = MinHashParams()): (Long, DataFrame) =
-    mergeManyMinHashImpl(spark, root, donorRoots, p, None).get
+    mergeBanded(spark, root, donorRoots, minHashFamily(p), None).get
 
   /** Exactly-once N-way merge — [[mergeManyMinHashIndexes]] under the
     * epoch protocol (crash-window analysis at
     * [[mergeMinHashIndexesEpoch]]; the orchestrator owns `epochId`).
-    * Adoption granularity differs from the unguarded path on purpose:
-    * each leg adopts ALL donors' files in ONE guarded version, so a leg
+    * Each leg adopts ALL donors' files in ONE guarded version, so a leg
     * is atomic — there is no "three of eight donors adopted" window to
     * reason about, the leg either committed for every donor or none.
     */
   def mergeManyMinHashIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoots: Seq[String], epochId: Long,
       p: MinHashParams = MinHashParams()): Option[(Long, DataFrame)] =
-    mergeManyMinHashImpl(spark, root, donorRoots, p, Some((epochId, pairsRoot)))
+    mergeBanded(spark, root, donorRoots, minHashFamily(p), Some((epochId, pairsRoot)))
 
-  private def mergeManyMinHashImpl(spark: SparkSession, root: String,
-      donorRoots: Seq[String], p: MinHashParams,
+  private def minHashFamily(p: MinHashParams) = BandedFamily(
+    readMinHashIndex(_, _),
+    rows => bandedOf(rows.select("id", "sz", "sig"), p.numHashes, p.bands),
+    (cands, rows) => Dedup.verifyJaccard(cands, rows.select("id", "hs"),
+      "id", "hs", p.threshold,
+      broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit)),
+    p.bucketCap, p.broadcastRowLimit)
+
+  /** What the banded merge engine ([[mergeBanded]]) needs to know about
+    * one adoption family (MinHash, SimHash, SRP): how to read its live
+    * index rows, how to band them — selecting only the narrow banding
+    * columns — and how to verify a candidate list against live rows
+    * (returning the verified pairs persisted and materialized).
+    */
+  private final case class BandedFamily(
+      read: (SparkSession, String) => DataFrame,
+      banded: DataFrame => DataFrame,
+      verify: (DataFrame, DataFrame) => DataFrame,
+      bucketCap: Int, broadcastRowLimit: Long)
+
+  /** The shard merge of every adoption family, for any number of donors
+    * (a binary merge is one donor): ONE candidate pass with the union of
+    * all donors playing the batch role, each donor's banded rows tagged
+    * with its shard (see [[incrementalBucketCandidates]] for what the
+    * donor count keeps), verification over the adopter's and donors'
+    * live rows, then [[adoptDonors]]. Cap engagement uses the adopter's
+    * maintained stats plus the union-donor delta, pinned below the
+    * epoch's own stats leg on a replay ([[statsBeforeEpoch]]).
+    * Returns None when the epoch is already committed.
+    */
+  private def mergeBanded(spark: SparkSession, root: String,
+      donorRoots: Seq[String], f: BandedFamily,
       epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    require(donorRoots.nonEmpty, "mergeManyMinHashIndexes needs donors")
+    require(donorRoots.nonEmpty, "a shard merge needs donors")
     if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
       return None
-    // same discipline as the binary merge: no full-width log caches —
-    // banding reads the narrow (id, sz, sig) slice, verification a
-    // candidate-pruned (id, hs) slice, both column-pruned parquet scans
-    val donors = donorRoots.map(r => readMinHashIndex(spark, r))
-    val donorAll = donors.reduce(_.unionAll(_))
-    val index = readMinHashIndex(spark, root)
-    // each donor's banded rows carry its shard tag (i+1; the adopter is
-    // tag 0 inside the candidate machinery): batchSharded filters
-    // intra-shard pairs INSIDE the candidate join, so they are never
-    // generated, never hit the distinct, and no post-hoc membership
-    // probe per shard is needed — every candidate is cross-shard by
-    // construction (ids are disjoint across shards)
+    // never cache the full-width logs: the verify payload (shingle-hash
+    // set, signature, vector) dominates the row, and every consumer
+    // below needs either the narrow banding slice or a candidate-pruned
+    // verify slice — column-pruned parquet scans beat materializing the
+    // wide arrays into executor memory at index scale
+    val donors = donorRoots.map(f.read(spark, _))
+    val index = f.read(spark, root)
     val bandedD = donors.zipWithIndex.map { case (d, i) =>
-      bandedOf(d.select("id", "sz", "sig"), p.numHashes, p.bands)
-        .withColumn("sh", lit(i + 1))
+      f.banded(d).withColumn("sh", lit(i + 1))
     }.reduce(_.unionAll(_)).persist()
     try {
-      val donorStats = bucketStats(bandedD)
-      val statsRoot = subRoot(root, "bucketstats")
       // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        donorStats, p.bucketCap, epoch.map(_._1))
-      val cands = incrementalBucketCandidates(
-        bandedOf(index.select("id", "sz", "sig"), p.numHashes, p.bands),
-        bandedD, p.bucketCap, over, donorRows, p.broadcastRowLimit,
-        batchSharded = true).persist()
+      val (over, donorRows) = overCapAndBatchRows(spark,
+        subRoot(root, "bucketstats"), bucketStats(bandedD), f.bucketCap,
+        epoch.map(_._1))
+      val cands = incrementalBucketCandidates(f.banded(index), bandedD,
+        f.bucketCap, over, donorRows, f.broadcastRowLimit,
+        donors = donorRoots.size).persist()
       try {
-        val shingled = index.select(col("id"), col("hs"))
-          .unionAll(donorAll.select(col("id"), col("hs")))
-        // persisted + materialized inside, while the caches are hot
-        val verified = Dedup.verifyJaccard(cands, shingled, "id", "hs",
-          p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        val allTombs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-        val allStats = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "bucketstats")))
-        val allSigs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, dr))
-        val v = epoch match {
-          case None =>
-            if (allTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, allStats)
-            VersionedTable.adoptFiles(spark, root, allSigs)
-          case Some((e, pairsRoot)) =>
-            if (allTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-            adoptEpochLeg(spark, statsRoot, allStats, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, allSigs, e)
-        }
-        Some((v, verified))
+        val verified = f.verify(cands, (index +: donors).reduce(_.unionAll(_)))
+        Some((adoptDonors(spark, root, donorRoots, identity,
+          Some(subRoot(_, "bucketstats")), epoch, verified), verified))
       } finally cands.unpersist(blocking = false)
     } finally bandedD.unpersist(blocking = false)
   }
 
-  /** The exactly-once commit protocol shared by every `*Epoch` ingest
-    * (crash-window analysis at [[ingestMinHashEpoch]]): the stats
-    * sidecar first as GUARDED LEG 0 — marker + hwm like a data leg, so
-    * a replay never double-commits the occupancy delta, and the
-    * artifact recompute pins its stats read BELOW the marker
-    * ([[statsBeforeEpoch]]) so cap engagement is identical either way —
-    * then each data `leg` IN ORDER under an `_epoch-<id>` marker riding
-    * the atomic staging rename, hwm recorded after each visibility,
-    * already-committed legs skipped. The LAST leg is the caller's
-    * replay key: "last leg committed" implies every earlier leg
-    * committed too, and a replay that finds only a PREFIX of the legs
-    * committed recomputes IDENTICAL artifacts — every family's outputs
-    * are pure functions of the batch and the index state BEFORE the
-    * epoch, and the replay-key leg (the one every read path unions)
-    * never committed in that window — then re-commits exactly the
-    * missing suffix. Returns the committed version of the last leg.
-    *
-    * Single-writer-per-lineage is ENFORCED loud, not just documented:
-    * after every leg write the root is checked for a second version
-    * carrying the same epoch marker (two writers racing the same epoch
-    * both pass the pre-write committed check, then both rename — the
-    * only silent-double-data window) and the loser throws with the
-    * duplicate versions named instead of leaving them to double reads.
+  /** LOG ADOPTION of every donor into `root`, in the crash-safe leg
+    * order: the donors' version files are immutable parquet, so they
+    * commit into the adopter's logs as byte-level copies (no decode, no
+    * re-encode, no Spark job; the whole data move is file IO). Raw donor
+    * files include any retracted rows, so the donors' tombstones adopt
+    * FIRST (an unmatched tombstone is a harmless no-op), then the
+    * `statsLog` sub-log if the family keeps one (a stats-only crash
+    * merely overcounts occupancy), then — epoch path only — the merge's
+    * `result` frame as a write leg into the caller's result root, and
+    * last the data log (`dataLog(root)`), the replay key and the
+    * visibility point every read path unions. On the epoch path each
+    * leg adopts ALL donors' files in ONE guarded version, so a leg
+    * either committed for every donor or for none. Returns the data
+    * log's committed version.
     */
-  /** One guarded WRITE leg outside [[commitEpoch]] (the merge paths
-    * interleave write legs with adoption legs, so they sequence legs
-    * themselves): skip if the epoch already committed here, else write
-    * under the `_epoch-<id>` marker with the single-writer check and
-    * the hwm witness — identical semantics to a commitEpoch leg.
+  private def adoptDonors(spark: SparkSession, root: String,
+      donorRoots: Seq[String], dataLog: String => String,
+      statsLog: Option[String => String], epoch: Option[(Long, String)],
+      result: DataFrame): Long = {
+    def dirs(log: String => String) =
+      donorRoots.flatMap(dr => VersionedTable.liveVersionDirs(spark, log(dr)))
+    def adopt(log: String => String, srcs: Seq[org.apache.hadoop.fs.Path]) = {
+      def move(markers: Seq[String]) =
+        VersionedTable.adoptFiles(spark, log(root), srcs, markers = markers)
+      epoch.fold(move(Nil)) { case (e, _) => epochLeg(spark, log(root), e)(move) }
+    }
+    val tombs = dirs(tombstonesRoot)
+    if (tombs.nonEmpty) adopt(tombstonesRoot, tombs)
+    statsLog.foreach(l => adopt(l, dirs(l)))
+    epoch.foreach { case (e, resultRoot) =>
+      writeEpochLeg(spark, result, resultRoot, e) }
+    adopt(dataLog, dirs(dataLog))
+  }
+
+  /** One guarded leg of an epoch commit — a write or a log adoption;
+    * `commit` commits the leg's version with the marker names it is
+    * given. The leg is skipped when the epoch already committed at
+    * `legRoot` (reporting the version carrying its marker, see
+    * [[committedLegVersion]]); otherwise it commits under the
+    * `_epoch-<id>` marker riding the atomic staging rename, is checked
+    * for a second writer, and has its hwm witness recorded after
+    * visibility. On an adoption leg the marker is what keeps a replayed
+    * merge from adopting the same donor files twice — the window that
+    * would otherwise DOUBLE every donor row in the adopter's log.
     */
-  private def writeEpochLeg(spark: SparkSession, df: DataFrame,
-      legRoot: String, epochId: Long): Long = {
+  private def epochLeg(spark: SparkSession, legRoot: String, epochId: Long)(
+      commit: Seq[String] => Long): Long = {
     if (epochCommittedIn(spark, legRoot, epochId))
       return committedLegVersion(spark, legRoot, epochId)
-    val v = VersionedTable.write(spark, df, legRoot,
-      markers = Seq(s"_epoch-$epochId"))
+    val v = commit(Seq(s"_epoch-$epochId"))
     assertSingleEpochWriter(spark, legRoot, epochId)
     recordEpochHwm(spark, legRoot, epochId)
     v
   }
+
+  private def writeEpochLeg(spark: SparkSession, df: DataFrame,
+      legRoot: String, epochId: Long): Long =
+    epochLeg(spark, legRoot, epochId)(
+      markers => VersionedTable.write(spark, df, legRoot, markers = markers))
 
   /** The version a SKIPPED (looks-committed) non-final leg reports — and
     * the guard that keeps "looks committed" honest. `epochCommittedIn`
@@ -819,24 +775,30 @@ object IncrementalIndex {
           "version between a crash and this replay (re-run the step " +
           "under a fresh epoch id after verifying the leg's rows)"))
 
-  /** One guarded ADOPTION leg: the log-adoption data move
-    * ([[graft.sinks.VersionedTable.adoptFiles]]) under the same
-    * `_epoch-<id>` marker + hwm protocol as a write leg. The marker
-    * rides the adoption's atomic staging rename, so a replayed merge
-    * can never adopt the same donor files twice — the window that would
-    * otherwise DOUBLE every donor row in the adopter's log.
+  /** The exactly-once commit protocol shared by every `*Epoch` ingest
+    * (crash-window analysis at [[ingestMinHashEpoch]]): the stats
+    * sidecar first as GUARDED LEG 0 — marker + hwm like a data leg, so
+    * a replay never double-commits the occupancy delta, and the
+    * artifact recompute pins its stats read BELOW the marker
+    * ([[statsBeforeEpoch]]) so cap engagement is identical either way —
+    * then each data `leg` IN ORDER under an `_epoch-<id>` marker riding
+    * the atomic staging rename, hwm recorded after each visibility,
+    * already-committed legs skipped. The LAST leg is the caller's
+    * replay key: "last leg committed" implies every earlier leg
+    * committed too, and a replay that finds only a PREFIX of the legs
+    * committed recomputes IDENTICAL artifacts — every family's outputs
+    * are pure functions of the batch and the index state BEFORE the
+    * epoch, and the replay-key leg (the one every read path unions)
+    * never committed in that window — then re-commits exactly the
+    * missing suffix. Returns the committed version of the last leg.
+    *
+    * Single-writer-per-lineage is ENFORCED loud, not just documented:
+    * after every leg write the root is checked for a second version
+    * carrying the same epoch marker (two writers racing the same epoch
+    * both pass the pre-write committed check, then both rename — the
+    * only silent-double-data window) and the loser throws with the
+    * duplicate versions named instead of leaving them to double reads.
     */
-  private def adoptEpochLeg(spark: SparkSession, legRoot: String,
-      srcDirs: Seq[org.apache.hadoop.fs.Path], epochId: Long): Long = {
-    if (epochCommittedIn(spark, legRoot, epochId))
-      return committedLegVersion(spark, legRoot, epochId)
-    val v = VersionedTable.adoptFiles(spark, legRoot, srcDirs,
-      markers = Seq(s"_epoch-$epochId"))
-    assertSingleEpochWriter(spark, legRoot, epochId)
-    recordEpochHwm(spark, legRoot, epochId)
-    v
-  }
-
   private def commitEpoch(spark: SparkSession, epochId: Long,
       stats: Option[(DataFrame, String)],
       legs: Seq[(DataFrame, String)]): Long = {
@@ -845,31 +807,13 @@ object IncrementalIndex {
       s"epoch $epochId already committed in the final leg " +
         s"${legs.last._2} — callers must key replay detection on the " +
         "final leg's root and drop before commitEpoch")
-    def writeLeg(df: DataFrame, legRoot: String): Long = {
-      val v = VersionedTable.write(spark, df, legRoot,
-        markers = Seq(s"_epoch-$epochId"))
-      assertSingleEpochWriter(spark, legRoot, epochId)
-      recordEpochHwm(spark, legRoot, epochId)
-      v
-    }
-    stats.foreach { case (s, statsRoot) =>
-      if (!epochCommittedIn(spark, statsRoot, epochId)) writeLeg(s, statsRoot)
-      // a skipped stats leg returns nothing, but must still PROVE the
-      // skip is a replay (marker present) and not a foreign hwm on a
-      // shared root — same contract as the data legs below
-      else committedLegVersion(spark, statsRoot, epochId)
-    }
-    var last = -1L
-    legs.foreach { case (df, legRoot) =>
-      last =
-        if (!epochCommittedIn(spark, legRoot, epochId)) writeLeg(df, legRoot)
-        // a skipped (non-final — see the require above) leg reports the
-        // version carrying ITS epoch marker — and fails loud when no
-        // marker backs the hwm's "committed" claim (shared-root foreign
-        // hwm, or compacted-away marker: see committedLegVersion)
-        else committedLegVersion(spark, legRoot, epochId)
-    }
-    last
+    // a skipped leg — the stats leg or a non-final data leg (see the
+    // require above) — must still PROVE the skip is a replay (marker
+    // present) and not a foreign hwm on a shared root: epochLeg reports
+    // the marker-carrying version or fails loud (committedLegVersion)
+    stats.foreach { case (st, statsRoot) =>
+      writeEpochLeg(spark, st, statsRoot, epochId) }
+    legs.map { case (df, legRoot) => writeEpochLeg(spark, df, legRoot, epochId) }.last
   }
 
   /** The committed version carrying epoch `epochId`'s `_epoch-` marker
@@ -1089,64 +1033,26 @@ object IncrementalIndex {
     * groups a merge can change (single-shard groups keep their minimum;
     * the [[retractExact]] delta convention: the caller overrides those
     * ids in its accumulated verdict log). Delta-corrected verdicts equal
-    * d1's one-shot keep-the-min over the union (the d65 gate). Exchange
-    * discipline: only 32-byte (id, fp) rows shuffle — by fp for the
-    * shared-group detection and the per-group minimum — and the delta is
-    * bounded by the CROSS-SHARD duplicate volume, not the index size.
+    * d1's one-shot keep-the-min over the union (the d65 gate). This is
+    * [[mergeManyExactIndexes]] with one donor (exchange discipline
+    * there): the delta is bounded by the CROSS-SHARD duplicate volume,
+    * not the index size.
     */
   def mergeExactIndexes(spark: SparkSession, root: String,
       donorRoot: String): (Long, DataFrame) =
-    mergeExactImpl(spark, root, donorRoot, None).get
+    mergeManyExactIndexes(spark, root, Seq(donorRoot))
 
   /** Exactly-once exact-dedup shard merge — the
     * [[mergeMinHashIndexesEpoch]] protocol with the verdict-correction
     * DELTA playing the pairs role (committed into `deltaRoot`, the
     * caller's correction log) and the fingerprint adoption as the
-    * replay key. Orchestrator-owned monotone `epochId`.
+    * replay key. Orchestrator-owned monotone `epochId`. This is
+    * [[mergeManyExactIndexesEpoch]] with one donor.
     */
   def mergeExactIndexesEpoch(spark: SparkSession, root: String,
       deltaRoot: String, donorRoot: String, epochId: Long)
       : Option[(Long, DataFrame)] =
-    mergeExactImpl(spark, root, donorRoot, Some((epochId, deltaRoot)))
-
-  private def mergeExactImpl(spark: SparkSession, root: String,
-      donorRoot: String,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    import org.apache.spark.sql.expressions.Window
-    if (epoch.exists { case (e, _) =>
-        epochCommittedIn(spark, exactFpRoot(root), e) })
-      return None
-    val a = readExactIndex(spark, root)
-    val b = readExactIndex(spark, donorRoot).persist()
-    try {
-      val sharedFps = a.select("fp").distinct()
-        .join(b.select("fp").distinct(), "fp")
-      val w = Window.partitionBy("fp").orderBy("id")
-      val delta = a.select("id", "fp").unionAll(b.select("id", "fp"))
-        .join(sharedFps, "fp")
-        .withColumn("kept", row_number().over(w) === 1)
-        .select("id", "fp", "kept").persist()
-      delta.count() // materialize before the commit mutates the log
-      // log adoption (see mergeMinHashIndexes): donor tombstones first,
-      // then the fingerprint files as byte-level copies
-      val donorTombs = VersionedTable.liveVersionDirs(
-        spark, subRoot(donorRoot, "tombstones"))
-      val donorFpDirs = VersionedTable.liveVersionDirs(
-        spark, exactFpRoot(donorRoot))
-      val v = epoch match {
-        case None =>
-          if (donorTombs.nonEmpty)
-            VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-          VersionedTable.adoptFiles(spark, exactFpRoot(root), donorFpDirs)
-        case Some((e, deltaRoot)) =>
-          if (donorTombs.nonEmpty)
-            adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-          writeEpochLeg(spark, delta, deltaRoot, e)
-          adoptEpochLeg(spark, exactFpRoot(root), donorFpDirs, e)
-      }
-      Some((v, delta))
-    } finally b.unpersist(blocking = false)
-  }
+    mergeManyExactIndexesEpoch(spark, root, deltaRoot, Seq(donorRoot), epochId)
 
   /** N-WAY exact-dedup shard merge — the verdict-family face of the
     * d69 fan-in: ONE fingerprint pass over the adopter plus ALL donors
@@ -1169,7 +1075,7 @@ object IncrementalIndex {
       donorRoots: Seq[String]): (Long, DataFrame) =
     mergeManyExactImpl(spark, root, donorRoots, None).get
 
-  /** Exactly-once N-way exact merge — [[mergeManyExactIndexesEpoch]]
+  /** Exactly-once N-way exact merge — [[mergeManyExactIndexes]]
     * under the ONE epoch id for the whole fan-in step (the d69
     * convention: orchestrator-owned, monotone per adopter lineage).
     */
@@ -1204,22 +1110,8 @@ object IncrementalIndex {
         .withColumn("kept", row_number().over(w) === 1)
         .select("id", "fp", "kept").persist()
       delta.count() // materialize before the commit mutates the log
-      val allTombs = donorRoots.flatMap(dr =>
-        VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-      val allFps = donorRoots.flatMap(dr =>
-        VersionedTable.liveVersionDirs(spark, exactFpRoot(dr)))
-      val v = epoch match {
-        case None =>
-          if (allTombs.nonEmpty)
-            VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-          VersionedTable.adoptFiles(spark, exactFpRoot(root), allFps)
-        case Some((e, deltaRoot)) =>
-          if (allTombs.nonEmpty)
-            adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-          writeEpochLeg(spark, delta, deltaRoot, e)
-          adoptEpochLeg(spark, exactFpRoot(root), allFps, e)
-      }
-      Some((v, delta))
+      Some((adoptDonors(spark, root, donorRoots, exactFpRoot, None, epoch,
+        delta), delta))
     } finally tagged.unpersist(blocking = false)
   }
 
@@ -1367,32 +1259,9 @@ object IncrementalIndex {
           batchRows, broadcastRowLimit)
       }).persist()
       try {
-        val sigs = prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs)
-        // the verifyJaccard exchange shape: exploded pair sides broadcast
-        // into ONE scan of the signature log (the per-side prune form
-        // scanned it once per broadcast subtree), signatures re-pair in a
-        // candidate-bounded aggregate
-        // broadcast-gate verdict shared with candidate generation (see
-        // verifyJaccard's broadcastSides): above the gate the exploded
-        // sides take a plain id shuffle join — the r14 100× SimHash
-        // shard bootstrap died building this broadcast (>1 GiB of
-        // serialized results vs the 1 GiB driver default)
-        val sidesHint: DataFrame => DataFrame =
-          if (Dedup.sidesBroadcastable(cands, broadcastRowLimit))
-            df => broadcast(df)
-          else identity
-        val verified = sigs.select(col("id"), col("sig"))
-          .join(sidesHint(Dedup.pairSides(cands)), "id")
-          .groupBy("a", "b")
-          .agg(
-            first(when(col("isA"), col("sig")), ignoreNulls = true).as("siga"),
-            first(when(!col("isA"), col("sig")), ignoreNulls = true).as("sigb"))
-          .filter(col("siga").isNotNull && col("sigb").isNotNull)
-          .select(col("a"), col("b"),
-            bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .persist()
-        verified.count()
+        val verified = verifyHamming(cands,
+          prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs),
+          maxHamming, broadcastRowLimit)
         SimHashArtifacts(batchSigs, batchStats, verified, () => {
           batchStats.unpersist(blocking = false)
           bandedB.unpersist(blocking = false)
@@ -1402,6 +1271,39 @@ object IncrementalIndex {
     } catch {
       case t: Throwable => batchSigs.unpersist(blocking = false); throw t
     }
+  }
+
+  /** Exact popcount verification of SimHash candidates against stored
+    * (id, sig) rows: (a, b, hamming) with hamming ≤ `maxHamming`,
+    * persisted and materialized. The verifyJaccard exchange shape:
+    * exploded pair sides broadcast into ONE scan of the signature log
+    * (the per-side prune form scanned it once per broadcast subtree),
+    * signatures re-pair in a candidate-bounded aggregate. The broadcast
+    * gate is the one candidate generation uses (see verifyJaccard's
+    * broadcastSides): above it the exploded sides take a plain id
+    * shuffle join — the r14 100× SimHash shard bootstrap died building
+    * this broadcast (>1 GiB of serialized results vs the 1 GiB driver
+    * default).
+    */
+  private def verifyHamming(cands: DataFrame, sigs: DataFrame,
+      maxHamming: Int, broadcastRowLimit: Long): DataFrame = {
+    val sidesHint: DataFrame => DataFrame =
+      if (Dedup.sidesBroadcastable(cands, broadcastRowLimit))
+        df => broadcast(df)
+      else identity
+    val verified = sigs.select(col("id"), col("sig"))
+      .join(sidesHint(Dedup.pairSides(cands)), "id")
+      .groupBy("a", "b")
+      .agg(
+        first(when(col("isA"), col("sig")), ignoreNulls = true).as("siga"),
+        first(when(!col("isA"), col("sig")), ignoreNulls = true).as("sigb"))
+      .filter(col("siga").isNotNull && col("sigb").isNotNull)
+      .select(col("a"), col("b"),
+        bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .persist()
+    verified.count()
+    verified
   }
 
   def ingestSimHash(spark: SparkSession, root: String, batch: DataFrame,
@@ -1505,87 +1407,33 @@ object IncrementalIndex {
     * `shingleN` are mergeable). Cross pairs verified by exact popcount
     * over the stored signatures; the data move is log adoption
     * (tombstones → stats → signatures). Accumulated pairs equal the
-    * one-shot portable-SimHash run over the union (the d66 gate).
+    * one-shot portable-SimHash run over the union (the d66 gate). This
+    * is [[mergeManySimHashIndexes]] with one donor.
     */
   def mergeSimHashIndexes(spark: SparkSession, root: String,
       donorRoot: String, maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) =
-    mergeSimHashImpl(spark, root, donorRoot, maxHamming, bucketCap,
-      broadcastRowLimit, None).get
+    mergeManySimHashIndexes(spark, root, Seq(donorRoot), maxHamming, bucketCap,
+      broadcastRowLimit)
 
   /** Exactly-once SimHash shard merge — the [[mergeMinHashIndexesEpoch]]
     * protocol (tombstones → stats → pairs → signatures, signatures the
-    * replay key; orchestrator-owned monotone `epochId`).
+    * replay key; orchestrator-owned monotone `epochId`). This is
+    * [[mergeManySimHashIndexesEpoch]] with one donor.
     */
   def mergeSimHashIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoot: String, epochId: Long,
       maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit)
       : Option[(Long, DataFrame)] =
-    mergeSimHashImpl(spark, root, donorRoot, maxHamming, bucketCap,
-      broadcastRowLimit, Some((epochId, pairsRoot)))
-
-  private def mergeSimHashImpl(spark: SparkSession, root: String,
-      donorRoot: String, maxHamming: Int, bucketCap: Int,
-      broadcastRowLimit: Long,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    val donor = readSimHashIndex(spark, donorRoot)
-    val index = readSimHashIndex(spark, root)
-    val bandedD = bandedOfSimHash(donor).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), bucketCap, epoch.map(_._1))
-      // crossOnly (see mergeMinHashIndexes): donor-internal candidates
-      // never generate, and disjoint shard ids make every candidate
-      // index×donor by construction — no membership probe
-      val cands = incrementalBucketCandidates(
-        bandedOfSimHash(index), bandedD, bucketCap, over,
-        donorRows, broadcastRowLimit, crossOnly = true).persist()
-      try {
-        val candIds = cands.select(col("a").as("id"))
-          .unionAll(cands.select(col("b").as("id"))).distinct()
-        val sigs = index.unionAll(donor)
-        val pruned = sigs.join(broadcast(candIds), "id")
-        val verified = cands
-          .join(broadcast(pruned.select(col("id").as("a"), col("sig").as("siga"))), "a")
-          .join(broadcast(pruned.select(col("id").as("b"), col("sig").as("sigb"))), "b")
-          .select(col("a"), col("b"),
-            bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .persist()
-        verified.count()
-        val donorTombs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "tombstones"))
-        val donorStatsDirs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "bucketstats"))
-        val donorSigDirs = VersionedTable.liveVersionDirs(spark, donorRoot)
-        val v = epoch match {
-          case None =>
-            if (donorTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, donorStatsDirs)
-            VersionedTable.adoptFiles(spark, root, donorSigDirs)
-          case Some((e, pairsRoot)) =>
-            if (donorTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-            adoptEpochLeg(spark, statsRoot, donorStatsDirs, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, donorSigDirs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeManySimHashIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot),
+      epochId, maxHamming, bucketCap, broadcastRowLimit)
 
   /** N-WAY SimHash shard merge — [[mergeManyMinHashIndexes]]'s one-pass
     * fan-in over the SimHash machinery: the donor union plays the batch
     * role with per-shard tags, so the batch-internal candidates ARE the
     * donor×donor pairs a fold pays N−1 growing-adopter passes for, and
-    * `batchSharded` keeps a pair iff its sides live in different shards
+    * a pair is kept iff its sides live in different shards
     * (shard-internal pairs are already in shard logs). Signatures are
     * PORTABLE (no frozen per-shard geometry), so any same-shingleN
     * shards fan in. Gate: d73 == d3's exact oracle with a mod-3 split
@@ -1594,8 +1442,8 @@ object IncrementalIndex {
   def mergeManySimHashIndexes(spark: SparkSession, root: String,
       donorRoots: Seq[String], maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) =
-    mergeManySimHashImpl(spark, root, donorRoots, maxHamming, bucketCap,
-      broadcastRowLimit, None).get
+    mergeBanded(spark, root, donorRoots,
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit), None).get
 
   /** Exactly-once N-way SimHash merge (one orchestrator-owned epoch id
     * for the whole fan-in step, the d69 convention).
@@ -1604,65 +1452,15 @@ object IncrementalIndex {
       pairsRoot: String, donorRoots: Seq[String], epochId: Long,
       maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[(Long, DataFrame)] =
-    mergeManySimHashImpl(spark, root, donorRoots, maxHamming, bucketCap,
-      broadcastRowLimit, Some((epochId, pairsRoot)))
+    mergeBanded(spark, root, donorRoots,
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit),
+      Some((epochId, pairsRoot)))
 
-  private def mergeManySimHashImpl(spark: SparkSession, root: String,
-      donorRoots: Seq[String], maxHamming: Int, bucketCap: Int,
-      broadcastRowLimit: Long,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    require(donorRoots.nonEmpty, "mergeManySimHashIndexes needs donors")
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    val donors = donorRoots.map(readSimHashIndex(spark, _))
-    val index = readSimHashIndex(spark, root)
-    val bandedD = donors.zipWithIndex.map { case (d, i) =>
-      bandedOfSimHash(d).withColumn("sh", lit(i + 1))
-    }.reduce(_.unionAll(_)).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), bucketCap, epoch.map(_._1))
-      val cands = incrementalBucketCandidates(
-        bandedOfSimHash(index), bandedD, bucketCap, over,
-        donorRows, broadcastRowLimit, batchSharded = true).persist()
-      try {
-        val candIds = cands.select(col("a").as("id"))
-          .unionAll(cands.select(col("b").as("id"))).distinct()
-        val sigs = (index +: donors).reduce(_.unionAll(_))
-        val pruned = sigs.join(broadcast(candIds), "id")
-        val verified = cands
-          .join(broadcast(pruned.select(col("id").as("a"), col("sig").as("siga"))), "a")
-          .join(broadcast(pruned.select(col("id").as("b"), col("sig").as("sigb"))), "b")
-          .select(col("a"), col("b"),
-            bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .persist()
-        verified.count()
-        val allTombs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-        val allStats = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "bucketstats")))
-        val allSigs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, dr))
-        val v = epoch match {
-          case None =>
-            if (allTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, allStats)
-            VersionedTable.adoptFiles(spark, root, allSigs)
-          case Some((e, pairsRoot)) =>
-            if (allTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-            adoptEpochLeg(spark, statsRoot, allStats, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, allSigs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+  private def simHashFamily(maxHamming: Int, bucketCap: Int,
+      broadcastRowLimit: Long) = BandedFamily(
+    readSimHashIndex(_, _), bandedOfSimHash,
+    verifyHamming(_, _, maxHamming, broadcastRowLimit),
+    bucketCap, broadcastRowLimit)
 
   /** Compact a SimHash index (signature log + stats sidecar). */
   def compactSimHashIndex(spark: SparkSession, root: String,
@@ -1795,17 +1593,17 @@ object IncrementalIndex {
       batchTok: DataFrame, batchStats: DataFrame, verified: DataFrame,
       release: () => Unit)
 
-  /** `shardTags` (the N-way merge): an (id, sh) frame tagging each
-    * batch id with its donor shard — batch-sized, joined onto the
-    * banded batch rows so `batchSharded` candidate filtering can drop
-    * shard-internal pairs inside the join. Exclusive with `crossOnly`
-    * (the binary-merge face), matching the machinery's contract.
+  /** `donorIds` (a merge): each donor's live id frame, in shard order;
+    * empty for an ingest. Its size is the donor count candidate
+    * generation keys on ([[incrementalBucketCandidates]]). From two
+    * donors on, each banded batch row is tagged with its donor's shard
+    * `sh` (a batch-sized join) so shard-internal pairs drop inside the
+    * candidate join; one donor needs no tag.
     */
   private def prefixBatchArtifacts(spark: SparkSession, root: String,
       sets: DataFrame, p: PrefixJaccardParams,
       excludeEpoch: Option[Long] = None,
-      crossOnly: Boolean = false,
-      shardTags: Option[DataFrame] = None): PrefixArtifacts = {
+      donorIds: Seq[DataFrame] = Nil): PrefixArtifacts = {
     val s0 = sets.persist()
     try {
       // an empty/absent root bootstraps naturally: the FIRST batch's
@@ -1821,11 +1619,11 @@ object IncrementalIndex {
       try {
         val haveIndex = VersionedTable.versions(spark, prefixTokRoot(root)).nonEmpty
         val prior = if (haveIndex) Some(readPrefixIndex(spark, root)) else None
-        val bandedB = (shardTags match {
-          case Some(t) => bandedOfPrefix(batchTok)
-            .join(t.select(col("id").as("doc"), col("sh")), "doc")
-          case None => bandedOfPrefix(batchTok)
-        }).persist()
+        val bandedB = (
+          if (donorIds.size < 2) bandedOfPrefix(batchTok)
+          else bandedOfPrefix(batchTok).join(donorIds.zipWithIndex.map {
+            case (d, i) => d.select(col("id").as("doc"), lit(i + 1).as("sh"))
+          }.reduce(_.unionAll(_)), "doc")).persist()
         // persisted: the stats delta otherwise executes twice per ingest
         // (the over-cap collect job + the sidecar write) — see the
         // minHashBatchArtifacts note / JobProfile d56
@@ -1833,16 +1631,10 @@ object IncrementalIndex {
         // one job: materializes, collects over-cap list + gate row count
         val (over, batchRows) = overCapAndBatchRows(spark,
           prefixStatsRoot(root), batchStats, p.bucketCap, excludeEpoch)
-        val cands = (prior match {
-          case Some(ix) => incrementalBucketCandidates(
-            bandedOfPrefix(ix), bandedB, p.bucketCap, over,
-            batchRows, p.broadcastRowLimit, crossOnly,
-            batchSharded = shardTags.nonEmpty)
-          case None => incrementalBucketCandidates(
-            bandedB.filter(lit(false)), bandedB, p.bucketCap, over,
-            batchRows, p.broadcastRowLimit, crossOnly,
-            batchSharded = shardTags.nonEmpty)
-        }).persist()
+        val cands = incrementalBucketCandidates(
+          prior.map(bandedOfPrefix).getOrElse(bandedB.filter(lit(false))),
+          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit,
+          donors = donorIds.size).persist()
         try {
           // verification with the verifyJaccard exchange discipline: the
           // candidate pair list explodes to per-side probe rows that
@@ -1936,57 +1728,27 @@ object IncrementalIndex {
     * accumulated pairs equal the one-shot over the union (the d67
     * gate). Donor retractions are honored by construction: the re-sort
     * starts from the donor's tombstone-FILTERED live rows, so nothing
-    * retracted ever enters `root`.
+    * retracted ever enters `root`. This is [[mergeManyPrefixIndexes]]
+    * with one donor.
     */
   def mergePrefixIndexes(spark: SparkSession, root: String,
       donorRoot: String,
       p: PrefixJaccardParams = PrefixJaccardParams()): (Long, DataFrame) =
-    mergePrefixImpl(spark, root, donorRoot, p, None).get
+    mergeManyPrefixIndexes(spark, root, Seq(donorRoot), p)
 
   /** Exactly-once prefix-filter shard merge. Unlike the adoption
     * families the prefix merge RE-WRITES the donor's token rows (they
     * re-sort under the adopter's frozen df), so every leg is a write
     * leg and [[commitEpoch]] carries the whole commit: stats as guarded
     * leg 0, cross pairs into `pairsRoot`, then the token log as the
-    * replay key. Orchestrator-owned monotone `epochId`.
+    * replay key. Orchestrator-owned monotone `epochId`. This is
+    * [[mergeManyPrefixIndexesEpoch]] with one donor.
     */
   def mergePrefixIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoot: String, epochId: Long,
       p: PrefixJaccardParams = PrefixJaccardParams())
       : Option[(Long, DataFrame)] =
-    mergePrefixImpl(spark, root, donorRoot, p, Some((epochId, pairsRoot)))
-
-  private def mergePrefixImpl(spark: SparkSession, root: String,
-      donorRoot: String, p: PrefixJaccardParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) =>
-        epochCommittedIn(spark, prefixTokRoot(root), e) })
-      return None
-    // no full-width log cache: `toks` dominates the row, and the two
-    // consumers need different slices (full (id, toks) for the batch
-    // artifacts, id-only for the membership probe) — column-pruned scans
-    val donorLive = readPrefixIndex(spark, donorRoot)
-    val donorSets = donorLive.select(col("id"), explode(col("toks")).as("elem"))
-    // crossOnly: donor-internal candidates never generate (they are
-    // already in the donor's own pair log) and disjoint shard ids make
-    // every verified pair index×donor by construction
-    val a = prefixBatchArtifacts(spark, root, donorSets, p,
-      excludeEpoch = epoch.map(_._1), crossOnly = true)
-    try {
-      val v = epoch match {
-        case None =>
-          VersionedTable.write(spark, a.batchStats, prefixStatsRoot(root))
-          VersionedTable.write(spark, a.batchTok, prefixTokRoot(root))
-        case Some((e, pairsRoot)) =>
-          commitEpoch(spark, e,
-            Some((a.batchStats, prefixStatsRoot(root))),
-            Seq(a.verified -> pairsRoot, a.batchTok -> prefixTokRoot(root)))
-      }
-      Some((v, a.verified))
-    } catch {
-      case t: Throwable => a.verified.unpersist(blocking = false); throw t
-    } finally a.release()
-  }
+    mergeManyPrefixIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId, p)
 
   /** N-WAY prefix-filter shard merge — the fan-in for the one family
     * that cannot adopt files: every donor's stored token arrays RE-SORT
@@ -2020,18 +1782,15 @@ object IncrementalIndex {
     if (epoch.exists { case (e, _) =>
         epochCommittedIn(spark, prefixTokRoot(root), e) })
       return None
+    // no full-width log cache: `toks` dominates the row, and the two
+    // consumers need different slices (full (id, toks) for the batch
+    // artifacts, id-only for the shard tags) — column-pruned scans
     val donorLive = donorRoots.map(readPrefixIndex(spark, _))
     val donorSets = donorLive.map(
       _.select(col("id"), explode(col("toks")).as("elem")))
       .reduce(_.unionAll(_))
-    // (id, sh) tags — batch-sized column-pruned id reads, joined onto
-    // the banded batch inside prefixBatchArtifacts so donor-internal
-    // pairs are dropped INSIDE the candidate join
-    val tags = donorLive.zipWithIndex.map { case (d, i) =>
-      d.select(col("id"), lit(i + 1).as("sh"))
-    }.reduce(_.unionAll(_))
     val a = prefixBatchArtifacts(spark, root, donorSets, p,
-      excludeEpoch = epoch.map(_._1), shardTags = Some(tags))
+      excludeEpoch = epoch.map(_._1), donorIds = donorLive.map(_.select("id")))
     try {
       val v = epoch match {
         case None =>
@@ -2239,70 +1998,22 @@ object IncrementalIndex {
     * makes this merge possible from logs alone — IVF/PQ logs keep only
     * assignments/codes, so those families re-ingest instead of
     * merging). Data move is log adoption. Accumulated pairs equal the
-    * one-shot over the union (the e25 gate).
+    * one-shot over the union (the e25 gate). This is
+    * [[mergeManySrpIndexes]] with one donor.
     */
   def mergeSrpIndexes(spark: SparkSession, root: String,
       donorRoot: String, p: SrpParams): (Long, DataFrame) =
-    mergeSrpImpl(spark, root, donorRoot, p, None).get
+    mergeManySrpIndexes(spark, root, Seq(donorRoot), p)
 
   /** Exactly-once SRP shard merge — the [[mergeMinHashIndexesEpoch]]
     * protocol (tombstones → stats → pairs → signatures, signatures the
-    * replay key; orchestrator-owned monotone `epochId`).
+    * replay key; orchestrator-owned monotone `epochId`). This is
+    * [[mergeManySrpIndexesEpoch]] with one donor.
     */
   def mergeSrpIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoot: String, epochId: Long,
       p: SrpParams): Option[(Long, DataFrame)] =
-    mergeSrpImpl(spark, root, donorRoot, p, Some((epochId, pairsRoot)))
-
-  private def mergeSrpImpl(spark: SparkSession, root: String,
-      donorRoot: String, p: SrpParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // no full-width log cache: `v` (the embedding) dominates the row —
-    // banding reads the narrow (id, p, sig) slice, verification a
-    // candidate-pruned (id, v) slice, both column-pruned parquet scans
-    val donor = readSrpIndex(spark, donorRoot)
-    val index = readSrpIndex(spark, root)
-    val bandedD = bandedOfSrp(donor.select("id", "p", "sig")).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), p.bucketCap, epoch.map(_._1))
-      // crossOnly (see mergeMinHashIndexes): donor-internal candidates
-      // never generate, and disjoint shard ids make every candidate
-      // index×donor by construction — no membership probe
-      val cands = incrementalBucketCandidates(
-        bandedOfSrp(index.select("id", "p", "sig")), bandedD, p.bucketCap,
-        over, donorRows, p.broadcastRowLimit, crossOnly = true).persist()
-      try {
-        val vecs = index.select(col("id"), col("v"))
-          .unionAll(donor.select(col("id"), col("v")))
-        val verified = Dedup.verifyCosine(cands, vecs, p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        val donorTombs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "tombstones"))
-        val donorStatsDirs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "bucketstats"))
-        val donorSigDirs = VersionedTable.liveVersionDirs(spark, donorRoot)
-        val v = epoch match {
-          case None =>
-            if (donorTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, donorStatsDirs)
-            VersionedTable.adoptFiles(spark, root, donorSigDirs)
-          case Some((e, pairsRoot)) =>
-            if (donorTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-            adoptEpochLeg(spark, statsRoot, donorStatsDirs, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, donorSigDirs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeManySrpIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId, p)
 
   /** N-WAY SRP shard merge — the [[mergeManyMinHashIndexes]] fan-in
     * over the SRP machinery. SOUND iff every shard froze IDENTICAL
@@ -2314,7 +2025,7 @@ object IncrementalIndex {
     */
   def mergeManySrpIndexes(spark: SparkSession, root: String,
       donorRoots: Seq[String], p: SrpParams): (Long, DataFrame) =
-    mergeManySrpImpl(spark, root, donorRoots, p, None).get
+    mergeBanded(spark, root, donorRoots, srpFamily(p), None).get
 
   /** Exactly-once N-way SRP merge (one orchestrator-owned epoch id for
     * the whole fan-in step).
@@ -2322,58 +2033,15 @@ object IncrementalIndex {
   def mergeManySrpIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoots: Seq[String], epochId: Long,
       p: SrpParams): Option[(Long, DataFrame)] =
-    mergeManySrpImpl(spark, root, donorRoots, p, Some((epochId, pairsRoot)))
+    mergeBanded(spark, root, donorRoots, srpFamily(p), Some((epochId, pairsRoot)))
 
-  private def mergeManySrpImpl(spark: SparkSession, root: String,
-      donorRoots: Seq[String], p: SrpParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    require(donorRoots.nonEmpty, "mergeManySrpIndexes needs donors")
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // no full-width log cache (the binary merge's reasoning): banding
-    // reads the narrow (id, p, sig) slice, verification a
-    // candidate-pruned (id, v) slice
-    val donors = donorRoots.map(readSrpIndex(spark, _))
-    val index = readSrpIndex(spark, root)
-    val bandedD = donors.zipWithIndex.map { case (d, i) =>
-      bandedOfSrp(d.select("id", "p", "sig")).withColumn("sh", lit(i + 1))
-    }.reduce(_.unionAll(_)).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), p.bucketCap, epoch.map(_._1))
-      val cands = incrementalBucketCandidates(
-        bandedOfSrp(index.select("id", "p", "sig")), bandedD, p.bucketCap,
-        over, donorRows, p.broadcastRowLimit, batchSharded = true).persist()
-      try {
-        val vecs = (index +: donors).map(_.select(col("id"), col("v")))
-          .reduce(_.unionAll(_))
-        val verified = Dedup.verifyCosine(cands, vecs, p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        val allTombs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-        val allStats = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "bucketstats")))
-        val allSigs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, dr))
-        val v = epoch match {
-          case None =>
-            if (allTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, allStats)
-            VersionedTable.adoptFiles(spark, root, allSigs)
-          case Some((e, pairsRoot)) =>
-            if (allTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-            adoptEpochLeg(spark, statsRoot, allStats, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, allSigs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+  private def srpFamily(p: SrpParams) = BandedFamily(
+    readSrpIndex(_, _),
+    rows => bandedOfSrp(rows.select("id", "p", "sig")),
+    (cands, rows) => Dedup.verifyCosine(cands, rows.select("id", "v"),
+      p.threshold,
+      broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit)),
+    p.bucketCap, p.broadcastRowLimit)
 
   // ------------------------------------------------------------- SemDeDup
 
@@ -2440,39 +2108,29 @@ object IncrementalIndex {
     * precheck is the deterministic gate and the count stays as the
     * ingest-path telemetry. Gate: e27 — adopter(b1) + merge(donor built
     * on b2) equals e22's bootstrap+ingest oracle verbatim, because the
-    * donor's member log presents exactly b2's (id, v) rows.
+    * donor's member log presents exactly b2's (id, v) rows. This is
+    * [[mergeManySemDedupIndexes]] with one donor.
     */
   def mergeSemDedupIndexes(spark: SparkSession, root: String,
       donorRoot: String, threshold: Double, cap: Int = 512,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): SemDedupIngest = {
-    val donor = VersionedTable.readAllVersions(spark, semMembersRoot(donorRoot))
-      .select("id", "v")
-    requireIdRangeSharded(spark, root, Seq(donor))
-    ingestSemDedup(spark, root, donor, "id", "v",
-      threshold, cap, broadcastRowLimit)
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): SemDedupIngest =
+    mergeManySemDedupIndexes(spark, root, Seq(donorRoot), threshold, cap,
+      broadcastRowLimit)
 
   /** Exactly-once SemDeDup shard merge — [[ingestSemDedupEpoch]] with
     * the donor's member log playing the batch role (orchestrator-owned
     * monotone `epochId`; parameter order follows the family convention,
     * epochId immediately after donorRoot). Same enforced id-range
     * contract as [[mergeSemDedupIndexes]], checked after the replay
-    * guard and before any leg commits.
+    * guard and before any leg commits. This is
+    * [[mergeManySemDedupIndexesEpoch]] with one donor.
     */
   def mergeSemDedupIndexesEpoch(spark: SparkSession, root: String,
       verdictsRoot: String, donorRoot: String, epochId: Long,
       threshold: Double, cap: Int = 512,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[SemDedupIngest] = {
-    // replay guard BEFORE touching the donor (the mergeMinHashImpl
-    // ordering): a redelivery after the donor shard was torn down must
-    // still no-op instead of crashing on the missing member log
-    if (epochCommittedIn(spark, semMembersRoot(root), epochId)) return None
-    val donor = VersionedTable.readAllVersions(spark, semMembersRoot(donorRoot))
-      .select("id", "v")
-    requireIdRangeSharded(spark, root, Seq(donor))
-    ingestSemDedupEpoch(spark, root, verdictsRoot, donor,
-      "id", "v", threshold, epochId, cap, broadcastRowLimit)
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[SemDedupIngest] =
+    mergeManySemDedupIndexesEpoch(spark, root, verdictsRoot, Seq(donorRoot),
+      epochId, threshold, cap, broadcastRowLimit)
 
   /** N-WAY SemDeDup shard merge — the ORDERED fan-in the id-range
     * contract makes natural: k donors whose ranges are pairwise
@@ -2499,8 +2157,8 @@ object IncrementalIndex {
 
   /** Exactly-once N-way SemDeDup merge — [[mergeManySemDedupIndexes]]
     * under the epoch protocol: replay guard first (a redelivery after
-    * the donor shards were torn down must no-op, the mergeMinHashImpl
-    * ordering), then the range precheck, then ONE
+    * the donor shards were torn down must no-op instead of crashing on
+    * a missing member log), then the range precheck, then ONE
     * [[ingestSemDedupEpoch]]. Returns None on a fully-replayed epoch.
     */
   def mergeManySemDedupIndexesEpoch(spark: SparkSession, root: String,

@@ -32,8 +32,10 @@ import graft.{Sessions, SparkEntry}
   *    covered only the 10 most expensive; the long tail had never run
   *    above sf0.1).
   *  - **ratios in the artifact**: each timing records sec / PROF.json's
-  *    committed sf0.1 steady-state for the same query, so the artifact
-  *    itself says sub/super-linear without cross-file arithmetic.
+  *    committed steady-state for the same query, so the artifact itself
+  *    says sub/super-linear without cross-file arithmetic — only when
+  *    PROF.json was measured at the rehearsal's base scale
+  *    (SPARK_GRAFT_SF_DIR); otherwise no ratio is written.
   *
   * Usage: `runMain graft.tools.ScaleRehearsal [outJson] [scope]`. Scopes:
   *  - `full` (default): every registry query on the 10× clique corpus,
@@ -282,12 +284,18 @@ object ScaleRehearsal {
     }
   }
 
-  /** sf0.1 steady-state per-query seconds from the committed PROF.json. */
-  private def profTimes(): Map[String, Double] = try {
+  /** Steady-state per-query seconds from the committed PROF.json, or
+    * nothing when PROF.json was measured at a different base scale than
+    * `srcDir` (its `"sf"` field against the dir's basename): a ratio
+    * against another scale compares different data sizes, so the
+    * artifact then carries no `ratio` at all.
+    */
+  private def profTimes(srcDir: String): Map[String, Double] = try {
     val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PROF", "PROF.json")))
+    val sf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
     val qstart = txt.indexOf("\"queries\":{")
-    if (qstart < 0) Map.empty
+    if (qstart < 0 || !sf.contains(new java.io.File(srcDir).getName)) Map.empty
     else {
       val sub = txt.substring(qstart + 11, txt.indexOf('}', qstart))
       "\"([^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(sub)
@@ -374,7 +382,7 @@ object ScaleRehearsal {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val warmDir = "/root/testdata/sf0.001"
-    val prof = profTimes()
+    val prof = profTimes(srcDir)
 
     if (scope.startsWith("only:")) {
       // re-run selected queries on the clique corpus (artifact patching
