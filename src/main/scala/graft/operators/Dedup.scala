@@ -180,61 +180,62 @@ object Dedup {
     }
   }
 
-  /** Exact Jaccard similarity between the shingle sets of candidate pairs.
-    * Joins the (small) candidate list back to the shingle arrays and
-    * verifies with set intersection — no UDF.
-    */
   /** Exact-Jaccard verification of a candidate pair list: returns the
     * pairs at jaccard ≥ `minJaccard`, PERSISTED and MATERIALIZED (caller
-    * unpersists). Exchange discipline: the wide shingle-hash arrays never
-    * ride a hash shuffle AND the corpus/index frame is scanned exactly
-    * ONCE — the union-ids prune lands in a persisted candidate-id-bounded
-    * frame, and both per-side broadcasts build from that cache (the
-    * per-side-prune form scanned the corpus once per side; an
-    * exploded-pair-sides form shuffles one array per pair SIDE, which
-    * loses badly whenever pairs ≫ distinct candidate ids — the capped
-    * mega-bucket regime). Per-side broadcast bytes stay id-bounded.
+    * unpersists). Exchange discipline: the pair list explodes into
+    * (a, b, side, id) rows that broadcast INTO one scan of `shingled`,
+    * and each pair's two arrays re-pair through a pair-bounded aggregate
+    * — the wide arrays never ride a hash shuffle keyed by id, and the
+    * corpus/index frame is scanned exactly once.
+    *
+    * `broadcastSides` is the caller's verdict that the exploded side list
+    * (2 rows per candidate pair — pair-count-sized, not batch-sized) fits
+    * the driver's broadcast budget. The incremental indexes take it from
+    * the candidate bound their stats pass computes anyway, so no action
+    * runs on `candidates` before this one: verification executes
+    * candidate generation inside its own plan. False drops the hint for
+    * a plain id shuffle join — same rows, one exchange over the scan.
     */
-  /** Broadcast gate for exploded pair SIDES (2 scalar rows per candidate
-    * pair): the side list is PAIR-COUNT-sized, not batch-sized. Gating it
-    * on batch/donor rows let the r14 100× real-mode rehearsal collect a
-    * multi-GB side broadcast from a sub-gate 667k-row batch whose 16-bit
-    * SimHash bands collide quadratically with corpus growth — the driver
-    * died building the relation. Counting the (persisted) candidate list
-    * costs one job that materializes a cache the verify pass reads
-    * anyway; at gate/bench SFs pair counts are thousands, so the verdict
-    * — and every bench plan — is unchanged.
-    */
-  private[operators] def sidesBroadcastable(
-      cands: DataFrame, broadcastRowLimit: Long): Boolean =
-    2L * cands.count() <= broadcastRowLimit
-
   def verifyJaccard(
       candidates: DataFrame, shingled: DataFrame, idCol: String,
       shCol: String, minJaccard: Double,
-      broadcastSides: Boolean = true): DataFrame = {
+      broadcastSides: Boolean = true): DataFrame =
+    persisted(jaccardPairs(candidates, shingled, idCol, shCol, minJaccard,
+      broadcastSides))
+
+  /** Persist `df` and materialize it with one action; the caller
+    * unpersists.
+    */
+  private[operators] def persisted(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    p.count()
+    p
+  }
+
+  /** [[verifyJaccard]]'s pairs, unmaterialized — the incremental indexes
+    * materialize them themselves (`IncrementalIndex.materializePairs`).
+    */
+  private[operators] def jaccardPairs(
+      candidates: DataFrame, shingled: DataFrame, idCol: String,
+      shCol: String, minJaccard: Double, broadcastSides: Boolean): DataFrame = {
     // ONE corpus/index scan (the per-side prune form scanned it twice —
-    // once under each side's broadcast): the pair list explodes into
-    // (a, b, side, id) rows which broadcast INTO the scan, and each
-    // pair's two shingle-hash arrays re-pair through a pair-bounded
-    // aggregate (exactly 2 rows per pair). Near-dup collision candidates
-    // are sparse by construction (delete-list-sized sub-cap, O(n·cap)
+    // once under each side's broadcast); the re-pair aggregate holds
+    // exactly 2 rows per pair. Near-dup collision candidates are sparse
+    // by construction (delete-list-sized sub-cap, O(n·cap)
     // capped), so the per-pair-side array shuffle stays small — measured
     // 40-50% faster than both the two-scan form and a persisted
     // union-ids prune on d2/d54/d59. (Dense cell-candidate generators —
     // SemDeDup — must NOT use this shape: see verifyCosine's pairDense.)
     //
-    // `broadcastSides = false` (callers pass their candidate-generation
-    // broadcast-gate verdict): a bootstrap/backfill/adversarial-clique
+    // broadcastSides = false: a bootstrap/backfill/adversarial-clique
     // batch makes the pair list itself driver-budget-sized — the r14
     // 100× rehearsal's SimHash shard bootstrap collected >1 GiB building
-    // this broadcast and died at spark.driver.maxResultSize. Dropping
-    // the hint plans a plain id shuffle join — same rows, index pays
-    // one exchange, which in that regime is the honest one-shot cost.
+    // this broadcast and died at spark.driver.maxResultSize; in that
+    // regime the id shuffle is the honest one-shot cost.
     val sides = pairSides(candidates)
     val hint: DataFrame => DataFrame =
       if (broadcastSides) df => broadcast(df) else identity
-    val out = shingled.select(col(idCol).as("id"), col(shCol).as("sh"))
+    shingled.select(col(idCol).as("id"), col(shCol).as("sh"))
       .join(hint(sides), "id")
       .groupBy("a", "b")
       .agg(
@@ -245,9 +246,6 @@ object Dedup {
       .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
       .select(col("a"), col("b"), (col("inter") / col("uni")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .persist()
-    out.count() // persisted + materialized; caller unpersists
-    out
   }
 
   /** Full MinHash-LSH near-dup pipeline: shingle → signature → banded
@@ -523,34 +521,38 @@ object Dedup {
         out.count() // materialize before the pruned cache is released
         out
       } finally pruned.unpersist(blocking = false)
-    } else {
-      // SPARSE collision candidates (SRP buckets): the verifyJaccard
-      // exploded shape — one scan, pair-bounded re-pair shuffle.
-      // broadcastSides=false = the caller's broadcast-gate verdict (see
-      // verifyJaccard): above the gate the sides take a plain id
-      // shuffle join instead of a driver-budget-sized broadcast build
-      val sides = pairSides(cands)
-      val hint: DataFrame => DataFrame =
-        if (broadcastSides) df => broadcast(df) else identity
-      val aggs = Seq(
-        first(when(col("isA"), col("v")), ignoreNulls = true).as("va"),
-        first(when(!col("isA"), col("v")), ignoreNulls = true).as("vb")) ++
-        (if (tagged)
-          Seq(first(when(!col("isA"), col("inBatch")), ignoreNulls = true)
-            .as("bInBatch"))
-        else Nil)
-      val outCols = Seq(col("a"), col("b"),
-        cosine(col("va"), col("vb")).as("cos")) ++
-        (if (tagged) Seq(col("bInBatch")) else Nil)
-      val out = vecs.join(hint(sides), "id")
-        .groupBy("a", "b")
-        .agg(aggs.head, aggs.tail: _*)
-        .filter(col("va").isNotNull && col("vb").isNotNull)
-        .select(outCols: _*)
-        .filter(col("cos") >= threshold).persist()
-      out.count() // persisted + materialized; caller unpersists
-      out
-    }
+    } else persisted(cosinePairs(cands, vecs, threshold, broadcastSides))
+  }
+
+  /** [[verifyCosine]]'s SPARSE path, unmaterialized (the incremental SRP
+    * index materializes it itself): the verifyJaccard exploded shape —
+    * one scan, pair-bounded re-pair shuffle. broadcastSides=false = the
+    * caller's broadcast-gate verdict (see verifyJaccard): the sides take
+    * a plain id shuffle join instead of a driver-budget-sized broadcast
+    * build. A `vecs` `inBatch` tag carries through as `bInBatch`.
+    */
+  private[operators] def cosinePairs(cands: DataFrame, vecs: DataFrame,
+      threshold: Double, broadcastSides: Boolean): DataFrame = {
+    val tagged = vecs.columns.contains("inBatch")
+    val sides = pairSides(cands)
+    val hint: DataFrame => DataFrame =
+      if (broadcastSides) df => broadcast(df) else identity
+    val aggs = Seq(
+      first(when(col("isA"), col("v")), ignoreNulls = true).as("va"),
+      first(when(!col("isA"), col("v")), ignoreNulls = true).as("vb")) ++
+      (if (tagged)
+        Seq(first(when(!col("isA"), col("inBatch")), ignoreNulls = true)
+          .as("bInBatch"))
+      else Nil)
+    val outCols = Seq(col("a"), col("b"),
+      cosine(col("va"), col("vb")).as("cos")) ++
+      (if (tagged) Seq(col("bInBatch")) else Nil)
+    vecs.join(hint(sides), "id")
+      .groupBy("a", "b")
+      .agg(aggs.head, aggs.tail: _*)
+      .filter(col("va").isNotNull && col("vb").isNotNull)
+      .select(outCols: _*)
+      .filter(col("cos") >= threshold)
   }
 
   /** The candidate pair list exploded to one row per pair SIDE —

@@ -29,15 +29,26 @@ import org.apache.spark.sql.functions._
   *    the union of all batches — the d54/e21 oracle gates and
   *    IncrementalIndexSpec pin this equality.
   *
-  * Cost shape per ingest: shingling/signatures O(batch text); candidate
-  * generation NEVER puts the index through an exchange
-  * ([[incrementalBucketCandidates]]: the batch's banded rows broadcast
-  * and the index's stream through a map-side hash probe; only over-cap
-  * mega-bucket rows shuffle, O(n·cap)-bounded); verification touches the
-  * shingle sets of candidate-pair members only (candidate-bounded
-  * broadcasts, the verifyJaccard discipline). The only index-proportional
-  * term left is a columnar scan of the signature table — a few hundred
-  * bytes per doc, no text, no kernel.
+  * Cost shape per ingest or probe of a bookmark-sized batch — three
+  * actions, none of which puts the index through an exchange:
+  *
+  *  - a sum over the persisted batch stats delta, which also runs the
+  *    O(batch text) shingling/signature kernel once into the batch caches;
+  *  - the stats pass ([[overCapAndBatchRows]]): the maintained occupancy
+  *    log, filtered map-side to the batch's own buckets, aggregates to
+  *    the over-cap list and an upper bound on the candidate count —
+  *    O(batch buckets × versions) rows, never a recount of the index;
+  *  - verification, which runs candidate generation inside its own plan
+  *    ([[incrementalBucketCandidates]]: the batch's banded rows broadcast
+  *    and the index's stream through a map-side hash probe; only over-cap
+  *    mega-bucket rows shuffle, O(n·cap)-bounded) and touches the stored
+  *    sets of candidate-pair members only (the verifyJaccard discipline,
+  *    its side broadcast gated on the stats pass's bound).
+  *
+  * Reading a log launches no job ([[VersionedTable.readAllVersions]]
+  * reads its schema on the driver). The only index-proportional term
+  * left is the columnar scan of the signature table inside verification
+  * — a few hundred bytes per doc, no text, no kernel.
   *
   * IVF: centroids train once at bootstrap and freeze (root/centroids,
   * snapshot convention); each ingest assigns ONLY the new vectors with the
@@ -130,7 +141,9 @@ object IncrementalIndex {
     *    the banded rows), which is the unavoidable cost of comparing a
     *    corpus against itself once. Both paths emit the same pair set
     *    (spec-pinned);
-    *  - sub-cap batch×batch pairs come from a batch-sized self-join;
+    *  - sub-cap batch×batch pairs come from the same join: the batch's
+    *    broadcast rows probe the batch rows as well as the index rows,
+    *    so the batch side is broadcast once per plan;
     *  - over-cap buckets (mega-clusters, rare by construction): ONLY
     *    their rows shuffle, into the same rank-chunk O(n·cap) scheme the
     *    one-shot paths use, batch-touching (merge: cross-shard) pairs
@@ -174,27 +187,29 @@ object IncrementalIndex {
     }
     val (normalI, bigI) = split(bandedI)
     val (normalB, bigB) = split(bandedB)
-    // batch×index: broadcast the batch's banded rows when small enough
-    val biPairs = normalI.as("i").join(hintB(normalB.as("b")),
-        col("i.band") === col("b.band") && col("i.bucket") === col("b.bucket") &&
-          col("i.doc") =!= col("b.doc"))
-      .select(least(col("i.doc"), col("b.doc")).as("a"),
-        greatest(col("i.doc"), col("b.doc")).as("b"))
-    def bbPairs(keep: org.apache.spark.sql.Column) =
-      normalB.as("l").join(hintB(normalB.as("r")),
-          col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-            col("l.doc") < col("r.doc") && keep)
-        .select(col("l.doc").as("a"), col("r.doc").as("b"))
-    val subCap = donors match {
-      case 0 => biPairs.unionAll(bbPairs(lit(true)))
-      case 1 => biPairs
-      case _ => biPairs.unionAll(bbPairs(col("l.sh") =!= col("r.sh")))
-    }
+    // shard tags: 0 marks index rows; below two donors the whole batch
+    // side is one shard, tag 1
+    val shB = if (donors >= 2) col("sh") else lit(1)
+    // ONE join, so the batch's banded rows broadcast once: they probe the
+    // index rows and — except at one donor — the batch rows themselves.
+    // A batch×batch pair comes out once (doc < bdoc), and from two donors
+    // on only across shards.
+    val ix = normalI.select(col("doc"), col("band"), col("bucket"), lit(0).as("sh"))
+    val probes =
+      if (donors == 1) ix
+      else ix.unionAll(normalB.select(col("doc"), col("band"), col("bucket"), shB.as("sh")))
+    val build = hintB(normalB.select(col("doc").as("bdoc"), col("band").as("bband"),
+      col("bucket").as("bbucket"), shB.as("bsh")))
+    val batchPair = col("doc") < col("bdoc") &&
+      (if (donors >= 2) col("sh") =!= col("bsh") else lit(true))
+    val subCap = probes.join(build, col("band") === col("bband") &&
+        col("bucket") === col("bbucket") && col("doc") =!= col("bdoc") &&
+        (col("sh") === 0 || batchPair))
+      .select(least(col("doc"), col("bdoc")).as("a"),
+        greatest(col("doc"), col("bdoc")).as("b"))
     if (!anyOver) return subCap.distinct()
     // over-cap buckets: rank-chunk over index∪batch members (same scheme
-    // as the one-shot caps), only batch-touching pairs emitted; below two
-    // donors the whole batch side is one shard, tag 1
-    val shB = if (donors >= 2) col("sh") else lit(1)
+    // as the one-shot caps), only batch-touching pairs emitted
     val big = bigI.withColumn("sh", lit(0))
       .unionAll(bigB.select(bigI.columns.map(col) :+ shB.as("sh"): _*))
       .withColumn("chunk", floor(
@@ -220,10 +235,74 @@ object IncrementalIndex {
     * bucket-count-bounded aggregate over a tiny stats table, so finding
     * the over-cap buckets costs O(buckets), never an index scan.
     */
-  private def bucketStats(banded: DataFrame): DataFrame =
+  private[graft] def bucketStats(banded: DataFrame): DataFrame =
     banded.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
 
-  /** Over-cap (band, bucket) list from maintained stats + this batch.
+  /** What the stats pass ([[overCapAndBatchRows]]) hands candidate
+    * generation and verification:
+    *
+    *  - `over`: the over-cap (band, bucket) list among the buckets the
+    *    batch touches, as a local relation, or None — then candidate
+    *    generation skips the over-cap split joins entirely;
+    *  - `batchRows`: the batch's banded row total, the batch-side
+    *    broadcast gate;
+    *  - `candidateBound`: an upper bound on the distinct candidate pairs,
+    *    the verify-side broadcast gate ([[broadcastSides]]).
+    */
+  private[graft] final case class StatsPass(over: Option[DataFrame], batchRows: Long,
+      candidateBound: Long) {
+    /** The exploded pair sides (2 rows per candidate) fit the broadcast
+      * budget. The side list is pair-count-sized, not batch-sized: gated
+      * on batch rows, the r14 100× real-mode rehearsal collected a
+      * multi-GB side broadcast from a sub-gate 667k-row batch whose
+      * 16-bit SimHash bands collide quadratically with corpus growth.
+      * The bound is never below the distinct candidate count, so this
+      * never broadcasts what an exact count would refuse.
+      */
+    def broadcastSides(broadcastRowLimit: Long): Boolean =
+      2L * candidateBound <= broadcastRowLimit
+  }
+
+  /** Materializes a verified pair frame before the batch caches it reads
+    * are released. `small` — the stats pass's sides-broadcast verdict,
+    * under which the pair list is no longer than the side list that
+    * already went through the driver — collects it into a local
+    * relation, so the caller's own collect or write runs no job on it;
+    * otherwise it is persisted (the caller may unpersist it).
+    */
+  private def materializePairs(spark: SparkSession, pairs: DataFrame,
+      small: Boolean): DataFrame =
+    if (small) spark.createDataFrame(java.util.Arrays.asList(pairs.collect(): _*), pairs.schema)
+    else Dedup.persisted(pairs)
+
+  /** The stats pass: the over-cap list, the batch's banded row total and
+    * the candidate bound (see [[StatsPass]]), from one small action and
+    * one aggregate.
+    *
+    *  - The small action sums the persisted batch delta: `batchRows`,
+    *    exact, which also materializes the batch caches every later step
+    *    reads.
+    *  - Only buckets the batch touches can yield a pair: an over-cap
+    *    bucket without batch rows emits only index×index pairs, which
+    *    candidate generation drops anyway. So when the batch side
+    *    broadcasts (`batchRows` ≤ `broadcastRowLimit`) the maintained log
+    *    is semi-joined map-side to the batch's (band, bucket) keys before
+    *    any exchange, and the aggregate moves about one row per batch
+    *    bucket and version. A backfill-sized batch keeps the unfiltered
+    *    shuffle and drops untouched buckets after the aggregate.
+    *  - Per touched bucket with occupancy `occ` (maintained log + batch)
+    *    and `bn` batch rows, at most bn·(occ−bn) index×batch plus
+    *    bn·(bn−1)/2 batch×batch pairs exist; in an over-cap bucket a row
+    *    pairs only with its own rank chunk and the two adjacent ones, so
+    *    the term is also at most bn·3·cap. Occupancy never undercounts
+    *    (retractions and crash windows only overcount), so the sum bounds
+    *    the distinct candidates at every donor count. It is a global sum
+    *    in the same aggregate that collects the over-cap list.
+    *
+    * The over-cap list is over-cap-bucket-bounded and ships to every
+    * executor as a broadcast anyway, so collecting it first costs no
+    * extra driver memory.
+    *
     * `excludeEpoch` (the `*Epoch` ingests pass their epoch id) pins the
     * maintained side to the PRE-epoch version set: a replay whose first
     * attempt crashed after the stats leg would otherwise read its own
@@ -238,38 +317,30 @@ object IncrementalIndex {
     * ([[commitEpoch]]) plus this pin make the replay's artifacts AND the
     * accumulated stats log identical to a no-crash run.
     */
-  /** The over-cap (band, bucket) list AND the batch's banded row total in
-    * ONE job: a grouping-sets aggregate over (maintained stats ∪ batch
-    * delta) emits the per-bucket occupancy rows plus one global row whose
-    * batch-only sum is exactly `bandedB.count()` — so the broadcast-gate
-    * count that used to be its own action (and its own pass over the
-    * persisted banded rows) rides the stats pass for free.
-    *
-    * The over-cap list is over-cap-bucket-bounded and ALREADY ships to
-    * every executor as a broadcast — collecting it to the driver first is
-    * the same size bound, and replaces TWO executions of the stats
-    * aggregate (the old `isEmpty` probe + the broadcast's own recompute)
-    * with one. None (the common case) lets candidate generation skip the
-    * over-cap split joins entirely.
-    */
-  private def overCapAndBatchRows(spark: SparkSession, statsRoot: String,
-      batchStats: DataFrame, bucketCap: Int,
-      excludeEpoch: Option[Long] = None): (Option[DataFrame], Long) = {
+  private[graft] def overCapAndBatchRows(spark: SparkSession, statsRoot: String,
+      batchStats: DataFrame, bucketCap: Int, broadcastRowLimit: Long,
+      excludeEpoch: Option[Long] = None): StatsPass = {
+    val batchRows = batchStats.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
+    val keys = batchStats.select("band", "bucket")
     val tagged = batchStats.withColumn("bn", col("n"))
-    val all = statsBeforeEpoch(spark, statsRoot, excludeEpoch)
-      .map(_.withColumn("bn", lit(0L)).unionAll(tagged)).getOrElse(tagged)
-    val rows = all
-      .groupingSets(Seq(Seq(col("band"), col("bucket")), Seq.empty),
-        col("band"), col("bucket"))
-      .agg(sum(col("n")).as("occ"), sum(col("bn")).as("bn"),
-        grouping_id().as("gid"))
-      .filter(col("gid") =!= 0 || col("occ") > bucketCap)
-      .collect()
-    val batchRows = rows.find(r => r.getLong(r.length - 1) != 0L)
-      .map(r => if (r.isNullAt(r.length - 2)) 0L else r.getLong(r.length - 2))
-      .getOrElse(0L)
-    val over = rows.filter(r => r.getLong(r.length - 1) == 0L)
-      .map(r => org.apache.spark.sql.Row(r.get(0), r.get(1)))
+    val all = statsBeforeEpoch(spark, statsRoot, excludeEpoch).map { log =>
+      val touched =
+        if (batchRows <= broadcastRowLimit)
+          log.join(broadcast(keys), Seq("band", "bucket"), "left_semi")
+        else log
+      touched.withColumn("bn", lit(0L)).unionAll(tagged)
+    }.getOrElse(tagged)
+    val isOver = col("occ") > bucketCap
+    val pairs = expr("bn * (occ - bn) + bn * (bn - 1) div 2")
+    val row = all.groupBy("band", "bucket")
+      .agg(sum(col("n")).as("occ"), sum(col("bn")).as("bn"))
+      .filter(col("bn") > 0)
+      .agg(
+        coalesce(sum(when(isOver, least(pairs, col("bn") * 3L * bucketCap))
+          .otherwise(pairs)), lit(0L)),
+        collect_list(when(isOver, struct(col("band"), col("bucket")))))
+      .head()
+    val over = row.getSeq[org.apache.spark.sql.Row](1)
     val overDf =
       if (over.isEmpty) None
       else {
@@ -277,7 +348,7 @@ object IncrementalIndex {
           all.schema("band") :: all.schema("bucket") :: Nil)
         Some(spark.createDataFrame(java.util.Arrays.asList(over: _*), schema))
       }
-    (overDf, batchRows)
+    StatsPass(overDf, batchRows, row.getLong(0))
   }
 
   /** The maintained stats log, EXCLUDING the version `excludeEpoch`'s
@@ -315,8 +386,7 @@ object IncrementalIndex {
       xxhash64((j * r until (j + 1) * r).map(i => element_at(col("sig"), i + 1)): _*)
     }
     sigs.select(col("id").as("doc"), col("sz").as("rk"),
-        posexplode(array(bandHashes: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+      posexplode(array(bandHashes: _*)).as(Seq("band", "bucket")))
   }
 
   /** Stored signature rows for a batch: (id, sz, sig, hs) — `sz` is the
@@ -341,15 +411,15 @@ object IncrementalIndex {
     */
   def readMinHashIndex(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, root, upTo))
+    readLive(spark, root, root, upTo)
 
   /** Ingest one batch: compute ITS signatures, find the verified near-dup
     * pairs this batch adds (batch-internal + batch×index, never
     * index×index), append the batch's signatures as the next index
     * version. Returns (committed version, new verified pairs (a, b,
-    * jaccard) with a < b) — the pairs frame is persisted and materialized;
-    * the caller owns the unpersist. An empty index root bootstraps
+    * jaccard) with a < b) — the pairs frame is materialized (a local
+    * relation when the stats pass bounds it small, else persisted: the
+    * caller owns the unpersist). An empty index root bootstraps
     * naturally (the first ingest's pairs are its internal ones).
     */
   /** The compute half of a MinHash ingest: (persisted batch signatures,
@@ -369,54 +439,49 @@ object IncrementalIndex {
       val haveIndex = VersionedTable.versions(spark, root).nonEmpty
       val prior =
         if (haveIndex) Some(readMinHashIndex(spark, root)) else None
-      // banded batch rows feed several joins (broadcast probes + the
-      // stats delta) — persist them so the signature kernel runs once;
-      // the INDEX side is a map-only derivation over its parquet scan
-      // and never enters an exchange (see incrementalBucketCandidates)
+      // banded batch rows feed the stats delta and both sides of the
+      // candidate join — persist them so the 32 band hashes per doc run
+      // once; the INDEX side is a map-only derivation over its parquet
+      // scan and never enters an exchange (see incrementalBucketCandidates)
       val bandedB = bandedOf(
         batchSigs.select("id", "sz", "sig"), p.numHashes, p.bands).persist()
       // persisted: the stats delta executes TWICE per ingest otherwise —
-      // once inside the over-cap collect job, once re-aggregated from the
-      // banded cache by the sidecar write (JobProfile d56: the write job
-      // re-ran the full hash aggregate). Bucket-bounded, released with
-      // the banded cache.
+      // once inside the stats pass, once re-aggregated by the sidecar
+      // write (JobProfile d56: the write job re-ran the full hash
+      // aggregate). Bucket-bounded, released with the banded cache.
       val batchStats = bucketStats(bandedB).persist()
       val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes the banded cache, collects the over-cap
-      // list AND the broadcast-gate row count (see overCapAndBatchRows)
-      val (over, batchRows) = overCapAndBatchRows(spark, statsRoot,
-        batchStats, p.bucketCap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          bandedOf(ix.select(col("id"), col("sz"), col("sig")), p.numHashes, p.bands),
-          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit)
-        case None =>
+      // materializes the batch caches; over-cap list, batch-side gate and
+      // candidate bound (see overCapAndBatchRows)
+      val stats = overCapAndBatchRows(spark, statsRoot, batchStats,
+        p.bucketCap, p.broadcastRowLimit, excludeEpoch)
+      // verify is the candidates' only consumer: not persisted
+      val cands = incrementalBucketCandidates(
+        prior.map(ix => bandedOf(ix.select(col("id"), col("sz"), col("sig")),
+          p.numHashes, p.bands))
           // bootstrap: the batch IS the corpus — over the row limit the
           // gate drops the broadcast hint and this becomes the genuine
-          // one-shot shuffle shape (empty index side + banded self-join)
-          incrementalBucketCandidates(
-            bandedB.filter(lit(false)), bandedB, p.bucketCap, over,
-            batchRows, p.broadcastRowLimit)
-      }).persist()
-      try {
-        // verification shingle sets: stored for index rows, fresh for the
-        // batch; verifyJaccard prunes to candidate ids via broadcast
-        // before any wide array moves
-        val shingled = prior match {
-          case Some(ix) => ix.select(col("id"), col("hs"))
-            .unionAll(batchSigs.select("id", "hs"))
-          case None => batchSigs.select("id", "hs")
-        }
-        // persisted + materialized inside, while the caches are hot
-        val verified = Dedup.verifyJaccard(cands, shingled, "id", "hs",
-          p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        MinHashArtifacts(batchSigs, batchStats, verified, () => {
-          batchStats.unpersist(blocking = false)
-          bandedB.unpersist(blocking = false)
-          batchSigs.unpersist(blocking = false)
-        })
-      } finally cands.unpersist(blocking = false)
+          // one-shot shuffle shape (an empty index side + the batch's
+          // banded rows joined with themselves)
+          .getOrElse(bandedB.filter(lit(false))),
+        bandedB, p.bucketCap, stats.over, stats.batchRows, p.broadcastRowLimit)
+      // verification shingle sets: stored for index rows, fresh for the
+      // batch; verifyJaccard prunes to candidate ids via broadcast
+      // before any wide array moves
+      val shingled = prior match {
+        case Some(ix) => ix.select(col("id"), col("hs"))
+          .unionAll(batchSigs.select("id", "hs"))
+        case None => batchSigs.select("id", "hs")
+      }
+      // materialized while the caches are hot
+      val small = stats.broadcastSides(p.broadcastRowLimit)
+      val verified = materializePairs(spark, Dedup.jaccardPairs(cands, shingled,
+        "id", "hs", p.threshold, small), small)
+      MinHashArtifacts(batchSigs, batchStats, verified, () => {
+        batchStats.unpersist(blocking = false)
+        bandedB.unpersist(blocking = false)
+        batchSigs.unpersist(blocking = false)
+      })
     } catch {
       case t: Throwable => batchSigs.unpersist(blocking = false); throw t
     }
@@ -453,7 +518,7 @@ object IncrementalIndex {
     * only committed versions, so they never contend with the
     * single-writer-per-lineage rule the epoch guard enforces. Exchange
     * discipline is the ingest's own (index map-side under the broadcast
-    * gate). Caller owns the returned persisted frame's unpersist.
+    * gate). The returned frame is materialized as in [[ingestMinHash]].
     */
   def probeMinHash(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, textCol: String,
@@ -623,24 +688,24 @@ object IncrementalIndex {
       p: MinHashParams = MinHashParams()): Option[(Long, DataFrame)] =
     mergeBanded(spark, root, donorRoots, minHashFamily(p), Some((epochId, pairsRoot)))
 
-  private def minHashFamily(p: MinHashParams) = BandedFamily(
+  private[graft] def minHashFamily(p: MinHashParams) = BandedFamily(
     readMinHashIndex(_, _),
     rows => bandedOf(rows.select("id", "sz", "sig"), p.numHashes, p.bands),
-    (cands, rows) => Dedup.verifyJaccard(cands, rows.select("id", "hs"),
-      "id", "hs", p.threshold,
-      broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit)),
+    (cands, rows, broadcastSides) => Dedup.jaccardPairs(cands,
+      rows.select("id", "hs"), "id", "hs", p.threshold, broadcastSides),
     p.bucketCap, p.broadcastRowLimit)
 
   /** What the banded merge engine ([[mergeBanded]]) needs to know about
     * one adoption family (MinHash, SimHash, SRP): how to read its live
     * index rows, how to band them — selecting only the narrow banding
     * columns — and how to verify a candidate list against live rows
-    * (returning the verified pairs persisted and materialized).
+    * under the stats pass's sides-broadcast verdict (returning the
+    * verified pairs unmaterialized).
     */
-  private final case class BandedFamily(
+  private[graft] final case class BandedFamily(
       read: (SparkSession, String) => DataFrame,
       banded: DataFrame => DataFrame,
-      verify: (DataFrame, DataFrame) => DataFrame,
+      verify: (DataFrame, DataFrame, Boolean) => DataFrame,
       bucketCap: Int, broadcastRowLimit: Long)
 
   /** The shard merge of every adoption family, for any number of donors
@@ -669,20 +734,24 @@ object IncrementalIndex {
     val bandedD = donors.zipWithIndex.map { case (d, i) =>
       f.banded(d).withColumn("sh", lit(i + 1))
     }.reduce(_.unionAll(_)).persist()
+    // the stats pass reads the donor delta up to three times (the size
+    // action, the key broadcast, the aggregate)
+    val donorStats = bucketStats(bandedD).persist()
     try {
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark,
-        subRoot(root, "bucketstats"), bucketStats(bandedD), f.bucketCap,
-        epoch.map(_._1))
+      val stats = overCapAndBatchRows(spark, subRoot(root, "bucketstats"),
+        donorStats, f.bucketCap, f.broadcastRowLimit, epoch.map(_._1))
       val cands = incrementalBucketCandidates(f.banded(index), bandedD,
-        f.bucketCap, over, donorRows, f.broadcastRowLimit,
-        donors = donorRoots.size).persist()
-      try {
-        val verified = f.verify(cands, (index +: donors).reduce(_.unionAll(_)))
-        Some((adoptDonors(spark, root, donorRoots, identity,
-          Some(subRoot(_, "bucketstats")), epoch, verified), verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
+        f.bucketCap, stats.over, stats.batchRows, f.broadcastRowLimit,
+        donors = donorRoots.size)
+      val small = stats.broadcastSides(f.broadcastRowLimit)
+      val verified = materializePairs(spark,
+        f.verify(cands, (index +: donors).reduce(_.unionAll(_)), small), small)
+      Some((adoptDonors(spark, root, donorRoots, identity,
+        Some(subRoot(_, "bucketstats")), epoch, verified), verified))
+    } finally {
+      donorStats.unpersist(blocking = false)
+      bandedD.unpersist(blocking = false)
+    }
   }
 
   /** LOG ADOPTION of every donor into `root`, in the crash-safe leg
@@ -1017,8 +1086,7 @@ object IncrementalIndex {
   /** All (id, fp) fingerprint rows ingested so far, minus retracted ids. */
   def readExactIndex(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, exactFpRoot(root), upTo))
+    readLive(spark, root, exactFpRoot(root), upTo)
 
   /** Merge an independently-built exact-dedup index into `root` — the
     * verdict-family face of shard-parallel bootstrap
@@ -1187,8 +1255,7 @@ object IncrementalIndex {
     val blockCols = (0 until 4).map(b =>
       shiftright(col("sig"), b * 16).bitwiseAND(0xFFFF))
     sigs.select(col("id").as("doc"), col("id").as("rk"),
-        posexplode(array(blockCols: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+      posexplode(array(blockCols: _*)).as(Seq("band", "bucket")))
   }
 
   /** All SimHash signature rows indexed so far, minus retracted ids
@@ -1198,8 +1265,7 @@ object IncrementalIndex {
     */
   def readSimHashIndex(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, root, upTo))
+    readLive(spark, root, root, upTo)
 
   /** Ingest one batch into a SimHash near-dup index: sign ONLY the
     * batch (one 60-bit signature per doc), generate block-collision
@@ -1243,31 +1309,23 @@ object IncrementalIndex {
       val prior = if (haveIndex) Some(readSimHashIndex(spark, root)) else None
       val bandedB = bandedOfSimHash(batchSigs).persist()
       // persisted: the stats delta otherwise executes twice per ingest
-      // (the over-cap collect job + the sidecar write) — see the
+      // (the stats pass + the sidecar write) — see the
       // minHashBatchArtifacts note / JobProfile d56
       val batchStats = bucketStats(bandedB).persist()
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, batchRows) = overCapAndBatchRows(spark, statsRoot,
-        batchStats, bucketCap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          bandedOfSimHash(ix), bandedB, bucketCap, over,
-          batchRows, broadcastRowLimit)
-        case None => incrementalBucketCandidates(
-          bandedB.filter(lit(false)), bandedB, bucketCap, over,
-          batchRows, broadcastRowLimit)
-      }).persist()
-      try {
-        val verified = verifyHamming(cands,
-          prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs),
-          maxHamming, broadcastRowLimit)
-        SimHashArtifacts(batchSigs, batchStats, verified, () => {
-          batchStats.unpersist(blocking = false)
-          bandedB.unpersist(blocking = false)
-          batchSigs.unpersist(blocking = false)
-        })
-      } finally cands.unpersist(blocking = false)
+      val stats = overCapAndBatchRows(spark, subRoot(root, "bucketstats"),
+        batchStats, bucketCap, broadcastRowLimit, excludeEpoch)
+      val cands = incrementalBucketCandidates(
+        prior.map(bandedOfSimHash).getOrElse(bandedB.filter(lit(false))),
+        bandedB, bucketCap, stats.over, stats.batchRows, broadcastRowLimit)
+      val small = stats.broadcastSides(broadcastRowLimit)
+      val verified = materializePairs(spark, hammingPairs(cands,
+        prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs), maxHamming, small),
+        small)
+      SimHashArtifacts(batchSigs, batchStats, verified, () => {
+        batchStats.unpersist(blocking = false)
+        bandedB.unpersist(blocking = false)
+        batchSigs.unpersist(blocking = false)
+      })
     } catch {
       case t: Throwable => batchSigs.unpersist(blocking = false); throw t
     }
@@ -1275,23 +1333,21 @@ object IncrementalIndex {
 
   /** Exact popcount verification of SimHash candidates against stored
     * (id, sig) rows: (a, b, hamming) with hamming ≤ `maxHamming`,
-    * persisted and materialized. The verifyJaccard exchange shape:
+    * unmaterialized. The verifyJaccard exchange shape:
     * exploded pair sides broadcast into ONE scan of the signature log
     * (the per-side prune form scanned it once per broadcast subtree),
-    * signatures re-pair in a candidate-bounded aggregate. The broadcast
-    * gate is the one candidate generation uses (see verifyJaccard's
-    * broadcastSides): above it the exploded sides take a plain id
+    * signatures re-pair in a candidate-bounded aggregate.
+    * `broadcastSides` is the stats pass's verdict (see verifyJaccard's
+    * broadcastSides): without it the exploded sides take a plain id
     * shuffle join — the r14 100× SimHash shard bootstrap died building
     * this broadcast (>1 GiB of serialized results vs the 1 GiB driver
     * default).
     */
-  private def verifyHamming(cands: DataFrame, sigs: DataFrame,
-      maxHamming: Int, broadcastRowLimit: Long): DataFrame = {
+  private def hammingPairs(cands: DataFrame, sigs: DataFrame,
+      maxHamming: Int, broadcastSides: Boolean): DataFrame = {
     val sidesHint: DataFrame => DataFrame =
-      if (Dedup.sidesBroadcastable(cands, broadcastRowLimit))
-        df => broadcast(df)
-      else identity
-    val verified = sigs.select(col("id"), col("sig"))
+      if (broadcastSides) df => broadcast(df) else identity
+    sigs.select(col("id"), col("sig"))
       .join(sidesHint(Dedup.pairSides(cands)), "id")
       .groupBy("a", "b")
       .agg(
@@ -1301,9 +1357,6 @@ object IncrementalIndex {
       .select(col("a"), col("b"),
         bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .persist()
-    verified.count()
-    verified
   }
 
   def ingestSimHash(spark: SparkSession, root: String, batch: DataFrame,
@@ -1456,10 +1509,10 @@ object IncrementalIndex {
       simHashFamily(maxHamming, bucketCap, broadcastRowLimit),
       Some((epochId, pairsRoot)))
 
-  private def simHashFamily(maxHamming: Int, bucketCap: Int,
+  private[graft] def simHashFamily(maxHamming: Int, bucketCap: Int,
       broadcastRowLimit: Long) = BandedFamily(
     readSimHashIndex(_, _), bandedOfSimHash,
-    verifyHamming(_, _, maxHamming, broadcastRowLimit),
+    hammingPairs(_, _, maxHamming, _),
     bucketCap, broadcastRowLimit)
 
   /** Compact a SimHash index (signature log + stats sidecar). */
@@ -1489,7 +1542,7 @@ object IncrementalIndex {
 
   private def prefixDfRoot(root: String) = subRoot(root, "dfstats")
   private def prefixTokRoot(root: String) = subRoot(root, "tokens")
-  private def prefixStatsRoot(root: String) = subRoot(root, "prefixstats")
+  private[graft] def prefixStatsRoot(root: String) = subRoot(root, "prefixstats")
 
   /** Incremental twin of [[Dedup.prefixJaccardJoin]] (the EXACT PPJoin
     * path, d40). Thresholds are the exact rational num/den; defaults
@@ -1532,7 +1585,7 @@ object IncrementalIndex {
     * row limit; past it (bootstrap/backfill) both joins fall back to
     * plain shuffles.
     */
-  private def prefixSortedSets(spark: SparkSession, root: String,
+  private[graft] def prefixSortedSets(spark: SparkSession, root: String,
       sets: DataFrame, p: PrefixJaccardParams, batchSetRows: Long): DataFrame = {
     val hintB: DataFrame => DataFrame =
       if (batchSetRows <= p.broadcastRowLimit) df => broadcast(df) else identity
@@ -1554,7 +1607,7 @@ object IncrementalIndex {
     * rank chunks by (n, id) — a true pair at t has size ratio within
     * [t, 1/t], so adjacent-size chunking preserves it). Map-only.
     */
-  private def bandedOfPrefix(tok: DataFrame): DataFrame =
+  private[graft] def bandedOfPrefix(tok: DataFrame): DataFrame =
     tok.select(col("id").as("doc"), col("n").cast("long").as("rk"),
       lit(0).as("band"), explode(expr("slice(toks, 1, p)")).as("bucket"))
 
@@ -1565,8 +1618,7 @@ object IncrementalIndex {
     */
   def readPrefixIndex(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, prefixTokRoot(root), upTo))
+    readLive(spark, root, prefixTokRoot(root), upTo)
 
   /** Ingest one batch of distinct (id, elem) set rows: sort ONLY the
     * batch under the frozen element order, find the exact
@@ -1586,8 +1638,7 @@ object IncrementalIndex {
     * emitted by exactly the ingest that indexes its later-arriving
     * member — so the equality is split/order invariant, the d54
     * theorem). Returns (committed version, new pairs (ia, ib, inter,
-    * un) with ia < ib), pairs persisted + materialized, caller
-    * unpersists.
+    * un) with ia < ib), pairs materialized as in [[ingestMinHash]].
     */
   private final case class PrefixArtifacts(
       batchTok: DataFrame, batchStats: DataFrame, verified: DataFrame,
@@ -1625,54 +1676,49 @@ object IncrementalIndex {
             case (d, i) => d.select(col("id").as("doc"), lit(i + 1).as("sh"))
           }.reduce(_.unionAll(_)), "doc")).persist()
         // persisted: the stats delta otherwise executes twice per ingest
-        // (the over-cap collect job + the sidecar write) — see the
+        // (the stats pass + the sidecar write) — see the
         // minHashBatchArtifacts note / JobProfile d56
         val batchStats = bucketStats(bandedB).persist()
-        // one job: materializes, collects over-cap list + gate row count
-        val (over, batchRows) = overCapAndBatchRows(spark,
-          prefixStatsRoot(root), batchStats, p.bucketCap, excludeEpoch)
+        val stats = overCapAndBatchRows(spark, prefixStatsRoot(root),
+          batchStats, p.bucketCap, p.broadcastRowLimit, excludeEpoch)
         val cands = incrementalBucketCandidates(
           prior.map(bandedOfPrefix).getOrElse(bandedB.filter(lit(false))),
-          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit,
-          donors = donorIds.size).persist()
-        try {
-          // verification with the verifyJaccard exchange discipline: the
-          // candidate pair list explodes to per-side probe rows that
-          // broadcast into ONE scan of the token log (a parquet read —
-          // the per-side prune form paid it twice), and each pair's two
-          // sorted-element arrays re-pair through a pair-bounded
-          // aggregate; prefix candidates are sparse by construction
-          val toks = prior.map(_.unionAll(batchTok)).getOrElse(batchTok)
-          // broadcast-gate verdict shared with candidate generation
-          // (see verifyJaccard's broadcastSides)
-          val sidesHint: DataFrame => DataFrame =
-            if (Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-              df => broadcast(df)
-            else identity
-          val verified = toks.select(col("id"), col("toks"), col("n"))
-            .join(sidesHint(Dedup.pairSides(cands)), "id")
-            .groupBy("a", "b")
-            .agg(
-              first(when(col("isA"), col("toks")), ignoreNulls = true).as("ta"),
-              first(when(col("isA"), col("n")), ignoreNulls = true).as("na"),
-              first(when(!col("isA"), col("toks")), ignoreNulls = true).as("tb"),
-              first(when(!col("isA"), col("n")), ignoreNulls = true).as("nb"))
-            .filter(col("ta").isNotNull && col("tb").isNotNull)
-            .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
-            .withColumn("un", col("na") + col("nb") - col("inter"))
-            .filter(lit(p.den) * col("inter") >= lit(p.num) * col("un"))
-            .select(col("a").as("ia"), col("b").as("ib"),
-              col("inter").cast("long").as("inter"), col("un").cast("long").as("un"))
-            .persist()
-          verified.count() // materialize while the caches are hot
-          PrefixArtifacts(batchTok.sortWithinPartitions("id"), batchStats,
-            verified, () => {
-              batchStats.unpersist(blocking = false)
-              bandedB.unpersist(blocking = false)
-              batchTok.unpersist(blocking = false)
-              s0.unpersist(blocking = false)
-            })
-        } finally cands.unpersist(blocking = false)
+          bandedB, p.bucketCap, stats.over, stats.batchRows, p.broadcastRowLimit,
+          donors = donorIds.size)
+        // verification with the verifyJaccard exchange discipline: the
+        // candidate pair list explodes to per-side probe rows that
+        // broadcast into ONE scan of the token log (a parquet read —
+        // the per-side prune form paid it twice), and each pair's two
+        // sorted-element arrays re-pair through a pair-bounded
+        // aggregate; prefix candidates are sparse by construction
+        val toks = prior.map(_.unionAll(batchTok)).getOrElse(batchTok)
+        // the stats pass's verdict (see verifyJaccard's broadcastSides)
+        val small = stats.broadcastSides(p.broadcastRowLimit)
+        val sidesHint: DataFrame => DataFrame =
+          if (small) df => broadcast(df) else identity
+        val pairs = toks.select(col("id"), col("toks"), col("n"))
+          .join(sidesHint(Dedup.pairSides(cands)), "id")
+          .groupBy("a", "b")
+          .agg(
+            first(when(col("isA"), col("toks")), ignoreNulls = true).as("ta"),
+            first(when(col("isA"), col("n")), ignoreNulls = true).as("na"),
+            first(when(!col("isA"), col("toks")), ignoreNulls = true).as("tb"),
+            first(when(!col("isA"), col("n")), ignoreNulls = true).as("nb"))
+          .filter(col("ta").isNotNull && col("tb").isNotNull)
+          .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
+          .withColumn("un", col("na") + col("nb") - col("inter"))
+          .filter(lit(p.den) * col("inter") >= lit(p.num) * col("un"))
+          .select(col("a").as("ia"), col("b").as("ib"),
+            col("inter").cast("long").as("inter"), col("un").cast("long").as("un"))
+        // materialized while the caches are hot
+        val verified = materializePairs(spark, pairs, small)
+        PrefixArtifacts(batchTok.sortWithinPartitions("id"), batchStats,
+          verified, () => {
+            batchStats.unpersist(blocking = false)
+            bandedB.unpersist(blocking = false)
+            batchTok.unpersist(blocking = false)
+            s0.unpersist(blocking = false)
+          })
       } catch {
         case t: Throwable => batchTok.unpersist(blocking = false); throw t
       }
@@ -1894,20 +1940,19 @@ object IncrementalIndex {
     * mega-bucket-only shuffle).
     */
   private def bandedOfSrp(sigs: DataFrame): DataFrame = sigs
-    .select(col("id").as("doc"), col("p").as("rk"), posexplode(col("sig")))
-    .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+    .select(col("id").as("doc"), col("p").as("rk"),
+      posexplode(col("sig")).as(Seq("band", "bucket")))
 
   /** All embedding-signature rows indexed so far, minus retracted ids. */
   def readSrpIndex(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, root, upTo))
+    readLive(spark, root, root, upTo)
 
   /** Ingest one embedding batch: sign ONLY the batch, find the verified
     * near-dup pairs it adds (batch-internal + batch×index — index×index
     * excluded by [[incrementalBucketCandidates]]), append the batch's
     * signature rows as the next version. Returns (version, pairs (a, b,
-    * cos) with a < b), pairs persisted + materialized, caller unpersists.
+    * cos) with a < b), pairs materialized as in [[ingestMinHash]].
     */
   private final case class SrpArtifacts(
       batchSigs: DataFrame, batchStats: DataFrame, verified: DataFrame,
@@ -1922,35 +1967,28 @@ object IncrementalIndex {
       val prior = if (haveIndex) Some(readSrpIndex(spark, root)) else None
       val bandedB = bandedOfSrp(batchSigs.select("id", "p", "sig")).persist()
       // persisted: the stats delta otherwise executes twice per ingest
-      // (the over-cap collect job + the sidecar write) — see the
+      // (the stats pass + the sidecar write) — see the
       // minHashBatchArtifacts note / JobProfile d56
       val batchStats = bucketStats(bandedB).persist()
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, batchRows) = overCapAndBatchRows(spark, statsRoot,
-        batchStats, p.bucketCap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          bandedOfSrp(ix.select(col("id"), col("p"), col("sig"))),
-          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit)
-        case None => incrementalBucketCandidates(
-          bandedB.filter(lit(false)), bandedB, p.bucketCap, over,
-          batchRows, p.broadcastRowLimit)
-      }).persist()
-      try {
-        val vecs = prior match {
-          case Some(ix) => ix.select(col("id"), col("v"))
-            .unionAll(batchSigs.select("id", "v"))
-          case None => batchSigs.select("id", "v")
-        }
-        val verified = Dedup.verifyCosine(cands, vecs, p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        SrpArtifacts(batchSigs, batchStats, verified, () => {
-          batchStats.unpersist(blocking = false)
-          bandedB.unpersist(blocking = false)
-          batchSigs.unpersist(blocking = false)
-        })
-      } finally cands.unpersist(blocking = false)
+      val stats = overCapAndBatchRows(spark, subRoot(root, "bucketstats"),
+        batchStats, p.bucketCap, p.broadcastRowLimit, excludeEpoch)
+      val cands = incrementalBucketCandidates(
+        prior.map(ix => bandedOfSrp(ix.select(col("id"), col("p"), col("sig"))))
+          .getOrElse(bandedB.filter(lit(false))),
+        bandedB, p.bucketCap, stats.over, stats.batchRows, p.broadcastRowLimit)
+      val vecs = prior match {
+        case Some(ix) => ix.select(col("id"), col("v"))
+          .unionAll(batchSigs.select("id", "v"))
+        case None => batchSigs.select("id", "v")
+      }
+      val small = stats.broadcastSides(p.broadcastRowLimit)
+      val verified = materializePairs(spark,
+        Dedup.cosinePairs(cands, vecs, p.threshold, small), small)
+      SrpArtifacts(batchSigs, batchStats, verified, () => {
+        batchStats.unpersist(blocking = false)
+        bandedB.unpersist(blocking = false)
+        batchSigs.unpersist(blocking = false)
+      })
     } catch {
       case t: Throwable => batchSigs.unpersist(blocking = false); throw t
     }
@@ -2035,12 +2073,11 @@ object IncrementalIndex {
       p: SrpParams): Option[(Long, DataFrame)] =
     mergeBanded(spark, root, donorRoots, srpFamily(p), Some((epochId, pairsRoot)))
 
-  private def srpFamily(p: SrpParams) = BandedFamily(
+  private[graft] def srpFamily(p: SrpParams) = BandedFamily(
     readSrpIndex(_, _),
     rows => bandedOfSrp(rows.select("id", "p", "sig")),
-    (cands, rows) => Dedup.verifyCosine(cands, rows.select("id", "v"),
-      p.threshold,
-      broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit)),
+    (cands, rows, broadcastSides) => Dedup.cosinePairs(cands,
+      rows.select("id", "v"), p.threshold, broadcastSides),
     p.bucketCap, p.broadcastRowLimit)
 
   // ------------------------------------------------------------- SemDeDup
@@ -2280,19 +2317,15 @@ object IncrementalIndex {
         lit(0).as("band"), col("cid").as("bucket"))
       val bandedB = banded(assigned).persist()
       // persisted: the stats delta otherwise executes twice per ingest
-      // (the over-cap collect job + the sidecar write) — see the
+      // (the stats pass + the sidecar write) — see the
       // minHashBatchArtifacts note / JobProfile d56
       val batchStats = bucketStats(bandedB).persist()
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, batchRows) = overCapAndBatchRows(spark,
-        subRoot(root, "cellstats"), batchStats, cap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          banded(ix), bandedB, cap, over, batchRows, broadcastRowLimit)
-        case None => incrementalBucketCandidates(
-          bandedB.filter(lit(false)), bandedB, cap, over,
-          batchRows, broadcastRowLimit)
-      }).persist()
+      val stats = overCapAndBatchRows(spark, subRoot(root, "cellstats"),
+        batchStats, cap, broadcastRowLimit, excludeEpoch)
+      // persisted: the pair-dense verify reads the candidates twice
+      val cands = incrementalBucketCandidates(
+        prior.map(banded).getOrElse(bandedB.filter(lit(false))), bandedB,
+        cap, stats.over, stats.batchRows, broadcastRowLimit).persist()
       try {
         // each side tagged with batch membership: the verify pass then
         // carries `bInBatch` per pair, and every post-verify derivation
@@ -2463,8 +2496,7 @@ object IncrementalIndex {
   /** All (id, cid) assignments ingested so far, minus retracted ids. */
   def readIvfAssignments(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, assignRoot(root), upTo))
+    readLive(spark, root, assignRoot(root), upTo)
 
   // ------------------------------------------------------------------- PQ
 
@@ -2547,8 +2579,7 @@ object IncrementalIndex {
   /** All (id, codes) rows ingested so far, minus retracted ids. */
   def readPqCodes(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, pqCodesRoot(root), upTo))
+    readLive(spark, root, pqCodesRoot(root), upTo)
 
   /** PQ top-k over the PERSISTED code index: the ADC scan reads stored
     * codes (nothing re-encodes the corpus — at 100 TB the encode pass is
@@ -2609,6 +2640,15 @@ object IncrementalIndex {
     * construction (retractions are rare events, and [[purgeDedupIndex]]
     * resets the log) — AQE plans the anti-join as a broadcast.
     */
+  /** The live rows of the delta log `dataRoot` under the index `root`
+    * (optionally up to a version pin): every committed version minus the
+    * ids retracted at `root` ([[retract]]). Every family's public reader
+    * is this one body.
+    */
+  private def readLive(spark: SparkSession, root: String, dataRoot: String,
+      upTo: Option[Long]): DataFrame =
+    applyTombstones(spark, root, VersionedTable.readAllVersions(spark, dataRoot, upTo))
+
   private def applyTombstones(spark: SparkSession, root: String,
       df: DataFrame, idCol: String = "id"): DataFrame = {
     val tr = tombstonesRoot(root)
@@ -2903,16 +2943,14 @@ object IncrementalIndex {
   /** All (id, tk, w) weight rows ingested so far, minus retracted ids. */
   def readTfidfWeights(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, weightsRoot(root), upTo))
+    readLive(spark, root, weightsRoot(root), upTo)
 
   /** All (id, nrm2) norm rows ingested so far (one per indexed doc),
     * minus retracted ids.
     */
   def readTfidfNorms(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, normsRoot(root), upTo))
+    readLive(spark, root, normsRoot(root), upTo)
 
   /** Sparse cosine scores from the PERSISTED weight log: pairs (ia, ib,
     * dot, cos) with ia < ib, `ia` drawn from the probe rows selected by

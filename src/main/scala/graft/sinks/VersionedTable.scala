@@ -254,11 +254,14 @@ object VersionedTable {
     * pinning `upTo` time-travels the log to a batch boundary. The
     * snapshot convention ([[read]]) and this one are the two ends of the
     * same commit protocol — the writer picks which contract a root uses.
+    * The schema comes from one footer read on the driver
+    * ([[storedSchema]]), so planning the read launches no Spark job.
     */
   def readAllVersions(spark: SparkSession, root: String,
       upTo: Option[Long] = None): DataFrame = {
     val rootPath = new Path(root)
-    val entries = entriesOf(fs(spark, rootPath), rootPath)
+    val f = fs(spark, rootPath)
+    val entries = entriesOf(f, rootPath)
     require(entries.nonEmpty, s"no committed versions at $root")
     val inPin = upTo.map(u => entries.filter(_._1 <= u)).getOrElse(entries)
     require(inPin.nonEmpty,
@@ -268,8 +271,51 @@ object VersionedTable {
     // writer that raced in between the bound and the checkpoint's own
     // commit) still read alongside it
     val cut = inPin.collect { case (_, Some(u)) => u }.maxOption.getOrElse(-1L)
-    val keep = inPin.filter(_._1 > cut)
-    spark.read.parquet(keep.map(e => new Path(rootPath, nameOf(e)).toString): _*)
+    val dirs = inPin.filter(_._1 > cut).map(e => new Path(rootPath, nameOf(e)))
+    storedSchema(spark, f, dirs).fold(spark.read)(spark.read.schema)
+      .parquet(dirs.map(_.toString): _*)
+  }
+
+  /** The schema Spark's parquet inference would return for `dirs`, read
+    * on the driver. Inference (merging off) takes the Spark schema stored
+    * in the footer of ONE file — the first data file by path — but reads
+    * that footer inside a Spark job; here the same footer is read
+    * directly. None wherever inference would look elsewhere (schema
+    * merging on, a summary file, a nested directory, no data file) or
+    * the footer holds no Spark schema: the caller then lets Spark infer.
+    * The listing mirrors the file index's: names starting `_` or `.`
+    * are hidden except the `_metadata`/`_common_metadata` summaries.
+    */
+  private def storedSchema(spark: SparkSession,
+      f: org.apache.hadoop.fs.FileSystem,
+      dirs: Seq[Path]): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.ParquetReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    import org.apache.spark.sql.types.{DataType, StructType}
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) return None
+    val listed = dirs.flatMap(d => f.listStatus(d).toSeq).filter { st =>
+      val n = st.getPath.getName
+      n.startsWith("_metadata") || n.startsWith("_common_metadata") ||
+        !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_"))
+    }
+    val summaries = Set("_metadata", "_common_metadata")
+    if (listed.exists(st => st.isDirectory || summaries(st.getPath.getName)))
+      return None
+    listed.sortBy(_.getPath.toString).headOption.flatMap { first =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(
+          first, spark.sparkContext.hadoopConfiguration),
+        ParquetReadOptions.builder()
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+      val stored = try Option(reader.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      finally reader.close()
+      stored.flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
+        .collect { case st: StructType => st }
+    }
   }
 
   /** Drop all but the newest `keep` versions; returns the dropped ones.

@@ -227,14 +227,18 @@ class EpochMergeSpec extends SparkSpec {
     val srpP = SrpParams(dim = 64, bitsPerTable = 8, bucketCap = 256)
     val evA = tmpDir("eme_a"); val evB = tmpDir("eme_b")
     val evPairs = tmpDir("eme_pairs")
+    // a twin (vec_id + 100000) lands in the other shard than its source,
+    // so the pairs leg the replay must not repeat is not empty
+    val shard = pmod(col("vec_id") % 100000 + floor(col("vec_id") / 100000), lit(2))
     IncrementalIndex.ingestEmbeddings(spark, evA,
-      vecs.filter(col("vec_id") % 2 === 0), "vec_id", "v", srpP)
+      vecs.filter(shard === 0), "vec_id", "v", srpP)
       ._2.unpersist(blocking = false)
     IncrementalIndex.ingestEmbeddings(spark, evB,
-      vecs.filter(col("vec_id") % 2 === 1), "vec_id", "v", srpP)
+      vecs.filter(shard === 1), "vec_id", "v", srpP)
       ._2.unpersist(blocking = false)
     val Some((_, evCross)) = IncrementalIndex.mergeSrpIndexesEpoch(
       spark, evA, evPairs, evB, 1L, srpP)
+    assert(pairSet(evCross).nonEmpty, "twins straddle the shards: cross pairs exist")
     val evVs = VersionedTable.versions(spark, evA)
     val evRows = IncrementalIndex.readSrpIndex(spark, evA).count()
     assert(IncrementalIndex.mergeSrpIndexesEpoch(

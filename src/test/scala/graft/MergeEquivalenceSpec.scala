@@ -238,14 +238,23 @@ class MergeEquivalenceSpec extends SparkSpec {
   test("donor count: one donor's candidate plan never joins the donor with itself") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val index = Seq((1L, 1L, 0, 7L), (2L, 2L, 0, 8L)).toDF("doc", "rk", "band", "bucket")
+    // cached, so every scan of the batch shows as one InMemoryRelation
     val batch = Seq((3L, 3L, 0, 7L, 1), (4L, 4L, 0, 7L, 2))
-      .toDF("doc", "rk", "band", "bucket", "sh")
-    def joins(donors: Int): Int = IncrementalIndex.incrementalBucketCandidates(
+      .toDF("doc", "rk", "band", "bucket", "sh").persist()
+    def plan(donors: Int) = IncrementalIndex.incrementalBucketCandidates(
       index, batch, bucketCap = 4, over = None, batchRows = 2L, donors = donors)
-      .queryExecution.optimizedPlan.collect { case j: Join => j }.size
-    assert(joins(0) == 2, "an ingest joins batch×index and batch×batch")
-    assert(joins(1) == 1, "one donor: index×donor only, no donor self-join")
-    assert(joins(2) == 2, "two or more donors: the cross-shard donor join returns")
+      .queryExecution.optimizedPlan
+    def joins(donors: Int): Int = plan(donors).collect { case j: Join => j }.size
+    def batchScans(donors: Int): Int =
+      plan(donors).collect { case r: InMemoryRelation => r }.size
+    // one join at every donor count: the batch's broadcast rows probe the
+    // index rows and, unless there is exactly one donor, the batch rows
+    assert((0 to 2).forall(joins(_) == 1), (0 to 2).map(joins))
+    assert(batchScans(0) == 2, "an ingest probes batch×index and batch×batch")
+    assert(batchScans(1) == 1, "one donor: index×donor only, no donor self-join")
+    assert(batchScans(2) == 2, "two or more donors: the cross-shard donor probe returns")
+    batch.unpersist()
   }
 }

@@ -479,4 +479,32 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("v00000001"), p)
     assert(!p.contains("v00000002"), p)
   }
+
+  test("incremental candidates: the batch side broadcasts once per plan") {
+    // An ingest's candidates pair the batch with the index AND with
+    // itself. Two joins over one cached batch would build its broadcast
+    // twice under AQE: each cache scan is its own query stage, and two
+    // stages never canonicalize equal, so the exchange is not reused.
+    // One join whose probe side is index ∪ batch broadcasts it once.
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val index = Seq((1L, 1L, 0, 7L), (2L, 2L, 0, 8L)).toDF("doc", "rk", "band", "bucket")
+    val batch = Seq((3L, 3L, 0, 7L), (4L, 4L, 0, 7L))
+      .toDF("doc", "rk", "band", "bucket").persist()
+    def cands() = graft.operators.IncrementalIndex.incrementalBucketCandidates(
+      index, batch, bucketCap = 4, over = None, batchRows = 2L)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = cands().queryExecution.executedPlan
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.size == 1, plan.toString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val adaptive = cands()
+    assert(adaptive.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 3L), (1L, 4L), (3L, 4L)))
+    // the final adaptive plan: one broadcast stage, no reused twin
+    val fin = adaptive.queryExecution.executedPlan.toString.split("Initial Plan").head
+    assert(fin.split("BroadcastQueryStage").length == 2, fin)
+    batch.unpersist()
+  }
 }
