@@ -52,6 +52,17 @@ object Dedup {
       ColumnBridge.expression(col(textCol)), shingleN))
   }
 
+  /** The `bands` LSH band keys (array<bigint>) of the `sig` column's
+    * MinHash signatures, `numHashes / bands` rows per band: the values
+    * of `xxhash64` over each band's `element_at` columns, computed in one
+    * loop ([[graft.functions.MinHashBands]]).
+    */
+  def minHashBands(numHashes: Int, bands: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.MinHashBands(
+      ColumnBridge.expression(col("sig")), bands, numHashes / bands))
+  }
+
   /** (id, shingle-hash) rows: one per (doc, distinct shingle). The
     * aggregation base of both signature kinds.
     */
@@ -108,12 +119,10 @@ object Dedup {
     val r = numHashes / bands
     require(r * bands == numHashes, s"bands=$bands must divide numHashes=$numHashes")
     require(bucketCap > 0, s"bucketCap must be positive, got $bucketCap")
-    val bandHashes = (0 until bands).map { j =>
-      xxhash64((j * r until (j + 1) * r).map(i => element_at(col("sig"), i + 1)): _*)
-    }
+    val bandHashes = minHashBands(numHashes, bands)
     if (bucketCap == Int.MaxValue) {
       // uncapped fast path: no windows, single equi-join on (band, bucket)
-      val banded = sigs.select(col(idCol).as("doc"), posexplode(array(bandHashes: _*)))
+      val banded = sigs.select(col(idCol).as("doc"), posexplode(bandHashes))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       banded.as("l").join(banded.as("r"),
           col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
@@ -140,7 +149,7 @@ object Dedup {
       // still pass a persisted `sigs` frame (minHashLsh does) so the
       // signature kernel runs once into the exchange.
       val banded = sigs
-        .select(col(idCol).as("doc"), rankBy.as("rk"), posexplode(array(bandHashes: _*)))
+        .select(col(idCol).as("doc"), rankBy.as("rk"), posexplode(bandHashes))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
         .repartition(col("band"), col("bucket"))
         // materialize the exchange ONCE: the consumers prune different
@@ -187,21 +196,12 @@ object Dedup {
     * and each pair's two arrays re-pair through a pair-bounded aggregate
     * — the wide arrays never ride a hash shuffle keyed by id, and the
     * corpus/index frame is scanned exactly once.
-    *
-    * `broadcastSides` is the caller's verdict that the exploded side list
-    * (2 rows per candidate pair — pair-count-sized, not batch-sized) fits
-    * the driver's broadcast budget. The incremental indexes take it from
-    * the candidate bound their stats pass computes anyway, so no action
-    * runs on `candidates` before this one: verification executes
-    * candidate generation inside its own plan. False drops the hint for
-    * a plain id shuffle join — same rows, one exchange over the scan.
     */
   def verifyJaccard(
       candidates: DataFrame, shingled: DataFrame, idCol: String,
-      shCol: String, minJaccard: Double,
-      broadcastSides: Boolean = true): DataFrame =
+      shCol: String, minJaccard: Double): DataFrame =
     persisted(jaccardPairs(candidates, shingled, idCol, shCol, minJaccard,
-      broadcastSides))
+      broadcastSides = true))
 
   /** Persist `df` and materialize it with one action; the caller
     * unpersists.
@@ -213,7 +213,14 @@ object Dedup {
   }
 
   /** [[verifyJaccard]]'s pairs, unmaterialized — the incremental indexes
-    * materialize them themselves (`IncrementalIndex.materializePairs`).
+    * materialize them themselves (`IncrementalIndex.gatedPairs`).
+    *
+    * `broadcastSides` is the caller's verdict that the exploded side list
+    * (2 rows per candidate pair — pair-count-sized, not batch-sized) fits
+    * the driver's broadcast budget; the incremental indexes take it from
+    * their stats pass (`IncrementalIndex.StatsPass`). False drops the
+    * hint for a plain id shuffle join — same rows, one exchange over the
+    * scan.
     */
   private[operators] def jaccardPairs(
       candidates: DataFrame, shingled: DataFrame, idCol: String,
@@ -484,8 +491,7 @@ object Dedup {
     */
   private[operators] def verifyCosine(
       cands: DataFrame, vecs: DataFrame, threshold: Double,
-      pairDense: Boolean = false,
-      broadcastSides: Boolean = true): DataFrame = {
+      pairDense: Boolean = false): DataFrame = {
     // When `vecs` carries an `inBatch` tag (the SemDeDup ingest does),
     // the verified pairs carry the b side's tag through as `bInBatch`:
     // the caller's batch-membership bookkeeping (dropped ids, the
@@ -521,7 +527,7 @@ object Dedup {
         out.count() // materialize before the pruned cache is released
         out
       } finally pruned.unpersist(blocking = false)
-    } else persisted(cosinePairs(cands, vecs, threshold, broadcastSides))
+    } else persisted(cosinePairs(cands, vecs, threshold, broadcastSides = true))
   }
 
   /** [[verifyCosine]]'s SPARSE path, unmaterialized (the incremental SRP

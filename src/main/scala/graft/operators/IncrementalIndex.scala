@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   *    and the index's stream through a map-side hash probe; only over-cap
   *    mega-bucket rows shuffle, O(n·cap)-bounded) and touches the stored
   *    sets of candidate-pair members only (the verifyJaccard discipline,
-  *    its side broadcast gated on the stats pass's bound).
+  *    its side broadcast gated on the stats pass's bound, with an
+  *    exact candidate count only where the bound is over the limit).
   *
   * Reading a log launches no job ([[VersionedTable.readAllVersions]]
   * reads its schema on the driver). The only index-proportional term
@@ -247,33 +248,48 @@ object IncrementalIndex {
     *  - `batchRows`: the batch's banded row total, the batch-side
     *    broadcast gate;
     *  - `candidateBound`: an upper bound on the distinct candidate pairs,
-    *    the verify-side broadcast gate ([[broadcastSides]]).
+    *    the cheap half of the verify-side broadcast gate ([[gatedPairs]]).
     */
   private[graft] final case class StatsPass(over: Option[DataFrame], batchRows: Long,
-      candidateBound: Long) {
-    /** The exploded pair sides (2 rows per candidate) fit the broadcast
-      * budget. The side list is pair-count-sized, not batch-sized: gated
-      * on batch rows, the r14 100× real-mode rehearsal collected a
-      * multi-GB side broadcast from a sub-gate 667k-row batch whose
-      * 16-bit SimHash bands collide quadratically with corpus growth.
-      * The bound is never below the distinct candidate count, so this
-      * never broadcasts what an exact count would refuse.
-      */
-    def broadcastSides(broadcastRowLimit: Long): Boolean =
-      2L * candidateBound <= broadcastRowLimit
-  }
+      candidateBound: Long)
 
-  /** Materializes a verified pair frame before the batch caches it reads
-    * are released. `small` — the stats pass's sides-broadcast verdict,
-    * under which the pair list is no longer than the side list that
-    * already went through the driver — collects it into a local
+  /** Verified pairs, materialized before the batch caches they read are
+    * released. `verify` builds the pair frame from the candidates and the
+    * side-broadcast verdict: the exploded pair sides (2 rows per
+    * candidate) broadcast only when they fit `broadcastRowLimit`. The
+    * side list is pair-count-sized, not batch-sized: gated on batch rows,
+    * the r14 100× real-mode rehearsal collected a multi-GB side broadcast
+    * from a sub-gate 667k-row batch whose 16-bit SimHash bands collide
+    * quadratically with corpus growth.
+    *
+    *  - When twice the stats pass's bound fits, the answer is yes with no
+    *    action on the candidates: verify runs candidate generation inside
+    *    its own plan.
+    *  - Otherwise the exact count decides. The bound counts a pair once
+    *    per band it collides in, so it can overshoot the distinct count
+    *    by up to the band count; the candidates are persisted, counted,
+    *    and verify reads that cache.
+    *
+    * Under a yes the pair list — no longer than the side list that
+    * already went through the driver — is collected into a local
     * relation, so the caller's own collect or write runs no job on it;
     * otherwise it is persisted (the caller may unpersist it).
     */
-  private def materializePairs(spark: SparkSession, pairs: DataFrame,
-      small: Boolean): DataFrame =
-    if (small) spark.createDataFrame(java.util.Arrays.asList(pairs.collect(): _*), pairs.schema)
-    else Dedup.persisted(pairs)
+  private[graft] def gatedPairs(spark: SparkSession, cands: DataFrame,
+      stats: StatsPass, broadcastRowLimit: Long)(
+      verify: (DataFrame, Boolean) => DataFrame): DataFrame = {
+    def collected(pairs: DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(pairs.collect(): _*), pairs.schema)
+    if (2L * stats.candidateBound <= broadcastRowLimit) collected(verify(cands, true))
+    else {
+      val counted = cands.persist()
+      try {
+        val fits = 2L * counted.count() <= broadcastRowLimit
+        val pairs = verify(counted, fits)
+        if (fits) collected(pairs) else Dedup.persisted(pairs)
+      } finally counted.unpersist(blocking = false)
+    }
+  }
 
   /** The stats pass: the over-cap list, the batch's banded row total and
     * the candidate bound (see [[StatsPass]]), from one small action and
@@ -381,12 +397,8 @@ object IncrementalIndex {
     * longs per row beats persisting an exploded 32×-row banded table).
     */
   private[graft] def bandedOf(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val r = numHashes / bands
-    val bandHashes = (0 until bands).map { j =>
-      xxhash64((j * r until (j + 1) * r).map(i => element_at(col("sig"), i + 1)): _*)
-    }
     sigs.select(col("id").as("doc"), col("sz").as("rk"),
-      posexplode(array(bandHashes: _*)).as(Seq("band", "bucket")))
+      posexplode(Dedup.minHashBands(numHashes, bands)).as(Seq("band", "bucket")))
   }
 
   /** Stored signature rows for a batch: (id, sz, sig, hs) — `sz` is the
@@ -474,9 +486,8 @@ object IncrementalIndex {
         case None => batchSigs.select("id", "hs")
       }
       // materialized while the caches are hot
-      val small = stats.broadcastSides(p.broadcastRowLimit)
-      val verified = materializePairs(spark, Dedup.jaccardPairs(cands, shingled,
-        "id", "hs", p.threshold, small), small)
+      val verified = gatedPairs(spark, cands, stats, p.broadcastRowLimit)(
+        Dedup.jaccardPairs(_, shingled, "id", "hs", p.threshold, _))
       MinHashArtifacts(batchSigs, batchStats, verified, () => {
         batchStats.unpersist(blocking = false)
         bandedB.unpersist(blocking = false)
@@ -743,9 +754,9 @@ object IncrementalIndex {
       val cands = incrementalBucketCandidates(f.banded(index), bandedD,
         f.bucketCap, stats.over, stats.batchRows, f.broadcastRowLimit,
         donors = donorRoots.size)
-      val small = stats.broadcastSides(f.broadcastRowLimit)
-      val verified = materializePairs(spark,
-        f.verify(cands, (index +: donors).reduce(_.unionAll(_)), small), small)
+      val rows = (index +: donors).reduce(_.unionAll(_))
+      val verified = gatedPairs(spark, cands, stats, f.broadcastRowLimit)(
+        f.verify(_, rows, _))
       Some((adoptDonors(spark, root, donorRoots, identity,
         Some(subRoot(_, "bucketstats")), epoch, verified), verified))
     } finally {
@@ -1317,10 +1328,9 @@ object IncrementalIndex {
       val cands = incrementalBucketCandidates(
         prior.map(bandedOfSimHash).getOrElse(bandedB.filter(lit(false))),
         bandedB, bucketCap, stats.over, stats.batchRows, broadcastRowLimit)
-      val small = stats.broadcastSides(broadcastRowLimit)
-      val verified = materializePairs(spark, hammingPairs(cands,
-        prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs), maxHamming, small),
-        small)
+      val sigRows = prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs)
+      val verified = gatedPairs(spark, cands, stats, broadcastRowLimit)(
+        hammingPairs(_, sigRows, maxHamming, _))
       SimHashArtifacts(batchSigs, batchStats, verified, () => {
         batchStats.unpersist(blocking = false)
         bandedB.unpersist(blocking = false)
@@ -1337,8 +1347,8 @@ object IncrementalIndex {
     * exploded pair sides broadcast into ONE scan of the signature log
     * (the per-side prune form scanned it once per broadcast subtree),
     * signatures re-pair in a candidate-bounded aggregate.
-    * `broadcastSides` is the stats pass's verdict (see verifyJaccard's
-    * broadcastSides): without it the exploded sides take a plain id
+    * `broadcastSides` is the side-broadcast verdict ([[gatedPairs]]):
+    * without it the exploded sides take a plain id
     * shuffle join — the r14 100× SimHash shard bootstrap died building
     * this broadcast (>1 GiB of serialized results vs the 1 GiB driver
     * default).
@@ -1692,26 +1702,26 @@ object IncrementalIndex {
         // sorted-element arrays re-pair through a pair-bounded
         // aggregate; prefix candidates are sparse by construction
         val toks = prior.map(_.unionAll(batchTok)).getOrElse(batchTok)
-        // the stats pass's verdict (see verifyJaccard's broadcastSides)
-        val small = stats.broadcastSides(p.broadcastRowLimit)
-        val sidesHint: DataFrame => DataFrame =
-          if (small) df => broadcast(df) else identity
-        val pairs = toks.select(col("id"), col("toks"), col("n"))
-          .join(sidesHint(Dedup.pairSides(cands)), "id")
-          .groupBy("a", "b")
-          .agg(
-            first(when(col("isA"), col("toks")), ignoreNulls = true).as("ta"),
-            first(when(col("isA"), col("n")), ignoreNulls = true).as("na"),
-            first(when(!col("isA"), col("toks")), ignoreNulls = true).as("tb"),
-            first(when(!col("isA"), col("n")), ignoreNulls = true).as("nb"))
-          .filter(col("ta").isNotNull && col("tb").isNotNull)
-          .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
-          .withColumn("un", col("na") + col("nb") - col("inter"))
-          .filter(lit(p.den) * col("inter") >= lit(p.num) * col("un"))
-          .select(col("a").as("ia"), col("b").as("ib"),
-            col("inter").cast("long").as("inter"), col("un").cast("long").as("un"))
         // materialized while the caches are hot
-        val verified = materializePairs(spark, pairs, small)
+        val verified = gatedPairs(spark, cands, stats, p.broadcastRowLimit) {
+          (c, broadcastSides) =>
+          val sidesHint: DataFrame => DataFrame =
+            if (broadcastSides) df => broadcast(df) else identity
+          toks.select(col("id"), col("toks"), col("n"))
+            .join(sidesHint(Dedup.pairSides(c)), "id")
+            .groupBy("a", "b")
+            .agg(
+              first(when(col("isA"), col("toks")), ignoreNulls = true).as("ta"),
+              first(when(col("isA"), col("n")), ignoreNulls = true).as("na"),
+              first(when(!col("isA"), col("toks")), ignoreNulls = true).as("tb"),
+              first(when(!col("isA"), col("n")), ignoreNulls = true).as("nb"))
+            .filter(col("ta").isNotNull && col("tb").isNotNull)
+            .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
+            .withColumn("un", col("na") + col("nb") - col("inter"))
+            .filter(lit(p.den) * col("inter") >= lit(p.num) * col("un"))
+            .select(col("a").as("ia"), col("b").as("ib"),
+              col("inter").cast("long").as("inter"), col("un").cast("long").as("un"))
+        }
         PrefixArtifacts(batchTok.sortWithinPartitions("id"), batchStats,
           verified, () => {
             batchStats.unpersist(blocking = false)
@@ -1981,9 +1991,8 @@ object IncrementalIndex {
           .unionAll(batchSigs.select("id", "v"))
         case None => batchSigs.select("id", "v")
       }
-      val small = stats.broadcastSides(p.broadcastRowLimit)
-      val verified = materializePairs(spark,
-        Dedup.cosinePairs(cands, vecs, p.threshold, small), small)
+      val verified = gatedPairs(spark, cands, stats, p.broadcastRowLimit)(
+        Dedup.cosinePairs(_, vecs, p.threshold, _))
       SrpArtifacts(batchSigs, batchStats, verified, () => {
         batchStats.unpersist(blocking = false)
         bandedB.unpersist(blocking = false)
@@ -2635,11 +2644,6 @@ object IncrementalIndex {
     VersionedTable.write(spark,
       ids.select(col(idCol).as("id")).distinct(), tombstonesRoot(root))
 
-  /** Anti-join `df` against the index's tombstone log (no-op while no
-    * retraction has ever been committed). The tombstone side is tiny by
-    * construction (retractions are rare events, and [[purgeDedupIndex]]
-    * resets the log) — AQE plans the anti-join as a broadcast.
-    */
   /** The live rows of the delta log `dataRoot` under the index `root`
     * (optionally up to a version pin): every committed version minus the
     * ids retracted at `root` ([[retract]]). Every family's public reader
@@ -2649,6 +2653,11 @@ object IncrementalIndex {
       upTo: Option[Long]): DataFrame =
     applyTombstones(spark, root, VersionedTable.readAllVersions(spark, dataRoot, upTo))
 
+  /** Anti-join `df` against the index's tombstone log (no-op while no
+    * retraction has ever been committed). The tombstone side is tiny by
+    * construction (retractions are rare events, and [[purgeDedupIndex]]
+    * resets the log) — AQE plans the anti-join as a broadcast.
+    */
   private def applyTombstones(spark: SparkSession, root: String,
       df: DataFrame, idCol: String = "id"): DataFrame = {
     val tr = tombstonesRoot(root)

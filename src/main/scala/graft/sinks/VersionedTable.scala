@@ -277,14 +277,14 @@ object VersionedTable {
   }
 
   /** The schema Spark's parquet inference would return for `dirs`, read
-    * on the driver. Inference (merging off) takes the Spark schema stored
-    * in the footer of ONE file — the first data file by path — but reads
-    * that footer inside a Spark job; here the same footer is read
-    * directly. None wherever inference would look elsewhere (schema
-    * merging on, a summary file, a nested directory, no data file) or
-    * the footer holds no Spark schema: the caller then lets Spark infer.
-    * The listing mirrors the file index's: names starting `_` or `.`
-    * are hidden except the `_metadata`/`_common_metadata` summaries.
+    * on the driver. Inference (schema merging off, no summary files —
+    * this table's writers leave none) takes the Spark schema stored in
+    * the footer of the first data file by path, but reads that footer
+    * inside a Spark job. Version names are fixed-width, so that file is
+    * the first visible file of the first version directory holding one;
+    * its footer is read here directly. None when merging is on, no data
+    * file exists or the footer holds no Spark schema: the caller then
+    * lets Spark infer.
     */
   private def storedSchema(spark: SparkSession,
       f: org.apache.hadoop.fs.FileSystem,
@@ -296,16 +296,11 @@ object VersionedTable {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
     import org.apache.spark.sql.types.{DataType, StructType}
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled) return None
-    val listed = dirs.flatMap(d => f.listStatus(d).toSeq).filter { st =>
-      val n = st.getPath.getName
-      n.startsWith("_metadata") || n.startsWith("_common_metadata") ||
-        !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-          n.endsWith("._COPYING_"))
-    }
-    val summaries = Set("_metadata", "_common_metadata")
-    if (listed.exists(st => st.isDirectory || summaries(st.getPath.getName)))
-      return None
-    listed.sortBy(_.getPath.toString).headOption.flatMap { first =>
+    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
+    val firstFile = dirs.iterator.flatMap(d => f.listStatus(d)
+      .filter(st => st.isFile && visible(st.getPath.getName))
+      .sortBy(_.getPath.getName).headOption).nextOption()
+    firstFile.flatMap { first =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(
           first, spark.sparkContext.hadoopConfiguration),
         ParquetReadOptions.builder()

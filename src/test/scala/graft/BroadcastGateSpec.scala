@@ -12,9 +12,12 @@ import graft.operators.IncrementalIndex.DefaultBroadcastRowLimit
   * over cap 4:
   *
   *  - the candidate bound is never below the distinct candidate count;
-  *  - a `broadcastRowLimit` of exactly the batch's banded rows keeps the
-  *    batch-side broadcast but refuses the side broadcast (the bound is
-  *    over half of it), and the pairs equal the all-broadcast run's;
+  *  - the side broadcast is decided by the bound when twice the bound
+  *    fits the limit, and by the exact candidate count otherwise: a
+  *    limit of exactly the batch's banded rows keeps the batch-side
+  *    broadcast with the bound over half of it, a limit of twice the
+  *    distinct count still broadcasts the sides, one row less does not,
+  *    and the pairs at every such limit equal the all-broadcast run's;
   *  - an over-cap bucket the batch does not touch drops out of the
   *    over-cap list, so the candidate plan has no rank-chunk branch, and
   *    the pairs equal an uncapped run's.
@@ -160,7 +163,7 @@ class BroadcastGateSpec extends SparkSpec {
         val n = 1 + math.max(donors, 1)
         val parts = (0 until n).map(k => f.rows().filter(part(n) === k))
         val root = rooted(f, s"${donors}_a", parts(0))
-        val twin = rooted(f, s"${donors}_b", parts(0))
+        val twins = Seq("b", "c", "d").map(t => rooted(f, s"${donors}_$t", parts(0)))
         val donorRoots =
           if (donors == 0) Nil else parts.tail.map(rooted(f, s"${donors}_d", _))
         val bandedB =
@@ -174,15 +177,26 @@ class BroadcastGateSpec extends SparkSpec {
         assert(distinct > 0 && s.candidateBound >= distinct,
           s"$at: bound ${s.candidateBound} < $distinct distinct candidates")
         assert(s.batchRows == bandedB.count(), at)
-        // batch broadcast on, side broadcast off
-        val limit = s.batchRows
-        assert(2 * s.candidateBound > limit, s"$at: bound ${s.candidateBound}, rows $limit")
-        assert(s.broadcastSides(DefaultBroadcastRowLimit) && !s.broadcastSides(limit), at)
+        // the side-broadcast verdict gatedPairs hands verify at `limit`
+        def sides(limit: Long) = {
+          var seen = Option.empty[Boolean]
+          IncrementalIndex.gatedPairs(spark, cands, s, limit) { (c, b) => seen = Some(b); c }
+          seen.get
+        }
+        // the batch side broadcasts at `batchRows`, where the bound misses
+        // and the exact count decides; twice the distinct count is under
+        // twice the bound and still broadcasts the sides
+        assert(2 * s.candidateBound > s.batchRows, s"$at: bound ${s.candidateBound}")
+        assert(2 * s.candidateBound > 2 * distinct, at)
+        assert(sides(DefaultBroadcastRowLimit), at)
+        assert(sides(s.batchRows) == (2 * distinct <= s.batchRows), at)
+        assert(sides(2 * distinct) && !sides(2 * distinct - 1), at)
         def run(r: String, l: Long) =
           pairSet(f, if (donors == 0) f.ingest(r, parts(1), l) else f.merge(r, donorRoots, l))
         val viaBroadcast = run(root, DefaultBroadcastRowLimit)
         assert(viaBroadcast.nonEmpty, at)
-        assert(run(twin, limit) == viaBroadcast, s"$at: gated pairs differ")
+        for ((r, l) <- twins.zip(Seq(s.batchRows, 2 * distinct, 2 * distinct - 1)))
+          assert(run(r, l) == viaBroadcast, s"$at: pairs at limit $l differ")
       }
     }
 

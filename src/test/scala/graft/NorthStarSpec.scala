@@ -278,6 +278,27 @@ class NorthStarSpec extends SparkSpec {
     assert(viaExpr == viaAgg)
   }
 
+  test("MinHashBands equals xxhash64 over each band's element_at columns") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val docs = spark.read.parquet(sf("documents")).limit(50)
+    val sigs = docs.select(col("doc_id"), ColumnBridge.column(
+      graft.functions.MinHashSignature(
+        ColumnBridge.expression(Dedup.shingleHashes(docs, "text", 3)), 128, 42L)).as("sig"))
+    // a null element is skipped by both forms
+    val withEdges = sigs.unionAll(sigs.limit(1).select(lit(-1L),
+      transform(col("sig"), (x, i) => when(i =!= 5, x))))
+    for ((numHashes, bands) <- Seq((128, 32), (128, 16))) {
+      val r = numHashes / bands
+      val viaColumns = array((0 until bands).map { j =>
+        xxhash64((j * r until (j + 1) * r).map(i => element_at(col("sig"), i + 1)): _*)
+      }: _*)
+      val both = withEdges.select(Dedup.minHashBands(numHashes, bands).as("x"),
+        viaColumns.as("y")).collect()
+      assert(both.length == 51)
+      both.foreach(row => assert(row.getSeq[Long](0) == row.getSeq[Long](1)))
+    }
+  }
+
   test("row-local SimHashSignature equals the SimHashAggregate formulation") {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val docs = spark.read.parquet(sf("documents")).limit(50)
