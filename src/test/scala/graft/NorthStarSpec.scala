@@ -284,9 +284,10 @@ class NorthStarSpec extends SparkSpec {
     val sigs = docs.select(col("doc_id"), ColumnBridge.column(
       graft.functions.MinHashSignature(
         ColumnBridge.expression(Dedup.shingleHashes(docs, "text", 3)), 128, 42L)).as("sig"))
-    // a null element is skipped by both forms
+    // a null element, and a null signature, are skipped by both forms
     val withEdges = sigs.unionAll(sigs.limit(1).select(lit(-1L),
       transform(col("sig"), (x, i) => when(i =!= 5, x))))
+      .unionAll(sigs.limit(1).select(lit(-2L), lit(null).cast(sigs.schema("sig").dataType)))
     for ((numHashes, bands) <- Seq((128, 32), (128, 16))) {
       val r = numHashes / bands
       val viaColumns = array((0 until bands).map { j =>
@@ -294,7 +295,7 @@ class NorthStarSpec extends SparkSpec {
       }: _*)
       val both = withEdges.select(Dedup.minHashBands(numHashes, bands).as("x"),
         viaColumns.as("y")).collect()
-      assert(both.length == 51)
+      assert(both.length == 52)
       both.foreach(row => assert(row.getSeq[Long](0) == row.getSeq[Long](1)))
     }
   }
