@@ -218,7 +218,7 @@ object Dedup {
     * `broadcastSides` is the caller's verdict that the exploded side list
     * (2 rows per candidate pair — pair-count-sized, not batch-sized) fits
     * the driver's broadcast budget; the incremental indexes take it from
-    * their stats pass (`IncrementalIndex.StatsPass`). False drops the
+    * `IncrementalIndex.gatedPairs`. False drops the
     * hint for a plain id shuffle join — same rows, one exchange over the
     * scan.
     */
@@ -533,7 +533,7 @@ object Dedup {
   /** [[verifyCosine]]'s SPARSE path, unmaterialized (the incremental SRP
     * index materializes it itself): the verifyJaccard exploded shape —
     * one scan, pair-bounded re-pair shuffle. broadcastSides=false = the
-    * caller's broadcast-gate verdict (see verifyJaccard): the sides take
+    * caller's broadcast-gate verdict (see jaccardPairs): the sides take
     * a plain id shuffle join instead of a driver-budget-sized broadcast
     * build. A `vecs` `inBatch` tag carries through as `bInBatch`.
     */
